@@ -1,5 +1,6 @@
 package graft
 
+import java.io.{BufferedOutputStream, FileDescriptor, FileOutputStream, InputStreamReader, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
@@ -16,9 +17,12 @@ import graft.sources.SourceRegistry
   * the cross-format `diff` acceptance check holds), exit 1 on any
   * failure, and a DEBUG-gated stderr logger.
   *
-  * Spark sources are path-based, so stdin is spooled to a temp file
-  * (transcoded latin1 → UTF-8, see SURVEY.md §7.4 R1) before the
-  * job runs.
+  * Spark sources are path-based, so stdin is streamed into a temp
+  * file (transcoded latin1 → UTF-8, see SURVEY.md §7.4 R1) before the
+  * job runs. The sink writes to a buffered stream on fd 1 only after
+  * its job has succeeded, so a failed conversion prints nothing on
+  * stdout. One conversion's output still passes through a single
+  * collect, bounded by `spark.driver.maxResultSize`.
   */
 object Cli {
 
@@ -127,14 +131,15 @@ object Cli {
       delimiter)
   }
 
-  /** The data plane: scan → normalize (executors) → render (driver),
-    * resolved through the registries (mirrors the reference's
-    * createParser/createRenderer factories). */
-  def convert(spark: SparkSession, args: Args, inputPath: String, inputIsUtf8: Boolean): String = {
+  /** The data plane: one Spark job scans, normalizes and renders on
+    * the executors; the driver writes the framed document to `out`
+    * once the job has succeeded. Resolved through the registries
+    * (mirrors the reference's createParser/createRenderer factories). */
+  def convert(spark: SparkSession, args: Args, inputPath: String, inputIsUtf8: Boolean, out: OutputStream): Unit = {
     val encoding = if (inputIsUtf8) "UTF-8" else "ISO-8859-1"
     val opts = SourceRegistry.SourceOptions(args.csvDelimiter.getOrElse(","), encoding)
     val df: DataFrame = SourceRegistry(args.inputType)(spark, inputPath, opts)
-    SinkRegistry(args.outputType)(df)
+    SinkRegistry.writer(args.outputType)(df, out)
   }
 
   def main(argv: Array[String]): Unit = {
@@ -151,15 +156,16 @@ object Cli {
       }
 
     debugLog(s"Parsed args: $args")
-    // Spool stdin (latin1 bytes, like the reference's
-    // setEncoding('latin1')) to a UTF-8 temp file for the path-based
+    // Stream stdin (latin1 bytes, like the reference's
+    // setEncoding('latin1')) into a UTF-8 temp file for the path-based
     // Spark sources.
-    val raw = System.in.readAllBytes()
-    val text = new String(raw, StandardCharsets.ISO_8859_1)
     val tmp = Files.createTempFile("graft_stdin_", ".txt")
     tmp.toFile.deleteOnExit()
-    Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
-    debugLog(s"Spooled ${raw.length} bytes of stdin to $tmp")
+    val spool = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
+    val chars =
+      try new InputStreamReader(System.in, StandardCharsets.ISO_8859_1).transferTo(spool)
+      finally spool.close()
+    debugLog(s"Spooled $chars bytes of stdin to $tmp")
 
     val spark = GraftSession
       .builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32)
@@ -169,13 +175,13 @@ object Cli {
 
     try {
       System.err.println(s"Processing ${args.inputType} to ${args.outputType}...")
-      val out = convert(spark, args, tmp.toString, inputIsUtf8 = true)
-      // Write raw UTF-8 bytes: PrintStream would transcode through the
-      // platform console charset (ASCII in a bare container locale)
-      // and mangle non-ASCII — output must be valid UTF-8 regardless
-      // of locale (reference README.md:31-33).
-      System.out.write(out.getBytes(StandardCharsets.UTF_8))
-      System.out.flush()
+      // Raw UTF-8 bytes straight to fd 1: System.out's PrintStream
+      // would transcode through the platform console charset (ASCII in
+      // a bare container locale) and mangle non-ASCII — output must be
+      // valid UTF-8 regardless of locale (reference README.md:31-33).
+      val stdout = new BufferedOutputStream(new FileOutputStream(FileDescriptor.out), 1 << 16)
+      convert(spark, args, tmp.toString, inputIsUtf8 = true, stdout)
+      stdout.flush()
       System.err.println("Processing complete.")
     } catch {
       case e: Throwable =>
@@ -192,7 +198,7 @@ object Cli {
     * parse failures surface as `CSV parsing error: <cause>`. Spark
     * wraps the malformed-record cause in FAILED_READ_FILE layers, so
     * walk the cause chain for the parse-level message. */
-  private def userMessage(inputType: String, e: Throwable): String = {
+  private[graft] def userMessage(inputType: String, e: Throwable): String = {
     val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).toSeq
     val msg = e.getMessage
     if (msg != null && msg.startsWith("CSV parsing error")) msg

@@ -1,5 +1,8 @@
 package graft.sinks
 
+import java.io.OutputStream
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.DataFrame
 
 import graft.Canonical
@@ -9,7 +12,10 @@ import graft.Canonical
   * the same prologue/`<style>`/`<thead>` block, one `<tr>` per row
   * with HTML-escaped cells at the same indentation, a
   * `No data available` row (colspan=6) for empty input, and the same
-  * epilogue. Driver-side for the same reason as [[JsonSink]].
+  * epilogue. Rows render to UTF-8 on the executors and the driver
+  * writes head, parts and tail only once every part has arrived, as
+  * in [[JsonSink]]. A column absent from the frame renders as an
+  * empty cell.
   */
 object HtmlSink {
 
@@ -52,24 +58,23 @@ object HtmlSink {
       |</html>
       |""".stripMargin
 
-  def render(df: DataFrame): String = {
-    val rows = JsonSink.collectOrdered(df)
-    val sb = new StringBuilder
-    sb.append(prologue)
-    Canonical.headers.foreach(h => sb.append(s"        <th>${escapeHtml(h)}</th>\n"))
-    sb.append("      </tr>\n")
-    sb.append("    </thead>\n")
-    sb.append("    <tbody>\n")
-    if (rows.isEmpty) {
-      sb.append(s"""      <tr><td colspan="${Canonical.headers.length}" style="text-align:center;">No data available</td></tr>\n""")
-    } else {
-      rows.foreach { values =>
-        sb.append("      <tr>\n")
-        values.foreach(v => sb.append(s"        <td>${escapeHtml(v.getOrElse(""))}</td>\n"))
-        sb.append("      </tr>\n")
-      }
-    }
-    sb.append(epilogue)
-    sb.toString
+  def write(df: DataFrame, out: OutputStream): Unit = {
+    val parts = SinkRegistry.renderParts(df, "")(renderRow)
+    val head = new StringBuilder(prologue)
+    Canonical.headers.foreach(h => head.append(s"        <th>${escapeHtml(h)}</th>\n"))
+    head.append("      </tr>\n")
+    head.append("    </thead>\n")
+    head.append("    <tbody>\n")
+    if (parts.isEmpty)
+      head.append(s"""      <tr><td colspan="${Canonical.headers.length}" style="text-align:center;">No data available</td></tr>\n""")
+    out.write(head.toString.getBytes(UTF_8))
+    parts.foreach(out.write)
+    out.write(epilogue.getBytes(UTF_8))
   }
+
+  def render(df: DataFrame): String = SinkRegistry.asString(write)(df)
+
+  private def renderRow(values: Seq[Option[String]]): String =
+    values.map(v => s"        <td>${escapeHtml(v.getOrElse(""))}</td>\n")
+      .mkString("      <tr>\n", "", "      </tr>\n")
 }

@@ -1,7 +1,9 @@
 package graft.sinks
 
+import java.io.OutputStream
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 import graft.Canonical
 
@@ -11,39 +13,29 @@ import graft.Canonical
   * objects, empty input → exactly `[]`.
   *
   * Spark's own JSON writer emits JSON-Lines with no array framing, so
-  * this is deliberately a driver-side renderer over `collect()` — the
-  * reference semantics (single ordered text document) are inherently
-  * driver-sided; the distributed work (scan + normalize) has already
-  * happened upstream. Rows render in input order via the carried
-  * order index.
+  * the rows are rendered to UTF-8 on the executors
+  * ([[SinkRegistry.renderParts]]) and the driver only frames the parts:
+  * head, parts joined by the row separator, tail. Nothing is written
+  * until every part has arrived, so a failed job leaves `out` empty.
+  * A column absent from the frame is omitted from every object.
   */
 object JsonSink {
 
-  def render(df: DataFrame): String = {
-    val rows = collectOrdered(df)
-    if (rows.isEmpty) "[]"
-    else rows.map(renderRow).mkString("[\n  ", ",\n  ", "\n]\n")
+  private val Sep = ",\n  "
+
+  def write(df: DataFrame, out: OutputStream): Unit = {
+    val parts = SinkRegistry.renderParts(df, Sep)(renderRow)
+    if (parts.isEmpty) out.write("[]".getBytes(UTF_8))
+    else {
+      val sep = Sep.getBytes(UTF_8)
+      out.write("[\n  ".getBytes(UTF_8))
+      out.write(parts.head)
+      parts.iterator.drop(1).foreach { p => out.write(sep); out.write(p) }
+      out.write("\n]\n".getBytes(UTF_8))
+    }
   }
 
-  /** Rows in input order, aligned to the 6 canonical headers.
-    * `None` = the column is absent from the frame entirely (JSON
-    * omits the key; HTML renders an empty cell, mirroring the two
-    * reference renderers' treatment of missing keys). */
-  private[sinks] def collectOrdered(df: DataFrame): Seq[Seq[Option[String]]] = {
-    val ordered =
-      if (df.columns.contains(Canonical.idxCol)) df.orderBy(col(Canonical.idxCol))
-      else df
-    val cols = Canonical.headers.filter(ordered.columns.contains)
-    ordered.select(cols.map(c => col(s"`$c`").cast("string")): _*)
-      .collect()
-      .toSeq
-      .map { r =>
-        val present = cols.zipWithIndex
-          .map { case (c, i) => c -> Option(r.getString(i)).getOrElse("") }
-          .toMap
-        Canonical.headers.map(present.get)
-      }
-  }
+  def render(df: DataFrame): String = SinkRegistry.asString(write)(df)
 
   private def renderRow(values: Seq[Option[String]]): String =
     Canonical.headers.zip(values)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
+import java.io.InputStreamReader
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
 
@@ -26,14 +26,14 @@ import graft.{Canonical, functions}
 object CsvSource {
 
   /** @param fidelityChecks when true (the CLI path: one local file),
-    *   two driver-side scans run first: an RFC-4180 quote scan that
-    *   rejects unterminated quoted fields with the reference's error
-    *   shape (`csvParser.ts:55-57` — univocity would swallow small
-    *   malformed files silently), and a blank-file check so empty
-    *   input yields the canonical empty frame instead of a schema
-    *   inference error. Both read the file on the driver — set false
-    *   for bulk/distributed paths (directories, globs, remote
-    *   filesystems), where no driver-side I/O happens at all. */
+    *   one driver-side pass over the file runs first: an RFC-4180
+    *   quote scan that rejects unterminated quoted fields with the
+    *   reference's error shape (`csvParser.ts:55-57` — univocity
+    *   would swallow small malformed files silently), and a blank-file
+    *   check so empty input yields the canonical empty frame instead
+    *   of a schema inference error. It reads the file on the driver
+    *   — set false for bulk/distributed paths (directories, globs,
+    *   remote filesystems), where no driver-side I/O happens at all. */
   def read(
       spark: SparkSession,
       path: String,
@@ -41,10 +41,7 @@ object CsvSource {
       encoding: String = "ISO-8859-1",
       fidelityChecks: Boolean = true): DataFrame = {
 
-    if (fidelityChecks) {
-      checkQuotes(path, delimiter, encoding)
-      if (isBlank(path, encoding)) return empty(spark)
-    }
+    if (fidelityChecks && checkQuotesAndBlank(path, encoding)) return empty(spark)
 
     val raw = spark.read
       .option("header", "true")
@@ -55,8 +52,8 @@ object CsvSource {
       .option("mode", "FAILFAST")
       .csv(path)
 
-    // monotonically_increasing_id is increasing within a partition and
-    // across partition ids, so sorting by it restores file order.
+    // monotonically_increasing_id rises within a partition and across
+    // partition ids, which follow the file: the Canonical.idxCol contract.
     functions.Normalize.align(
       raw.withColumn(Canonical.idxCol, monotonically_increasing_id()))
   }
@@ -68,37 +65,41 @@ object CsvSource {
     functions.Normalize.align(df.withColumn(Canonical.idxCol, monotonically_increasing_id()))
   }
 
-  private def isBlank(path: String, encoding: String): Boolean = {
-    val bytes = Files.readAllBytes(Paths.get(path))
-    new String(bytes, Charset.forName(encoding)).trim.isEmpty
-  }
-
-  /** Minimal RFC-4180 state machine over the raw file: flags an
-    * unterminated quoted field at EOF. */
-  private def checkQuotes(path: String, delimiter: String, encoding: String): Unit = {
-    val in = new BufferedReader(new InputStreamReader(
-      Files.newInputStream(Paths.get(path)), Charset.forName(encoding)))
+  /** One buffered pass over the raw file: a minimal RFC-4180 state
+    * machine that flags an unterminated quoted field at EOF, and the
+    * blank test — every char ≤ U+0020, as `String.trim` counts them.
+    * @return whether the file is blank */
+  private def checkQuotesAndBlank(path: String, encoding: String): Boolean = {
+    val in = new InputStreamReader(Files.newInputStream(Paths.get(path)), Charset.forName(encoding))
     try {
+      val buf = new Array[Char](1 << 16)
+      var blank = true
       var inQuotes = false
       var prevQuote = false
-      var ch = in.read()
-      while (ch != -1) {
-        val c = ch.toChar
-        if (inQuotes) {
-          if (prevQuote) {
-            // previous char was a quote inside a quoted field:
-            // "" is an escaped quote, anything else ends the field
-            if (c == '"') { prevQuote = false }
-            else { inQuotes = false; prevQuote = false }
-          } else if (c == '"') prevQuote = true
-        } else if (c == '"') {
-          inQuotes = true
+      var n = in.read(buf)
+      while (n != -1) {
+        var i = 0
+        while (i < n) {
+          val c = buf(i)
+          if (c > ' ') blank = false
+          if (inQuotes) {
+            if (prevQuote) {
+              // previous char was a quote inside a quoted field:
+              // "" is an escaped quote, anything else ends the field
+              if (c == '"') { prevQuote = false }
+              else { inQuotes = false; prevQuote = false }
+            } else if (c == '"') prevQuote = true
+          } else if (c == '"') {
+            inQuotes = true
+          }
+          i += 1
         }
-        ch = in.read()
+        n = in.read(buf)
       }
       if (inQuotes && !prevQuote)
         throw new IllegalArgumentException(
           "CSV parsing error: Quote Not Closed: the parsing of the file ended with an unclosed quoted field")
+      blank
     } finally in.close()
   }
 }

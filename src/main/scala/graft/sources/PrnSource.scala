@@ -3,11 +3,8 @@ package graft.sources
 import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.{Canonical, functions}
 
@@ -23,10 +20,12 @@ import graft.{Canonical, functions}
   * than the header line are truncated, like the reference's
   * `substring(start, min(end, len))` (`:116-139`).
   *
-  * The header read is a driver-side O(1) peek; the data scan is a
-  * distributed `spark.read.text` + one generated `substring`
-  * projection, all inside whole-stage codegen. Line order is captured
-  * with `zipWithIndex` so sinks can render in file order.
+  * The data path is one `spark.read.text` scan numbered by
+  * `monotonically_increasing_id()`, a filter that drops the header by
+  * its id, and one generated `substring` projection, all inside
+  * whole-stage codegen. The header is found by a driver-side peek at
+  * the first line; only when blank lines precede it does a
+  * first-match job look it up, to learn its id.
   *
   * Spark's text source decodes UTF-8 only, so non-UTF-8 input (the
   * reference's latin1) is transcoded driver-side to a temp file first
@@ -76,23 +75,17 @@ object PrnSource {
       warn: String => Unit = System.err.println): DataFrame = {
 
     val utf8Path = ensureUtf8(path, encoding)
-
-    // Driver-side peek: index + text of the first non-blank line.
-    val header = firstNonBlankLine(utf8Path)
-    header match {
+    // Line ids in partition order, which is file order (the
+    // Canonical.idxCol contract): the header and everything before it
+    // are the lines with an id up to the header's.
+    val lines = spark.read.text(utf8Path)
+      .withColumn(Canonical.idxCol, monotonically_increasing_id())
+    findHeader(utf8Path, lines) match {
       case None => CsvSource.empty(spark) // no header anywhere → 0 rows
-      case Some((headerIdx, headerLine)) =>
+      case Some((headerId, headerLine)) =>
         val specs = inferSpecs(headerLine, warn)
-        // Distributed scan with stable line numbering; drop everything
-        // up to and including the header line, and blank lines.
-        val lineSchema = StructType(Seq(
-          StructField("value", StringType), StructField(Canonical.idxCol, LongType)))
-        val lines = spark.createDataFrame(
-          spark.read.textFile(utf8Path).rdd.zipWithIndex()
-            .map { case (l, i) => Row(l, i) },
-          lineSchema)
         val data = lines
-          .filter(col(Canonical.idxCol) > headerIdx && trim(col("value")) =!= "")
+          .filter(col(Canonical.idxCol) > headerId && trim(col("value")) =!= "")
         val cols: Seq[Column] = specs.map { spec =>
           val slice = trim(substring(col("value"), spec.start + 1, spec.end - spec.start))
           val v =
@@ -105,6 +98,21 @@ object PrnSource {
     }
   }
 
+  /** Id and text of the first non-blank line (blank: every char
+    * ≤ U+0020, as `String.trim` counts them). When the file's first
+    * line is that line its id is 0, the first row of partition 0, and
+    * no job runs; otherwise one first-match job finds it in `lines`. */
+  private def findHeader(path: String, lines: DataFrame): Option[(Long, String)] = {
+    val in = Files.newBufferedReader(Paths.get(path), StandardCharsets.UTF_8)
+    val first = try in.readLine() finally in.close()
+    if (first == null) None
+    else if (first.trim.nonEmpty) Some((0L, first))
+    else lines.filter(col("value").rlike("[^\\x00-\\x20]"))
+      .select(col(Canonical.idxCol), col("value"))
+      .head(1).headOption
+      .map(r => (r.getLong(0), r.getString(1)))
+  }
+
   /** PRN stores Credit Limit as integer cents; mirror of
     * `prnParser.ts:130-137`: `parseInt` (numeric prefix, like JS),
     * divide by 100 at 2 decimal places, non-numeric → "" (which the
@@ -115,15 +123,6 @@ object PrnSource {
     when(intPrefix =!= "",
       (intPrefix.cast("decimal(38,0)") / 100).cast("decimal(38,2)").cast("string"))
       .otherwise(lit(""))
-  }
-
-  private def firstNonBlankLine(path: String): Option[(Long, String)] = {
-    val it = Files.lines(Paths.get(path), StandardCharsets.UTF_8)
-    try {
-      it.iterator.asScala.zipWithIndex
-        .find { case (l, _) => l.trim.nonEmpty }
-        .map { case (l, i) => (i.toLong, l) }
-    } finally it.close()
   }
 
   private def ensureUtf8(path: String, encoding: String): String = {

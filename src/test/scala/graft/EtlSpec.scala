@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 
@@ -15,13 +14,6 @@ class EtlSpec extends SparkSpec {
 
   private val csvPath = "/root/reference/Workbook2.csv"
   private val prnPath = "/root/reference/Workbook2.prn"
-
-  private def tmpFile(content: String, encoding: String = "ISO-8859-1"): String = {
-    val f = Files.createTempFile("etlspec_", ".txt")
-    f.toFile.deleteOnExit()
-    Files.write(f, content.getBytes(encoding))
-    f.toString
-  }
 
   private def rows(df: DataFrame): Seq[Map[String, String]] = {
     import org.apache.spark.sql.functions.col
@@ -153,6 +145,42 @@ class EtlSpec extends SparkSpec {
     assert(got.length == 2)
     assert(got.last == expectedRow7)
     assert(rows(PrnSource.read(spark, tmpFile("   \n \n   "))).isEmpty)
+  }
+
+  private val prnHeader =
+    "Name            Address               Postcode Phone         Credit Limit Birthday\n"
+  private val prnRow1 =
+    "Johnson, John   Voorstraat 32         3122gg   020 3849381        1000000 19870101\n"
+  private val prnRow7 =
+    "Smith, John     Børkestraße 32        87823    +44 728 889838      989830 19990920\n"
+
+  test("PRN: blank lines before the header are skipped") {
+    val got = rows(PrnSource.read(spark, tmpFile("\n   \n\t\n" + prnHeader + prnRow1 + prnRow7)))
+    assert(got == Seq(expectedRow1, expectedRow7))
+  }
+
+  test("PRN: a blank prefix longer than one split still finds the header") {
+    withConf("spark.sql.files.maxPartitionBytes", "256") {
+      val p = tmpFile("   \n" * 400 + prnHeader + prnRow1 + prnRow7)
+      import org.apache.spark.sql.functions.{col, spark_partition_id}
+      val headerPartition = spark.read.text(p).where(col("value").startsWith("Name"))
+        .select(spark_partition_id()).head().getInt(0)
+      assert(headerPartition > 0, "the header must not be in partition 0")
+      assert(rows(PrnSource.read(spark, p)) == Seq(expectedRow1, expectedRow7))
+    }
+  }
+
+  test("PRN: a data line identical to the header is kept") {
+    val got = rows(PrnSource.read(spark, tmpFile(prnHeader + prnRow1 + prnHeader + prnRow7)))
+    val headerAsRow = Map("Name" -> "Name", "Address" -> "Address", "Postcode" -> "POSTCODE",
+      "Phone" -> "", "Credit Limit" -> "0.00", "Birthday" -> "Birthday")
+    assert(got == Seq(expectedRow1, headerAsRow, expectedRow7))
+  }
+
+  test("PRN: empty and whitespace-only input yield 0 rows") {
+    Seq("", " ", "\n\n", "\t \r\n  \n").foreach { content =>
+      assert(rows(PrnSource.read(spark, tmpFile(content))).isEmpty, s"input ${content.map(_.toInt)}")
+    }
   }
 
   // -- JSON sink ----------------------------------------------------

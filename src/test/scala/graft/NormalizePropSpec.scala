@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -92,14 +90,8 @@ class NormalizePropSpec extends SparkSpec {
       prn.append(pad(r.name, 16) + pad(r.address, 16) + pad(r.postcode, 10) +
         pad(r.phone, 12) + pad(r.cents.toString, 14) + r.ymd + "\n")
     }
-    def tmp(content: String): String = {
-      val f = Files.createTempFile("prop_", ".txt")
-      f.toFile.deleteOnExit()
-      Files.write(f, content.toString.getBytes("ISO-8859-1"))
-      f.toString
-    }
-    val a = graft.sinks.JsonSink.render(CsvSource.read(spark, tmp(csv.toString)))
-    val b = graft.sinks.JsonSink.render(PrnSource.read(spark, tmp(prn.toString), warn = _ => ()))
+    val a = graft.sinks.JsonSink.render(CsvSource.read(spark, tmpFile(csv.toString)))
+    val b = graft.sinks.JsonSink.render(PrnSource.read(spark, tmpFile(prn.toString), warn = _ => ()))
     assert(a == b)
   }
 

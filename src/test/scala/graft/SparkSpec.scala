@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +9,23 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A temp file holding `content` in `encoding`, deleted on exit. */
+  def tmpFile(content: String, encoding: String = "ISO-8859-1"): String = {
+    val f = Files.createTempFile("graft_test_", ".txt")
+    f.toFile.deleteOnExit()
+    Files.write(f, content.getBytes(encoding))
+    f.toString
+  }
+
+  /** Runs `body` with the session conf `key` set to `value`, then
+    * restores the previous setting. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkSpec {
