@@ -25,15 +25,23 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus, "graft-bench")
 
+    // every failed warm-up step or pass, by name: a failure is never
+    // recorded as a time, and the JSON lists it under "failed"
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def attempt[T](label: String)(body: => T): Option[T] =
+      try Some(body)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $label failed: $e")
+        failed.synchronized(failed += label)
+        None
+      }
+
     // Warmup: exercise codegen, parquet footer reads, shuffle
     // machinery; q29's warmup also pays the one-time bucket-table
     // build so its measured time is the exchange-free join the
     // pattern advertises, not the write.
-    try {
-      SparkEntry.queries.get("q1_pricing_summary").foreach(_(spark, sfDir).count())
-      SparkEntry.queries.get("text_token_stats").foreach(_(spark, sfDir).count())
-      SparkEntry.queries.get("q29_bucketed_join").foreach(_(spark, sfDir).count())
-    } catch { case _: Throwable => () }
+    Seq("q1_pricing_summary", "text_token_stats", "q29_bucketed_join").foreach(q =>
+      attempt(s"warmup:$q")(SparkEntry.queries.get(q).foreach(_(spark, sfDir).count())))
 
     // BOARD-SCOPED signature bases (r15 verdict item 1b): the five
     // per-family signature/assignment bases are corpus-snapshot
@@ -68,8 +76,7 @@ object Bench {
     val pinnedBaseSec: Double = if (pinBases) {
       graft.operators.Dedup.pinBases(graft.operators.Dedup.PinnableBaseKinds)
       val t0 = System.nanoTime()
-      try graft.operators.Dedup.warmPinnedBases(spark, sfDir)
-      catch { case _: Throwable => () }
+      attempt("warmup:pinned_bases")(graft.operators.Dedup.warmPinnedBases(spark, sfDir))
       if (wantComposites) {
         graft.operators.Dedup.setCompositeTier(true)
         // constructing the frames populates the tier (compositeMemo
@@ -89,8 +96,8 @@ object Bench {
           import scala.concurrent.duration.Duration
           import scala.concurrent.ExecutionContext.Implicits.global
           Await.result(Future.sequence(composites.toSeq.sorted.map(c =>
-            Future(try SparkEntry.queries.get(c).foreach(_(spark, sfDir))
-            catch { case _: Throwable => () }))), Duration.Inf)
+            Future(attempt(s"warmup:$c")(SparkEntry.queries.get(c).foreach(_(spark, sfDir)))))),
+            Duration.Inf)
         } finally graft.operators.Dedup.setCompositeTier(false)
       }
       (System.nanoTime() - t0) / 1e9
@@ -241,12 +248,14 @@ object Bench {
       val cals = (calibrations.toSeq ++ (if (partial) Nil else Seq(calAfter)))
         .mkString("[", ",", "]")
       val lats = latencies.mkString("[", ",", "]")
-      println(s"""{"metric":"total","value":$total,"unit":"sec","passes":2,"agg":"min","mode":"$mode","partial":$partial,"completed":${results.size},"of":${selected.size}$skipRule,"pinned_base_build_sec":$pinnedBaseSec,"mean":$totalMean,"calibration_sec":$cals,"latency_sec":$lats,"queries":$qs,"queries_mean":$qsMean,"queries_passes":$qsPasses,"sf":"$sfDir"}""")
+      val failedJson = failed.synchronized(failed.map("\"" + _ + "\"").mkString("[", ",", "]"))
+      println(s"""{"metric":"total","value":$total,"unit":"sec","passes":2,"agg":"min","mode":"$mode","partial":$partial,"completed":${results.size},"of":${selected.size},"failed":$failedJson$skipRule,"pinned_base_build_sec":$pinnedBaseSec,"mean":$totalMean,"calibration_sec":$cals,"latency_sec":$lats,"queries":$qs,"queries_mean":$qsMean,"queries_passes":$qsPasses,"sf":"$sfDir"}""")
     }
     // one timed cold pass of one query — shared by the sweep and the
     // end-of-board repair loop so both measure under the exact same
-    // methodology (memo reset, composite tier, noop sink, cache clear)
-    def runPass(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // methodology (memo reset, composite tier, noop sink, cache clear).
+    // None when the query throws: a failed pass has no time.
+    def runPass(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       // drop object-level memos (LSH pair list, cluster labels) so
       // every pass pays the COLD pipeline: without this the second
       // pass — and any query after a memo-sharing sibling — clocks a
@@ -259,21 +268,18 @@ object Bench {
       // PRODUCTION number (signature/label/edge tables built once per
       // corpus snapshot and shared). The driver never sets it, so
       // round benches stay honest-cold and cross-round comparable.
-      if (!sys.env.get("SPARK_GRAFT_WARM").contains("1")) {
-        graft.operators.Dedup.resetMemos()
-        graft.operators.Text.resetMemos()
-      }
+      if (!sys.env.get("SPARK_GRAFT_WARM").contains("1")) SparkEntry.resetMemos()
       if (pinBases && composites(name))
         graft.operators.Dedup.setCompositeTier(true)
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      finally graft.operators.Dedup.setCompositeTier(false)
+      val ok =
+        try attempt(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        finally graft.operators.Dedup.setCompositeTier(false)
       val dt = (System.nanoTime() - t0) / 1e9
       // unpersist per-query cached intermediates so later queries
       // aren't measured under accrued executor-memory pressure
       spark.catalog.clearCache()
-      dt
+      ok.map(_ => dt)
     }
     // rate limit for the decision-time re-probe (r17 ADVICE): under a
     // sustained 1-2.4x contention window every out-of-band pinned
@@ -283,75 +289,77 @@ object Bench {
     // band uses the latest stamped reading.
     var lastProbeAt = -10
     selected.foreach { case (name, fn) =>
-      def pass(): Double = runPass(name, fn)
-      val p1 = pass()
-      val pin = pinOf(name)
-      def inBand(p: Double): Boolean = p1 <= (1.5 * p + 0.3) * loadScale
-      // DECISION-TIME recalibration (r17): the periodic probes sample
-      // every 50 queries, but the contention windows measured on this
-      // box start and end BETWEEN samples — run 2 of the r17 board
-      // watched the ml_* block read 5-20x its pins against a stale
-      // low loadScale, fail the band, and spend ~45 s re-measuring
-      // numbers that were pure window noise (both passes inflated
-      // together — the exact r15/r16 driver-kill mode). So a pass-1
-      // reading outside the band first re-probes the box NOW (~0.5 s)
-      // and re-evaluates; if the band still fails under a
-      // heavily-loaded reading (loadScale >= 2.5 after the clamp), a
-      // re-measure cannot produce a steady-state number either — the
-      // pin REMAINS the best-known steady state, pass 1 is reported
-      // as measured (visibly inflated, min == mean), and the forced
-      // skip is counted in pass2_load_skips. Pass 2 runs only when
-      // the box looks sane enough (< 2.5x) for min-of-2 to mean
-      // something — a real regression on a quiet box still gets its
-      // honest two passes, and all decision-time probe readings land
-      // in the stamped calibration arrays.
-      val times =
-        if (pin.exists(inBand)) Seq(p1)
-        else if (pin.isDefined && results.size - lastProbeAt >= 10 && {
-          calibrations += calibrate(); latencies += latencyProbe()
+      def pass(): Option[Double] = runPass(name, fn)
+      // a failed pass 1 leaves the query out of the times entirely
+      pass().foreach { p1 =>
+        val pin = pinOf(name)
+        def inBand(p: Double): Boolean = p1 <= (1.5 * p + 0.3) * loadScale
+        // DECISION-TIME recalibration (r17): the periodic probes sample
+        // every 50 queries, but the contention windows measured on this
+        // box start and end BETWEEN samples — run 2 of the r17 board
+        // watched the ml_* block read 5-20x its pins against a stale
+        // low loadScale, fail the band, and spend ~45 s re-measuring
+        // numbers that were pure window noise (both passes inflated
+        // together — the exact r15/r16 driver-kill mode). So a pass-1
+        // reading outside the band first re-probes the box NOW (~0.5 s)
+        // and re-evaluates; if the band still fails under a
+        // heavily-loaded reading (loadScale >= 2.5 after the clamp), a
+        // re-measure cannot produce a steady-state number either — the
+        // pin REMAINS the best-known steady state, pass 1 is reported
+        // as measured (visibly inflated, min == mean), and the forced
+        // skip is counted in pass2_load_skips. Pass 2 runs only when
+        // the box looks sane enough (< 2.5x) for min-of-2 to mean
+        // something — a real regression on a quiet box still gets its
+        // honest two passes, and all decision-time probe readings land
+        // in the stamped calibration arrays.
+        val times =
+          if (pin.exists(inBand)) Seq(p1)
+          else if (pin.isDefined && results.size - lastProbeAt >= 10 && {
+            calibrations += calibrate(); latencies += latencyProbe()
+            lastProbeAt = results.size
+            pin.exists(inBand)
+          }) Seq(p1)
+          else if (pin.isDefined && loadScale >= 2.5) {
+            pass2LoadSkips += 1
+            Seq(p1)
+          } else if (pin.isDefined && pass2Budget <= 0) {
+            // backstop: sustained contention drained the pass-2 wall
+            // budget — report pass 1, count the forced skip in-band
+            pass2BudgetSkips += 1
+            Seq(p1)
+          } else {
+            val p2 = pass()
+            if (pin.isDefined) p2.foreach(pass2Budget -= _)
+            val two = p1 +: p2.toSeq
+            // the disagreement-triggered third pass keeps the min honest
+            // when ONE pass ate a load spike — but under a sustained spike
+            // it fires for every query in the window and adds wall exactly
+            // when the driver's timeout is at risk (the r15 rc=124 failure
+            // mode). A shared 30s budget bounds that: after it drains,
+            // spiky queries report min-of-2 (possibly inflated — visible
+            // via the mean alongside) instead of growing the run.
+            if (two.max / two.min > 3.0 && thirdPassBudget > 0) {
+              val t = pass()
+              t.foreach(thirdPassBudget -= _)
+              two ++ t
+            } else two
+          }
+        // headline stays the per-query min (steady-state throughput for
+        // multi-pass queries; the history-confirmed pass-1 reading for
+        // skipped ones); the mean is reported alongside so a noisy pass
+        // on this shared box is visible in the JSON instead of
+        // masquerading as a cross-round regression
+        results += ((name, times.min, times.sum / times.size, times.size))
+        // refresh the load scale every 50 queries (~0.5-1.5s each) so a
+        // contention window that starts mid-board is seen mid-board
+        if (results.size % 50 == 0 && results.size < selected.size) {
+          calibrations += calibrate()
+          latencies += latencyProbe()
           lastProbeAt = results.size
-          pin.exists(inBand)
-        }) Seq(p1)
-        else if (pin.isDefined && loadScale >= 2.5) {
-          pass2LoadSkips += 1
-          Seq(p1)
-        } else if (pin.isDefined && pass2Budget <= 0) {
-          // backstop: sustained contention drained the pass-2 wall
-          // budget — report pass 1, count the forced skip in-band
-          pass2BudgetSkips += 1
-          Seq(p1)
-        } else {
-          val p2 = pass()
-          if (pin.isDefined) pass2Budget -= p2
-          val two = Seq(p1, p2)
-          // the disagreement-triggered third pass keeps the min honest
-          // when ONE pass ate a load spike — but under a sustained spike
-          // it fires for every query in the window and adds wall exactly
-          // when the driver's timeout is at risk (the r15 rc=124 failure
-          // mode). A shared 30s budget bounds that: after it drains,
-          // spiky queries report min-of-2 (possibly inflated — visible
-          // via the mean alongside) instead of growing the run.
-          if (two.max / two.min > 3.0 && thirdPassBudget > 0) {
-            val t = pass()
-            thirdPassBudget -= t
-            two :+ t
-          } else two
         }
-      // headline stays the per-query min (steady-state throughput for
-      // multi-pass queries; the history-confirmed pass-1 reading for
-      // skipped ones); the mean is reported alongside so a noisy pass
-      // on this shared box is visible in the JSON instead of
-      // masquerading as a cross-round regression
-      results += ((name, times.min, times.sum / times.size, times.size))
-      // refresh the load scale every 50 queries (~0.5-1.5s each) so a
-      // contention window that starts mid-board is seen mid-board
-      if (results.size % 50 == 0 && results.size < selected.size) {
-        calibrations += calibrate()
-        latencies += latencyProbe()
-        lastProbeAt = results.size
+        if (results.size % 25 == 0 && results.size < selected.size)
+          emit(partial = true, calAfter = -1.0)
       }
-      if (results.size % 25 == 0 && results.size < selected.size)
-        emit(partial = true, calAfter = -1.0)
     }
     // END-OF-BOARD REPAIR (r18). Evidence: the r17 DRIVER bench ran
     // its whole sweep at 3-28x job-dispatch latency (stamped latency
@@ -394,14 +402,16 @@ object Bench {
         }.sortBy(-_._2)
         for ((i, _) <- cands if wallElapsed < repairWallCeiling) {
           val (n, v, m, p) = results(i)
-          val t = runPass(n, fnByName(n))
           repairRuns += 1
-          repairSec += t
-          if (t < v) {
-            repairReclaimedSec += v - t
-            improving = true
+          // a failed repair pass is named in "failed" and merges nothing
+          runPass(n, fnByName(n)).foreach { t =>
+            repairSec += t
+            if (t < v) {
+              repairReclaimedSec += v - t
+              improving = true
+            }
+            results(i) = (n, math.min(v, t), (m * p + t) / (p + 1), p + 1)
           }
-          results(i) = (n, math.min(v, t), (m * p + t) / (p + 1), p + 1)
           if (repairRuns % 5 == 0) emit(partial = true, calAfter = -1.0)
         }
       }

@@ -4,23 +4,32 @@ import org.apache.spark.sql.SparkSession
 
 /** The library's recommended SparkSession configuration, in one
   * place — what a user of the engine starts from instead of
-  * rediscovering the settings the operators assume:
+  * rediscovering the settings the operators assume — and the ONLY
+  * writer of session conf in the engine. Settings come in three kinds:
   *
-  *  - `spark.sql.shuffle.partitions` sized to the executor-core
-  *    count, not the 200 default (on a real cluster: 2-3x total
-  *    cores; the 200 default over-partitions small stages and
-  *    under-partitions 100 TB ones).
-  *  - AQE on: runtime join-strategy changes, skew-join splitting and
-  *    post-shuffle coalescing are assumed by the operator plans
-  *    (the CPU-heavy kernels pin their own width explicitly where
-  *    coalescing would hurt — see CLAUDE.md's measured rules).
-  *  - UTC session timezone: the temporal operators and their oracles
-  *    render timestamps as civil strings; a non-UTC session would
-  *    shift them.
+  *  - Built: [[builder]] sizes `spark.sql.shuffle.partitions` to the
+  *    executor-core count (not the 200 default; on a real cluster
+  *    2-3x total cores), pins the UTC session timezone (the temporal
+  *    operators and their oracles render timestamps as civil
+  *    strings), keeps AQE on (runtime join-strategy changes, skew
+  *    splitting and post-shuffle coalescing are assumed by the
+  *    operator plans) and turns the UI off.
+  *  - Installed: [[install]] holds the idempotent settings a query
+  *    needs on any session — `nanosAsLong` (events.ts may be
+  *    TIMESTAMP(NANOS)), the `graft` DSv2 catalog and v2 bucketing
+  *    (storage-partitioned joins). The builder applies them up front;
+  *    the queries that need them call `install` too, which writes
+  *    nothing on a session built here and still configures a foreign
+  *    one (an external driver's).
+  *  - Scoped: [[withConf]] holds a setting only for a body and then
+  *    restores the prior one — for settings that must NOT leak to
+  *    other queries: the streaming width and the RocksDB state store
+  *    (a stream captures both at `start()`), and AQE off inside the
+  *    graph fixpoint loops ([[AqeOff]]).
   *
-  * The mains ([[Verify]], [[Bench]], [[Profile]], [[Cli]]) all build
-  * through this factory so tests, gates and users run the same
-  * configuration.
+  * The mains ([[Verify]], [[Bench]], [[Profile]], [[Cli]]) and the
+  * test session all build through this factory, so tests, gates and
+  * users run the same configuration.
   */
 object GraftSession {
 
@@ -87,24 +96,11 @@ object GraftSession {
   /** Builder preloaded with the recommended configuration; callers
     * override as needed before `getOrCreate()`. */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
-    val b = SparkSession.builder()
+    val b = Installed.foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      // GRAFT_AQE=false is a dev-only A/B escape (r17): it measured
-      // AQE's per-exchange stage-job overhead on the iterative graph
-      // loops (hits/bfs/pagerank ~25% faster without AQE, components
-      // ~25% slower — mixed, so the default stays on and the loops
-      // cut exchanges structurally instead). Never set by the driver.
-      // normalized to a strict boolean (r17 ADVICE: any other value,
-      // e.g. GRAFT_AQE=0, failed session construction with an obscure
-      // IllegalArgumentException) — only "false"/"0" turn it off
-      .config("spark.sql.adaptive.enabled",
-        (!sys.env.get("GRAFT_AQE").exists(v => v == "false" || v == "0")).toString)
-      // storage-partitioned joins over KGP-reporting DSv2 scans (the
-      // bucketed range source; any clustered table a deployment
-      // mounts): planning-only, inert for every other source
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
     // shuffle blocks, spills and RocksDB state-store working dirs on
     // the fast local medium (the cluster deployment rule is NVMe
@@ -113,47 +109,64 @@ object GraftSession {
     shmRoot.fold(b)(root => b.config("spark.local.dir", root.toString))
   }
 
-  /** Runs `body` with AQE disabled on the session, restoring the
-    * prior value after — scoped to the ITERATIVE LOOP BODIES of the
-    * graph/CC fixpoint operators (r18).
-    *
-    * Why this is safe AND right at every scale, not a local-mode
-    * tune: inside those loops every join consumes localCheckpoint'ed
-    * frames whose partitioning was pinned by an explicit
-    * `repartition(p, key)` — no exchange feeds any join, so AQE's
-    * skew-join splitting CANNOT apply to them (it only rewrites
-    * joins reading shuffle query stages), and the only exchanges in
-    * the loop plans are the explicit width pins whose entire purpose
-    * is to prevent the coalescing AQE would perform. What AQE still
-    * costs there is real: each exchange materializes as a separately
-    * scheduled stage-job, and on a slow-dispatch host (both measured
-    * boxes run 30-700 ms/job windows) that tax dominates the
-    * metadata-sized rounds. Measured job counts at sf0.1 (JobCensus,
-    * deterministic): hits_converge 134->32, kcore 88->29,
-    * bfs_levels 55->20, pagerank 37->12, path_counts 55->20,
-    * sim_graph_components 102->19. The corpus-scale memo builds
-    * (edge lists, kNN candidates) stay OUTSIDE the scope — they are
-    * single-pass plans where AQE's runtime re-optimization earns its
-    * stage jobs (the r17 A/B: components' kNN pipeline was 25%
-    * faster WITH AQE).
-    *
-    * GRAFT_LOOP_AQE=1 keeps AQE on inside the loops (the
-    * parameterized escape for deployments that want uniform AQE; the
-    * gated values are partitioning-independent integer aggregates,
-    * so the setting cannot move any result). The session-conf flip
-    * is visible to frames PLANNED concurrently on the same session —
-    * the only such window is the bench's composite warmup, where a
-    * sibling future may plan one build with AQE off: correctness-
-    * neutral (both settings are correct plans), bounded to warmup.
-    */
-  def withLoopAqeOff[T](s: SparkSession)(body: => T): T =
-    if (sys.env.get("GRAFT_LOOP_AQE").contains("1")) body
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      val prev = s.conf.get(key)
-      s.conf.set(key, "false")
-      try body finally s.conf.set(key, prev)
+  private val Installed = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
+    // storage-partitioned joins over KGP-reporting DSv2 scans (the
+    // bucketed range source; any clustered table a deployment
+    // mounts): planning-only, inert for every other source
+    "spark.sql.sources.v2.bucketing.enabled" -> "true")
+
+  /** Applies the installed settings to `s`, writing a key only when
+    * its value differs — a no-op on a session [[builder]] made. */
+  def install(s: SparkSession): Unit =
+    Installed.foreach { case (k, v) => if (!s.conf.getOption(k).contains(v)) s.conf.set(k, v) }
+
+  /** AQE off, for [[withConf]] around the graph fixpoint loop bodies.
+    * Inside them every join reads localCheckpoint'ed frames pinned by
+    * an explicit `repartition(p, key)`, so no exchange feeds a join
+    * and AQE has nothing to re-optimize; what it still costs is one
+    * scheduled stage-job per exchange per round (sf0.1 JobCensus:
+    * hits_converge 134->32 jobs, kcore 88->29, pagerank 37->12). The
+    * corpus-scale memo builds stay outside the scope, and so does
+    * connected components, whose consumers ran slower with it. */
+  val AqeOff: (String, String) = "spark.sql.adaptive.enabled" -> "false"
+
+  // (session, key) -> (held value, prior explicit value, depth)
+  private val scopes =
+    scala.collection.mutable.Map[(SparkSession, String), (String, Option[String], Int)]()
+
+  /** Runs `body` with `key` set to `value` on `s`, then restores the
+    * prior setting (explicit value or unset). Reentrant and
+    * thread-safe: the outermost scope on a (session, key) saves and
+    * sets, nested or overlapping scopes asking for the same value only
+    * count, and the last one out restores; a scope asking for a
+    * different value while one is held throws. Bodies run
+    * concurrently — a query planned on the session by a thread outside
+    * any scope still sees the held value. */
+  def withConf[T](s: SparkSession, kv: (String, String))(body: => T): T = {
+    val (key, value) = kv
+    scopes.synchronized {
+      scopes.get((s, key)) match {
+        case Some((held, prior, depth)) =>
+          if (held != value) throw new IllegalStateException(
+            s"$key=$value requested while a scope holds $key=$held")
+          scopes((s, key)) = (held, prior, depth + 1)
+        case None =>
+          scopes((s, key)) = (value, s.conf.getAll.get(key), 1) // explicit only, not a default
+          s.conf.set(key, value)
+      }
     }
+    try body
+    finally scopes.synchronized {
+      val (held, prior, depth) = scopes((s, key))
+      if (depth > 1) scopes((s, key)) = (held, prior, depth - 1)
+      else {
+        scopes.remove((s, key))
+        prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+      }
+    }
+  }
 
   /** Local session on `cpus` threads with matching shuffle width. */
   def local(cpus: Int, appName: String = "graft"): SparkSession = {

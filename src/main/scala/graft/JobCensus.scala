@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
@@ -24,22 +24,25 @@ object JobCensus {
     val spark = GraftSession.local(cpus, "graft-jobcensus")
 
     val jobs = new AtomicInteger(); val stages = new AtomicInteger()
-    val tasks = new AtomicInteger()
+    val tasks = new AtomicInteger(); val cpuNs = new AtomicLong()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        Option(t.taskMetrics).foreach(m => cpuNs.addAndGet(m.executorCpuTime))
+      }
     })
 
     // warmup (mirrors Bench) so counts are steady-state
     try SparkEntry.queries.get("q1_pricing_summary").foreach(_(spark, sfDir).count())
     catch { case _: Throwable => () }
 
-    println("query\tjobs\tstages\ttasks\tsec")
+    println("query\tjobs\tstages\ttasks\tcpu_s\tsec")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
       .foreach { case (name, fn) =>
-        graft.operators.Dedup.resetMemos()
+        SparkEntry.resetMemos()
         spark.sparkContext.setJobDescription(name)
         // drain the async listener bus to quiescence (no counter
         // movement for 200 ms) so counts attribute to the right query
@@ -52,19 +55,19 @@ object JobCensus {
           }
         }
         drain()
-        jobs.set(0); stages.set(0); tasks.set(0)
+        jobs.set(0); stages.set(0); tasks.set(0); cpuNs.set(0)
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           drain()
           val dt = (System.nanoTime() - t0) / 1e9
-          println(f"$name%s\t${jobs.get}%d\t${stages.get}%d\t${tasks.get}%d\t$dt%.2f")
+          println(f"$name%s\t${jobs.get}%d\t${stages.get}%d\t${tasks.get}%d\t${cpuNs.get / 1e9}%.2f\t$dt%.2f")
         } catch { case e: Throwable =>
-          // 5 columns like every other row (r17 ADVICE: a 3-field row
+          // 6 columns like every other row (r17 ADVICE: a 3-field row
           // breaks TSV consumers), and drain so a failed query's
           // straggling jobs don't leak into the next query's counts
           drain()
-          println(s"$name\tERR\tERR\tERR\t${e.getClass.getSimpleName}")
+          println(s"$name\tERR\tERR\tERR\tERR\t${e.getClass.getSimpleName}")
         }
         spark.catalog.clearCache()
       }

@@ -148,7 +148,7 @@ object Scale10x {
       .repartition(8)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    GraftSession.install(spark)
     val ev = spark.read.parquet(s"$src/events.parquet")
     val evOffset = {
       val m = ev.agg(max(col("event_id"))).first().getLong(0)

@@ -77,7 +77,7 @@ object Tables {
     * the loader normalizes to session-local TimestampType here,
     * matching a DuckDB `CAST(ts AS TIMESTAMP)`. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    GraftSession.install(s)
     fixEventTs(load(s, d, "events"))
   }
 

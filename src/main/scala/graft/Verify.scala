@@ -11,9 +11,13 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
+    // a query must leave the session conf as it found it
+    // (GraftSession.withConf scopes); any key it changed is reported
+    var drifted = 0
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      val before = spark.conf.getAll
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -22,7 +26,14 @@ object Verify {
       // release per-query persisted intermediates (LSH signature
       // frames etc.) so executor memory doesn't accrue across queries
       spark.catalog.clearCache()
+      val after = spark.conf.getAll
+      val keys = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+      if (keys.nonEmpty) {
+        drifted += 1
+        System.err.println(s"[verify] conf drift: $name ${keys.toSeq.sorted.mkString(",")}")
+      }
     }
+    System.err.println(s"[verify] conf drift: $drifted queries")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

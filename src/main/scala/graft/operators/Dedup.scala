@@ -1618,12 +1618,14 @@ ORDER BY tau_x10k"""
     }
   }
 
+  private val CcPartitions = 8
+
   /** Connected components over a symmetric (src, dst) edge list via
     * min-label propagation + pointer jumping. Returns (labels for
-    * every node appearing in `edges`, rounds used). Exposed for the
+    * every node appearing in `edges0`, rounds used). Exposed for the
     * synthetic-chain convergence property test. */
   private[graft] def resolveComponents(
-      edges: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = {
+      edges0: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = {
     // The iteration frames are edge-node-sized (a tiny fraction of the
     // corpus on a near-dup graph) but each round runs ~5 jobs; at the
     // session's 32 shuffle partitions the per-task scheduling overhead
@@ -1639,19 +1641,9 @@ ORDER BY tau_x10k"""
     // count cannot change the min-label fixpoint. At true scale the
     // label table is large and the session width is the right one;
     // this mirrors how an iterative job sizes its own stages.
-    // AQE is scoped OFF for the loop (r18, GraftSession.withLoopAqeOff):
-    // no exchange feeds any loop join (all zip on checkpoints), so
-    // AQE's only effect here was one scheduled stage-job per pinned
-    // exchange per round.
-    graft.GraftSession.withLoopAqeOff(edges.sparkSession) {
-      resolveComponentsLoop(edges, maxRounds)
-    }
-  }
-
-  private val CcPartitions = 8
-
-  private def resolveComponentsLoop(
-      edges0: DataFrame, maxRounds: Int): (DataFrame, Int) = {
+    // AQE stays ON here, unlike the graph loops' GraftSession.AqeOff
+    // scope: with it off the CC consumers ran a half to a fifth of the
+    // jobs but 1.2-1.5x the executor CPU (sf0.1, 4 cpus).
     val p = CcPartitions
     // loop-invariant edge list: partitioned ONCE on dst (the join key
     // of every round's neighbor lookup) and materialized
@@ -2068,7 +2060,7 @@ ORDER BY tau_x10k"""
     // through the alias (src = c)
     val edges = copurchaseEdges(s, dir)
       .select(col("c").as("src"), (col("p") + 10000000L).as("dst"))
-    graft.GraftSession.withLoopAqeOff(s) {
+    graft.GraftSession.withConf(s, graft.GraftSession.AqeOff) {
     // deg consumes the edge memo's hash(src, 8) partitioning —
     // exchange-free groupBy whose output zips into the node join;
     // the node list pins its width BEFORE the distinct so dedup and
@@ -2112,7 +2104,7 @@ ORDER BY tau_x10k"""
       done = row.getLong(0) == 0L
     }
     rounds.toSeq.toDF("round", "delta", "pr_max").orderBy(col("round"))
-    } // withLoopAqeOff
+    } // withConf(AqeOff)
   }
 
   val qPagerankConvergeSql: String = {
@@ -2271,11 +2263,11 @@ WHERE a.n_members > 1 ORDER BY a.cluster_id"""
     val p0 = CcPartitions
     // round-0 edges are the offset projection of the shared
     // [[copurchaseEdges]] memo (map-only, partitioning preserved;
-    // memo built OUTSIDE the loop-AQE scope — withLoopAqeOff);
+    // memo built OUTSIDE the loop-AQE scope — GraftSession.AqeOff);
     // each peel round re-checkpoints its own shrunk edge list below
     var edges = copurchaseEdges(s, dir)
       .select(col("c").as("src"), (col("p") + 10000000L).as("dst"))
-    graft.GraftSession.withLoopAqeOff(s) {
+    graft.GraftSession.withConf(s, graft.GraftSession.AqeOff) {
     var prevNodes = edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node"))).distinct().count()
     val trace = Array.newBuilder[(Long, Long, Long)]
@@ -2322,7 +2314,7 @@ WHERE a.n_members > 1 ORDER BY a.cluster_id"""
       }
     }
     trace.result().toSeq.toDF("round", "n_nodes", "n_pairs").orderBy(col("round"))
-    } // withLoopAqeOff
+    } // withConf(AqeOff)
   }
 
   val qKcoreSql: String = {
@@ -3315,9 +3307,9 @@ FROM mv GROUP BY 1, 2 ORDER BY 1, 2"""
     // discipline; a single edge copy re-exchanged every round at
     // first measurement). The by-c orientation is the shared
     // [[copurchaseEdges]] memo — built OUTSIDE the loop-AQE scope
-    // (corpus-scale single-pass plan; see withLoopAqeOff).
+    // (corpus-scale single-pass plan; see GraftSession.AqeOff).
     val edgesByC = copurchaseEdges(s, dir)
-    graft.GraftSession.withLoopAqeOff(s) {
+    graft.GraftSession.withConf(s, graft.GraftSession.AqeOff) {
     val edgesByP = edgesByC.repartition(p0, col("p")).localCheckpoint()
     // score inits dedup ON the edge lists' existing hash(·, 8)
     // partitioning (select preserves it), so neither distinct plans
@@ -3438,7 +3430,7 @@ FROM mv GROUP BY 1, 2 ORDER BY 1, 2"""
       rounds += ((pr, dHub, rounds0Auth))
     }
     rounds.toSeq.toDF("round", "delta_hub", "delta_auth").orderBy(col("round"))
-    } // withLoopAqeOff
+    } // withConf(AqeOff)
   }
 
   val qHitsConvergeSql: String = {
@@ -3492,7 +3484,7 @@ SELECT CAST(round AS BIGINT) AS round, delta_hub, delta_auth FROM alld, stop WHE
     val p0 = CcPartitions
     val edges = copurchaseEdges(s, dir)
       .select(col("c").as("src"), (col("p") + 10000000L).as("dst"))
-    graft.GraftSession.withLoopAqeOff(s) {
+    graft.GraftSession.withConf(s, graft.GraftSession.AqeOff) {
     val eb = edges
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(p0, col("src")).localCheckpoint()
@@ -3538,7 +3530,7 @@ SELECT CAST(round AS BIGINT) AS round, delta_hub, delta_auth FROM alld, stop WHE
       StructField("sum_node", StringType)))
     s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
       .orderBy(col("level"))
-    } // withLoopAqeOff
+    } // withConf(AqeOff)
   }
 
   val qBfsLevelsSql: String = {
@@ -3590,7 +3582,7 @@ SELECT CAST(round AS BIGINT) AS round, delta_hub, delta_auth FROM alld, stop WHE
     val d38 = "decimal(38,0)"
     val edges = copurchaseEdges(s, dir)
       .select(col("c").as("src"), (col("p") + 10000000L).as("dst"))
-    graft.GraftSession.withLoopAqeOff(s) {
+    graft.GraftSession.withConf(s, graft.GraftSession.AqeOff) {
     val eb = edges
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(p0, col("src")).localCheckpoint()
@@ -3632,7 +3624,7 @@ SELECT CAST(round AS BIGINT) AS round, delta_hub, delta_auth FROM alld, stop WHE
       StructField("sum_sigma", StringType), StructField("max_sigma", StringType)))
     s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
       .orderBy(col("level"))
-    } // withLoopAqeOff
+    } // withConf(AqeOff)
   }
 
   val qPathCountsSql: String = {

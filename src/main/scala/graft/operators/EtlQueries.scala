@@ -637,7 +637,7 @@ object EtlQueries {
   private val CatHi = 550000L
 
   def qCatalogSql(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    graft.GraftSession.install(s)
     s.sql(
       s"""SELECT bucket, cast(count(*) as bigint) AS n,
          |  cast(sum(graft.knuth_val(id)) as bigint) AS sum_knuth,
@@ -670,7 +670,7 @@ object EtlQueries {
   private val AggFnHi = 500000L
 
   def qCatalogAggFn(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    graft.GraftSession.install(s)
     s.sql(
       s"""SELECT bucket, cast(count(*) as bigint) AS n,
          |  graft.xor_agg(val) AS x_val,
@@ -706,7 +706,7 @@ object EtlQueries {
   private val MngDelBucket = 3L
 
   def qCatalogManaged(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    graft.GraftSession.install(s)
     s.sql("DROP TABLE IF EXISTS graft.managed_gate")
     s.sql("CREATE TABLE graft.managed_gate (id BIGINT NOT NULL, bucket BIGINT NOT NULL, val BIGINT NOT NULL)")
     s.sql(s"INSERT INTO graft.managed_gate SELECT id, bucket, val FROM graft.range_0_${MngEnd}_16")
@@ -752,7 +752,7 @@ object EtlQueries {
   private val MrgPruneBelow = 1000L
 
   def qCatalogMerge(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    graft.GraftSession.install(s)
     s.sql("DROP TABLE IF EXISTS graft.merge_gate")
     s.sql("CREATE TABLE graft.merge_gate (id BIGINT NOT NULL, bucket BIGINT NOT NULL, val BIGINT NOT NULL)")
     s.sql(s"INSERT INTO graft.merge_gate SELECT id, bucket, val FROM graft.range_0_${MrgTgtEnd}_16")
@@ -805,7 +805,7 @@ object EtlQueries {
   private val UpdEnd = 30000L
 
   def qCatalogUpdate(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    graft.GraftSession.install(s)
     s.sql("DROP TABLE IF EXISTS graft.update_gate")
     s.sql("CREATE TABLE graft.update_gate (id BIGINT NOT NULL, bucket BIGINT NOT NULL, val BIGINT NOT NULL)")
     s.sql(s"INSERT INTO graft.update_gate SELECT id, bucket, val FROM graft.range_0_${UpdEnd}_16")
@@ -848,7 +848,7 @@ object EtlQueries {
   private val ProcSlices = 8L
 
   def qCatalogProcedure(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    graft.GraftSession.install(s)
     val grid = s.sql(s"CALL graft.grid($ProcLo, $ProcHi, $ProcSlices)")
     // the CALL result is a first-class relation: aggregate it like
     // any DataFrame and ride the totals on every row
@@ -925,16 +925,16 @@ object EtlQueries {
   // ExtensionSpec: zero shuffles with the flag on, two with it off).
   // The merge hint pins SMJ (statistics-less V2 relations would
   // otherwise be broadcast candidates via AQE and hide the contract
-  // under a BroadcastExchange). The conf set is deliberately not
-  // restored: it only changes planning for KGP-reporting scans, and
-  // this library's recommended session carries it (GraftSession).
+  // under a BroadcastExchange). The flag is one of the settings
+  // GraftSession.install holds: it only changes planning for
+  // KGP-reporting scans.
   // Oracle: the same join over DuckDB range() — exact integers.
   private val SpjLeftEnd = 1600L
   private val SpjRightLo = 800L
   private val SpjRightHi = 2400L
 
   def qRangeSpj(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    graft.GraftSession.install(s)
     def bt(a: Long, b: Long) = s.read.format("graft.sources.RangeTableProvider")
       .option("start", a.toString).option("end", b.toString)
       .option("slices", "16").option("clusterBy", "bucket")

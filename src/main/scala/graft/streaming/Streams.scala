@@ -5,6 +5,7 @@ import java.util.UUID
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.{install, withConf}
 import graft.Tables
 
 /** Structured Streaming surface over the `events` table.
@@ -30,9 +31,15 @@ object Streams {
     * per-micro-batch overhead dominates small-state queries (measured
     * 11s -> 3s at sf0.1 going 32 -> 8 partitions). Streaming jobs pin
     * their partition count at start anyway (it's fixed into the
-    * checkpoint), so these queries set it explicitly and restore the
-    * session value after. At scale, size to key cardinality. */
+    * checkpoint), so these queries hold it in a scope
+    * ([[graft.GraftSession.withConf]]) that restores the session value
+    * after. At scale, size to key cardinality. */
   private val StreamPartitions = "8"
+  private val StreamWidth = "spark.sql.shuffle.partitions" -> StreamPartitions
+  /** transformWithState needs the RocksDB provider (multi-variable
+    * column families); scoped like [[StreamWidth]]. */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Resolves the single part file a staging write left in a bucket
     * directory. `listFiles()` returns NULL for a missing directory —
@@ -61,11 +68,9 @@ object Streams {
   private def runBounded(
       s: SparkSession, dir: String, mode: String, rawTs: Boolean = false,
       ckpt: Option[String] = None)(
-      build: DataFrame => DataFrame): DataFrame = {
-    val prevPartitions = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions)
+      build: DataFrame => DataFrame): DataFrame = withConf(s, StreamWidth) {
     val path = s"$dir/events.parquet"
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    install(s)
     // cached footer schema (r18): the bare read.parquet(path).schema
     // here ran a one-task inference job per bounded-stream query
     val schema = Tables.rawSchema(s, dir, "events") // ts arrives as long nanos
@@ -113,7 +118,6 @@ object Streams {
       s.catalog.dropTempView(name)
       out
     } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevPartitions)
       links.foreach(java.nio.file.Files.deleteIfExists(_))
       graft.GraftSession.sweep(streamDir)
     }
@@ -164,9 +168,7 @@ object Streams {
   private def streamProgress(
       s: SparkSession, dir: String, nFiles: Int, mode: String,
       groupSize: Int)(
-      build: DataFrame => DataFrame): Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
-    val prevPartitions = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions)
+      build: DataFrame => DataFrame): Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = withConf(s, StreamWidth) {
     val base = graft.GraftSession.scratchDir("graft_staged_")
     val watch = base.resolve("watch")
     java.nio.file.Files.createDirectory(watch)
@@ -215,14 +217,7 @@ object Streams {
         // filter to data batches themselves
         q.recentProgress.toSeq
       } finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevPartitions)
-      import scala.jdk.CollectionConverters._
-      val walked = java.nio.file.Files.walk(base)
-      try walked.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walked.close()
-    }
+    } finally graft.GraftSession.sweep(base)
   }
 
   // ---------------------------------------------------------------
@@ -240,31 +235,27 @@ object Streams {
   private val SrcStreamEnd = 200000L
   private val SrcStreamBatch = 30000L
 
-  def qSrcRangeStream(s: SparkSession, dir: String): DataFrame = {
-    val prevPartitions = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions)
+  def qSrcRangeStream(s: SparkSession, dir: String): DataFrame = withConf(s, StreamWidth) {
     val name = "graft_srcstream_" + UUID.randomUUID().toString.replace("-", "")
-    try {
-      val q = s.readStream.format("graft.sources.RangeTableProvider")
-        .option("start", "0").option("end", SrcStreamEnd.toString)
-        .option("slices", "8").option("batchRows", SrcStreamBatch.toString)
-        .load()
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"), sum(col("val")).as("sum_val"),
-          min(col("id")).as("min_id"), max(col("id")).as("max_id"))
-        .writeStream.format("memory").queryName(name).outputMode("complete")
-        .start()
-      val batches =
-        try {
-          q.processAllAvailable()
-          q.recentProgress.count(_.numInputRows > 0).toLong
-        } finally q.stop()
-      val sink = s.table(name)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = s.createDataFrame(rows, sink.schema)
-      s.catalog.dropTempView(name)
-      out.withColumn("n_batches", lit(batches)).orderBy(col("bucket"))
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevPartitions)
+    val q = s.readStream.format("graft.sources.RangeTableProvider")
+      .option("start", "0").option("end", SrcStreamEnd.toString)
+      .option("slices", "8").option("batchRows", SrcStreamBatch.toString)
+      .load()
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("n"), sum(col("val")).as("sum_val"),
+        min(col("id")).as("min_id"), max(col("id")).as("max_id"))
+      .writeStream.format("memory").queryName(name).outputMode("complete")
+      .start()
+    val batches =
+      try {
+        q.processAllAvailable()
+        q.recentProgress.count(_.numInputRows > 0).toLong
+      } finally q.stop()
+    val sink = s.table(name)
+    val rows = java.util.Arrays.asList(sink.collect(): _*)
+    val out = s.createDataFrame(rows, sink.schema)
+    s.catalog.dropTempView(name)
+    out.withColumn("n_batches", lit(batches)).orderBy(col("bucket"))
   }
 
   val qSrcRangeStreamSql: String = {
@@ -294,9 +285,7 @@ object Streams {
   // (queryId, epoch) pair, so the manifest is its own evidence).
   // The idempotent-replay path is additionally unit-asserted in
   // DirSinkSpec (a re-commit of a published epoch must not promote).
-  def qSrcRangeWriteStream(s: SparkSession, dir: String): DataFrame = {
-    val prevPartitions = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions)
+  def qSrcRangeWriteStream(s: SparkSession, dir: String): DataFrame = withConf(s, StreamWidth) {
     val base = graft.GraftSession.scratchDir("graft_dirsink_stream_")
     val sink = base.resolve("table").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(sink))
@@ -331,10 +320,7 @@ object Streams {
         .orderBy(col("bucket"))
         .localCheckpoint(true) // sever lineage so the temp dir can go
       out
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevPartitions)
-      graft.sources.DirSink.deleteRecursively(base)
-    }
+    } finally graft.sources.DirSink.deleteRecursively(base)
   }
 
   // ---------------------------------------------------------------
@@ -397,34 +383,26 @@ object Streams {
   // At scale: state is keyed by user_id across shuffle partitions,
   // RocksDB spills to disk, and TTLConfig (NONE here — bounded
   // source) is where production retention plugs in.
-  def qStreamTws(s: SparkSession, dir: String): DataFrame = {
+  def qStreamTws(s: SparkSession, dir: String): DataFrame = withConf(s, RocksDb) {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val updated = runBounded(s, dir, "update", rawTs = true) { stream =>
-        import s.implicits._
-        stream.select(col("user_id"), col("event_type"), col("value"))
-          .as[(Long, String, Double)]
-          .groupByKey(_._1)
-          .transformWithState(
-            new TwsUserProfile(), TimeMode.None(), OutputMode.Update())
-          .toDF("user_id", "n_events", "sum_value", "n_types", "top_type", "top_cnt")
-      }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-      updated
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("n_events"),
-          round(col("sum_value"), 2).as("sum_value"),
-          col("n_types"), col("top_type"), col("top_cnt"))
-        .orderBy(col("user_id"))
-    } finally prevProvider match {
-      case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val updated = runBounded(s, dir, "update", rawTs = true) { stream =>
+      import s.implicits._
+      stream.select(col("user_id"), col("event_type"), col("value"))
+        .as[(Long, String, Double)]
+        .groupByKey(_._1)
+        .transformWithState(
+          new TwsUserProfile(), TimeMode.None(), OutputMode.Update())
+        .toDF("user_id", "n_events", "sum_value", "n_types", "top_type", "top_cnt")
     }
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("user_id")).orderBy(col("n_events").desc)
+    updated
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("user_id"), col("n_events"),
+        round(col("sum_value"), 2).as("sum_value"),
+        col("n_types"), col("top_type"), col("top_cnt"))
+      .orderBy(col("user_id"))
   }
 
   val qStreamTwsSql: String =
@@ -465,9 +443,7 @@ object Streams {
   private val RstBatch = 20000L
   private val RstWriteParts = 4
 
-  def qSrcRangeStreamRestart(s: SparkSession, dir: String): DataFrame = {
-    val prevPartitions = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions)
+  def qSrcRangeStreamRestart(s: SparkSession, dir: String): DataFrame = withConf(s, StreamWidth) {
     val base = graft.GraftSession.scratchDir("graft_dirsink_restart_")
     val sink = base.resolve("table").toString
     val ckpt = base.resolve("ckpt").toString
@@ -519,10 +495,7 @@ object Streams {
         .orderBy(col("bucket"))
         .localCheckpoint(true) // sever lineage so the temp dir can go
       out
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevPartitions)
-      graft.sources.DirSink.deleteRecursively(base)
-    }
+    } finally graft.sources.DirSink.deleteRecursively(base)
   }
 
   val qSrcRangeStreamRestartSql: String = {
@@ -620,16 +593,14 @@ object Streams {
   // recovery. Two `Trigger.AvailableNow` phases over a shared
   // checkpoint are exactly the production restart (a stopped job
   // redeployed after new data arrived).
-  def qStreamRestartRecovery(s: SparkSession, dir: String): DataFrame = {
+  def qStreamRestartRecovery(s: SparkSession, dir: String): DataFrame = withConf(s, StreamWidth) {
     import org.apache.spark.sql.streaming.Trigger
-    val prevPartitions = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions)
     val base = graft.GraftSession.scratchDir("graft_restart_")
     val watch = base.resolve("watch")
     java.nio.file.Files.createDirectory(watch)
     val name = "graft_restart_" + UUID.randomUUID().toString.replace("-", "")
     try {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      install(s)
       // The aggregation is event-time-free (no watermark, complete
       // mode), so the 4-way file split needs NO time contiguity —
       // md5-bucket the event ids (the qSplit convention) instead of
@@ -702,14 +673,7 @@ object Streams {
         .withColumn("run1_rows", lit(run1))
         .withColumn("run2_rows", lit(run2))
         .orderBy(col("user_id"))
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevPartitions)
-      import scala.jdk.CollectionConverters._
-      val walked = java.nio.file.Files.walk(base)
-      try walked.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walked.close()
-    }
+    } finally graft.GraftSession.sweep(base)
   }
 
   val qStreamRestartRecoverySql: String =
@@ -1061,123 +1025,119 @@ object Streams {
   // batch-id watermark — nothing key-cardinality-sized — so the sink
   // scales to real user cardinality. The persisted final partial is
   // also what the replay gate re-delivers verbatim.
-  def qStreamExactlyOnce(s: SparkSession, dir: String): DataFrame = {
+  def qStreamExactlyOnce(s: SparkSession, dir: String): DataFrame = withConf(s, StreamWidth) {
     import org.apache.hadoop.fs.Path
-    val prevPartitions = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions)
     val base = graft.GraftSession.warehouseRoot(s) + s"/stream_eos"
     val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new Path(base), true)
-    try {
-      // 3 single-file batches out of the one test parquet (3 is the
-      // smallest count that still exercises first-batch create +
-      // repeated merge + a non-adjacent replay; each extra batch is
-      // ~3 jobs of pure scheduling overhead on the bench wall)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val srcDir = s"$base/src"
-      val srcSel = Tables.load(s, dir, "events") // schema-cached scan (r18)
-        .select(col("user_id"), col("value"))
-      srcSel.repartition(3).write.parquet(srcDir)
-      val schema = srcSel.schema // what the write just produced
+    // 3 single-file batches out of the one test parquet (3 is the
+    // smallest count that still exercises first-batch create +
+    // repeated merge + a non-adjacent replay; each extra batch is
+    // ~3 jobs of pure scheduling overhead on the bench wall)
+    install(s)
+    val srcDir = s"$base/src"
+    val srcSel = Tables.load(s, dir, "events") // schema-cached scan (r18)
+      .select(col("user_id"), col("value"))
+    srcSel.repartition(3).write.parquet(srcDir)
+    val schema = srcSel.schema // what the write just produced
 
-      // versioned-path target: each apply reads version N and writes
-      // N+1 (never its own input — the read-then-overwrite trap)
-      var curPath: Option[String] = None
-      var applySeq = 0
-      def applyBatch(partial: DataFrame, batchId: Long): Unit = {
-        // p_cents is NULL for a batch where the user's events all have
-        // NULL value (sum over an all-NULL group) — the oracle's
-        // whole-table sum SKIPS those, so the merge must treat the
-        // partial as 0, never poison the running total with NULL
-        val next = curPath match {
-          case None =>
-            partial.select(col("p_uid").as("user_id"), col("p_n").as("n_events"),
-              coalesce(col("p_cents"), lit(0L)).as("sum_cents"),
-              lit(batchId).as("last_batch"))
-          case Some(p) =>
-            val fresh = col("p_uid").isNotNull &&
-              (col("user_id").isNull || col("last_batch") < lit(batchId))
-            s.read.parquet(p)
-              .join(partial, col("user_id") === col("p_uid"), "full_outer")
-              .select(
-                coalesce(col("user_id"), col("p_uid")).as("user_id"),
-                when(fresh, coalesce(col("n_events"), lit(0L)) + col("p_n"))
-                  .otherwise(col("n_events")).as("n_events"),
-                when(fresh, coalesce(col("sum_cents"), lit(0L)) +
-                    coalesce(col("p_cents"), lit(0L)))
-                  .otherwise(col("sum_cents")).as("sum_cents"),
-                when(fresh, lit(batchId)).otherwise(col("last_batch")).as("last_batch"))
-        }
-        val out = s"$base/target_v$applySeq"
-        next.write.mode("overwrite").parquet(out)
-        applySeq += 1
-        curPath = Some(out)
-      }
-
-      // per-batch partials persist as parquet (a distributed write —
-      // never a driver collect); only their PATHS live on the driver
-      var lastPartialPath: Option[String] = None
-      var lastBatchId = -1L
-      var batchesApplied = 0
-
-      val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
-          val pPath = s"$base/partial_b$batchId"
-          batchDf
-            .groupBy(col("user_id").as("p_uid"))
-            .agg(count(lit(1)).as("p_n"),
-              sum(floor(col("value") * 100).cast("long")).as("p_cents"))
-            .write.mode("overwrite").parquet(pPath)
-          val partial = s.read.parquet(pPath)
-          if (!partial.isEmpty) {
-            applyBatch(partial, batchId)
-            lastPartialPath = Some(pPath)
-            lastBatchId = batchId
-            batchesApplied += 1
-          }
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-
-      // the accumulation gate depends on repartition(4) having yielded
-      // 4 non-empty source files; state that dependence explicitly
-      // rather than letting a shortfall surface as a bare hash
-      // mismatch. Count files WITH ROWS (a 0-row part file still has
-      // a parquet footer, so file length cannot distinguish them)
-      val srcFilesWithRows = s.read.parquet(srcDir)
-        .select(input_file_name()).distinct().count()
-      require(batchesApplied == srcFilesWithRows,
-        s"exactly-once gate: $srcFilesWithRows non-empty source files " +
-          s"but $batchesApplied batches applied")
-
-      curPath match {
+    // versioned-path target: each apply reads version N and writes
+    // N+1 (never its own input — the read-then-overwrite trap)
+    var curPath: Option[String] = None
+    var applySeq = 0
+    def applyBatch(partial: DataFrame, batchId: Long): Unit = {
+      // p_cents is NULL for a batch where the user's events all have
+      // NULL value (sum over an all-NULL group) — the oracle's
+      // whole-table sum SKIPS those, so the merge must treat the
+      // partial as 0, never poison the running total with NULL
+      val next = curPath match {
         case None =>
-          // all micro-batches empty: an empty gated frame, not an NPE
-          s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("n_events", org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("sum_cents", org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("batches_applied", org.apache.spark.sql.types.IntegerType, nullable = false),
-              org.apache.spark.sql.types.StructField("replay_noop", org.apache.spark.sql.types.BooleanType, nullable = false))))
-        case Some(preReplay) =>
-          // failure simulation: re-deliver the final batch verbatim from
-          // its persisted parquet; the per-key last_batch guard must
-          // make the merge a no-op
-          applyBatch(s.read.parquet(lastPartialPath.get), lastBatchId)
-          val pre = s.read.parquet(preReplay)
-          val post = s.read.parquet(curPath.get)
-          val noop = pre.exceptAll(post).isEmpty && post.exceptAll(pre).isEmpty
-
-          post.select(col("user_id"), col("n_events"), col("sum_cents"),
-              lit(batchesApplied).as("batches_applied"), lit(noop).as("replay_noop"))
-            .orderBy(col("user_id"))
+          partial.select(col("p_uid").as("user_id"), col("p_n").as("n_events"),
+            coalesce(col("p_cents"), lit(0L)).as("sum_cents"),
+            lit(batchId).as("last_batch"))
+        case Some(p) =>
+          val fresh = col("p_uid").isNotNull &&
+            (col("user_id").isNull || col("last_batch") < lit(batchId))
+          s.read.parquet(p)
+            .join(partial, col("user_id") === col("p_uid"), "full_outer")
+            .select(
+              coalesce(col("user_id"), col("p_uid")).as("user_id"),
+              when(fresh, coalesce(col("n_events"), lit(0L)) + col("p_n"))
+                .otherwise(col("n_events")).as("n_events"),
+              when(fresh, coalesce(col("sum_cents"), lit(0L)) +
+                  coalesce(col("p_cents"), lit(0L)))
+                .otherwise(col("sum_cents")).as("sum_cents"),
+              when(fresh, lit(batchId)).otherwise(col("last_batch")).as("last_batch"))
       }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevPartitions)
+      val out = s"$base/target_v$applySeq"
+      next.write.mode("overwrite").parquet(out)
+      applySeq += 1
+      curPath = Some(out)
+    }
+
+    // per-batch partials persist as parquet (a distributed write —
+    // never a driver collect); only their PATHS live on the driver
+    var lastPartialPath: Option[String] = None
+    var lastBatchId = -1L
+    var batchesApplied = 0
+
+    val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(srcDir)
+      .writeStream
+      .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
+        val pPath = s"$base/partial_b$batchId"
+        batchDf
+          .groupBy(col("user_id").as("p_uid"))
+          .agg(count(lit(1)).as("p_n"),
+            sum(floor(col("value") * 100).cast("long")).as("p_cents"))
+          .write.mode("overwrite").parquet(pPath)
+        val partial = s.read.parquet(pPath)
+        if (!partial.isEmpty) {
+          applyBatch(partial, batchId)
+          lastPartialPath = Some(pPath)
+          lastBatchId = batchId
+          batchesApplied += 1
+        }
+      }
+      .option("checkpointLocation", s"$base/ckpt")
+      .start()
+    try q.processAllAvailable()
+    finally q.stop()
+
+    // the accumulation gate depends on repartition(4) having yielded
+    // 4 non-empty source files; state that dependence explicitly
+    // rather than letting a shortfall surface as a bare hash
+    // mismatch. Count files WITH ROWS (a 0-row part file still has
+    // a parquet footer, so file length cannot distinguish them)
+    val srcFilesWithRows = s.read.parquet(srcDir)
+      .select(input_file_name()).distinct().count()
+    require(batchesApplied == srcFilesWithRows,
+      s"exactly-once gate: $srcFilesWithRows non-empty source files " +
+        s"but $batchesApplied batches applied")
+
+    curPath match {
+      case None =>
+        // all micro-batches empty: an empty gated frame, not an NPE
+        s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("n_events", org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("sum_cents", org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("batches_applied", org.apache.spark.sql.types.IntegerType, nullable = false),
+            org.apache.spark.sql.types.StructField("replay_noop", org.apache.spark.sql.types.BooleanType, nullable = false))))
+      case Some(preReplay) =>
+        // failure simulation: re-deliver the final batch verbatim from
+        // its persisted parquet; the per-key last_batch guard must
+        // make the merge a no-op
+        applyBatch(s.read.parquet(lastPartialPath.get), lastBatchId)
+        val pre = s.read.parquet(preReplay)
+        val post = s.read.parquet(curPath.get)
+        val noop = pre.exceptAll(post).isEmpty && post.exceptAll(pre).isEmpty
+
+        post.select(col("user_id"), col("n_events"), col("sum_cents"),
+            lit(batchesApplied).as("batches_applied"), lit(noop).as("replay_noop"))
+          .orderBy(col("user_id"))
+    }
   }
 
   val qStreamExactlyOnceSql: String =
@@ -1488,30 +1448,22 @@ object Streams {
   // ms-granular watermark — proving the two state APIs implement the
   // same timer contract. Runs on the RocksDB provider (required by
   // transformWithState).
-  def qStreamTwsTimers(s: SparkSession, dir: String): DataFrame = {
+  def qStreamTwsTimers(s: SparkSession, dir: String): DataFrame = withConf(s, RocksDb) {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      runBounded(s, dir, "append") { stream =>
-        import s.implicits._
-        stream
-          .withWatermark("ts", "1 hour")
-          // the watermarked ts attribute must survive into the
-          // operator's direct input (the EventTimeTimeout lesson)
-          .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-            col("event_id"), col("ts"))
-          .as[(Long, Long, Long, java.sql.Timestamp)]
-          .groupByKey(_._1)
-          .transformWithState(
-            new TwsSessionizer(SessionGapUs), TimeMode.EventTime(), OutputMode.Append())
-          .toDF("user_id", "start_us", "n_events", "duration_us", "closed_by")
-      }.orderBy(col("user_id"), col("start_us"))
-    } finally prevProvider match {
-      case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    runBounded(s, dir, "append") { stream =>
+      import s.implicits._
+      stream
+        .withWatermark("ts", "1 hour")
+        // the watermarked ts attribute must survive into the
+        // operator's direct input (the EventTimeTimeout lesson)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"), col("ts"))
+        .as[(Long, Long, Long, java.sql.Timestamp)]
+        .groupByKey(_._1)
+        .transformWithState(
+          new TwsSessionizer(SessionGapUs), TimeMode.EventTime(), OutputMode.Append())
+        .toDF("user_id", "start_us", "n_events", "duration_us", "closed_by")
+    }.orderBy(col("user_id"), col("start_us"))
   }
 
   // ---------------------------------------------------------------

@@ -19,25 +19,15 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** Runs `body` with the session conf `key` set to `value`, then
-    * restores the previous setting. */
-  def withConf[A](key: String, value: String)(body: => A): A = {
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+    * restores the previous setting ([[GraftSession.withConf]]). */
+  def withConf[A](key: String, value: String)(body: => A): A =
+    GraftSession.withConf(spark, key -> value)(body)
 }
 
 object SparkSpec {
   // One session for the whole forked test JVM — suites share it.
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -3767,7 +3767,6 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("catalog function binds with the magic-method value; metadata col is hidden from *") {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     val got = spark.sql(
       "SELECT id, graft.knuth_val(id) AS kv FROM graft.range_0_100_4").collect()
     got.foreach(r => assert(r.getLong(1) == graft.sources.RangeTable.valOf(r.getLong(0))))

@@ -166,7 +166,6 @@ class DirSinkSpec extends SparkSpec {
   }
 
   test("managed catalog table: SQL lifecycle, NULL-safe delete, unsupported predicates refuse") {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     spark.sql("DROP TABLE IF EXISTS graft.spec_tbl")
     spark.sql("CREATE TABLE graft.spec_tbl (id BIGINT, tag STRING)")
     spark.sql("INSERT INTO graft.spec_tbl VALUES (1, 'a'), (2, 'b'), (3, NULL), (4, 'a')")
@@ -190,7 +189,6 @@ class DirSinkSpec extends SparkSpec {
   }
 
   test("MERGE INTO: group-based rewrite plans MergeRows+ReplaceData, all clause families apply") {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     spark.sql("DROP TABLE IF EXISTS graft.merge_spec")
     spark.sql("CREATE TABLE graft.merge_spec (id BIGINT NOT NULL, v BIGINT NOT NULL)")
     try {
@@ -221,7 +219,6 @@ class DirSinkSpec extends SparkSpec {
   }
 
   test("procedure catalog: grid lists, resolves, computes, and refuses unknowns") {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     val cat = new graft.sources.GraftCatalog()
     import org.apache.spark.sql.connector.catalog.Identifier
     val ns = Array("default")

@@ -1139,7 +1139,6 @@ class ExtensionSpec extends SparkSpec {
   }
 
   test("catalog aggregate function: update/merge path equals the built-in, NULL on empty") {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     // the custom V2 aggregate must agree with Spark's built-in bit_xor
     // across a multi-partition scan (merge correctness) and skip NULLs
     val rows = spark.sql(
