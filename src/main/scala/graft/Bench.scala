@@ -1,423 +1,200 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.TimeoutException
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Benchmark main: times every SparkEntry query at the configured SF
-  * and prints the cumulative JSON line every 25 queries plus a final
-  * complete one — overwriting semantics, last line wins, so a
-  * timeout-killed run still leaves every completed timing in the
-  * driver's recorded output tail (the driver's BENCH_r{N}.json
-  * input; r16 verdict item 2).
+import scala.collection.mutable
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.operators.Dedup
+
+/** Benchmark main: times every SparkEntry query, or the queries named
+  * as arguments, at `SPARK_GRAFT_SF_DIR` on `SPARK_GRAFT_CPUS` threads.
+  * One cold sweep measures each query once, in name order, with its jobs
+  * and executor CPU; a reading far above its expected wall ([[Board.expected]])
+  * ran under contention. The queries with the largest `wall - expected`
+  * are re-run once each until the re-runs have spent 15% of the sweep's
+  * wall; each query keeps its min. No history is consulted. The JSON line
+  * is printed every 25 queries, after the sweep and at the end (last line
+  * wins), so a killed run keeps every time it measured.
   *
-  * A warmup pass (q1 + one document scan) absorbs JVM/codegen/
-  * classloading cost so per-query numbers reflect steady state;
-  * queries run in sorted name order for run-to-run comparability.
-  * Pass policy: min-of-2 with a budgeted spike-triggered third pass,
-  * except that a query whose pass 1 confirms its [[BenchPins]]
-  * stamped min skips pass 2 (see the conditional-second-pass block
-  * below — the r16 verdict's driver-timeout mandate).
+  * Usage: runMain graft.Bench [query ...]
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val wallStart = System.nanoTime()
-    def wallElapsed: Double = (System.nanoTime() - wallStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = GraftSession.cpus
     val spark = GraftSession.local(cpus, "graft-bench")
-
-    // every failed warm-up step or pass, by name: a failure is never
-    // recorded as a time, and the JSON lists it under "failed"
-    val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def attempt[T](label: String)(body: => T): Option[T] =
-      try Some(body)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $label failed: $e")
-        failed.synchronized(failed += label)
-        None
-      }
-
-    // Warmup: exercise codegen, parquet footer reads, shuffle
-    // machinery; q29's warmup also pays the one-time bucket-table
-    // build so its measured time is the exchange-free join the
-    // pattern advertises, not the write.
-    Seq("q1_pricing_summary", "text_token_stats", "q29_bucketed_join").foreach(q =>
-      attempt(s"warmup:$q")(SparkEntry.queries.get(q).foreach(_(spark, sfDir).count())))
-
-    // BOARD-SCOPED signature bases (r15 verdict item 1b): the five
-    // per-family signature/assignment bases are corpus-snapshot
-    // tables a production deployment materializes once and shares;
-    // the bench builds them ONCE here (cost reported as
-    // pinned_base_build_sec) and pins them across the per-pass memo
-    // resets, so every family query — and especially the five
-    // composite measurement queries that re-run family sub-pipelines
-    // — measures its INCREMENTAL cost on the shared base. The
-    // derived pair/label memos still reset per pass (honest cold for
-    // each operator's own pipeline), and no pinned kind is the
-    // direct output of any gated query (the r5 memo-hit dishonesty
-    // guard — see Dedup.pinBases). SPARK_GRAFT_COLD_BASES=1 restores
-    // the r15-and-earlier fully-cold accounting for A/B comparisons.
-    val pinBases = !sys.env.get("SPARK_GRAFT_COLD_BASES").contains("1") &&
-      !sys.env.get("SPARK_GRAFT_WARM").contains("1")
-    // The five composite measurement queries additionally ride a
-    // COMPOSITE-ONLY tier holding the family sub-pipelines they
-    // re-run (pair lists, survivor sets, exact top-k): built once
-    // here with the tier enabled, consulted only while a composite
-    // is being measured, so every non-composite query still pays its
-    // own pipeline fully cold (Dedup.compositeMemo Scaladoc).
-    val composites = Set("dedup_ensemble", "pipe_release_gate",
-      "sim_recall_report", "pipe_curation_funnel", "pipeline_e2e")
-    // dev subset runs (SPARK_GRAFT_ONLY) skip the composite-tier
-    // build when no composite is selected — the tier only serves
-    // those five queries, so building it for a streaming-only A/B
-    // run would be pure warmup waste. The driver never sets ONLY, so
-    // round benches always build it.
-    val onlyEnv = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val wantComposites = onlyEnv.forall(o => composites.exists(o.contains))
-    val pinnedBaseSec: Double = if (pinBases) {
-      graft.operators.Dedup.pinBases(graft.operators.Dedup.PinnableBaseKinds)
-      val t0 = System.nanoTime()
-      attempt("warmup:pinned_bases")(graft.operators.Dedup.warmPinnedBases(spark, sfDir))
-      if (wantComposites) {
-        graft.operators.Dedup.setCompositeTier(true)
-        // constructing the frames populates the tier (compositeMemo
-        // localCheckpoints eagerly); no full materialization needed.
-        // CONCURRENT construction (r17): the five builds are
-        // independent job chains gated on per-kind memo locks, and on
-        // a host that taxes every job/stage handoff (this round's box
-        // intermittently dispatches at 30-100 ms/job) a sequential
-        // build serializes ~5x that latency — measured 112-206 s of
-        // the bench wall vs ~50 s quiet. Running them like
-        // warmPinnedBases' futures overlaps the latency (guide §2.6,
-        // overlap independent jobs); shared sub-pipelines still build
-        // once under their kind lock. Accounting is unchanged: the
-        // cost stays inside pinned_base_build_sec.
-        try {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          Await.result(Future.sequence(composites.toSeq.sorted.map(c =>
-            Future(attempt(s"warmup:$c")(SparkEntry.queries.get(c).foreach(_(spark, sfDir)))))),
-            Duration.Inf)
-        } finally graft.operators.Dedup.setCompositeTier(false)
-      }
-      (System.nanoTime() - t0) / 1e9
-    } else 0.0
-
-    // Fixed-work calibration: a constant-size in-memory aggregation
-    // whose cost is independent of SF and of this library's code. Run
-    // before and after the query sweep; on an idle box it is stable
-    // (~1s), so an inflated or divergent pair tells the driver the
-    // box was contended and the per-query numbers are not comparable
-    // across rounds (r04's driver bench ran 4-6x hot for exactly this
-    // reason, invisibly).
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(500000000L).selectExpr("sum(id * 2 + 1) AS s").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Job-LATENCY probe, the calibration's second dimension: 10
-    // empty one-row jobs, measuring scheduler/driver round-trip cost.
-    // Host contention hits this dimension FIRST and hardest — a
-    // window measured this round ran job-count-heavy queries
-    // (iterative graph loops, micro-batch streams) at 2-4x their
-    // pins while the CPU calibration still read idle (~0.4s): the
-    // inflation lived BETWEEN jobs, in per-job latency, invisible to
-    // a single 32-thread arithmetic job. The skip rule's load scale
-    // takes the WORSE of the two dimensions.
-    def latencyProbe(): Double = {
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < 10) { spark.range(1L).count(); i += 1 }
-      (System.nanoTime() - t0) / 1e9
-    }
-    // all readings kept and stamped: index 0 is the opening reading,
-    // one more is appended every 50 queries (the loadScale inputs),
-    // and emit() appends the closing CPU reading on the final line
-    val CalRef = 0.45 // idle-box CPU calibration reference (r14-r17)
-    val LatRef = 0.25 // idle-box 10-job latency reference
-    val calibrations = scala.collection.mutable.ArrayBuffer[Double](calibrate())
-    val latencies = scala.collection.mutable.ArrayBuffer[Double](latencyProbe())
-    def loadScale: Double = math.min(4.0, math.max(1.0,
-      math.max(calibrations.last / CalRef, latencies.last / LatRef)))
-    var thirdPassBudget: Double = 30.0
-
-    // CONDITIONAL SECOND PASS (r16 verdict item 1a): two rounds of
-    // rc=124 driver benches proved the full min-of-2 sweep (~385s of
-    // pass-2 wall at r16) does not fit the driver budget. For a
-    // query whose plan did NOT change this round, the steady-state
-    // min is already stamped in BenchPins (the r16 record); pass 1
-    // landing within the skip rule of that pin CONFIRMS stability,
-    // and pass 2 would spend timeout margin re-measuring a known
-    // number. Pass 2 (and the third-pass spike logic) still runs
-    // when: the query is new/restructured (no pin), pass 1 exceeds
-    // the rule (regression or load spike — min-of-2 keeps the min
-    // honest), the SF is not the pinned sf0.1, or the A/B escape
-    // SPARK_GRAFT_FULL_PASSES=1 is set. The rule, pin source, and
-    // per-query pass counts are stamped in-band so the JSON is
-    // self-describing (the r10 mode-stamp discipline).
-    //   skip rule: pass1 <= (1.5*pin + 0.3s) * loadScale. The 1.5x
-    //   band is the verdict's; the +0.3s absolute slack keeps
-    //   sub-second queries (where pass-1 codegen/JIT dominates and
-    //   routinely doubles a 0.3s steady state) from pointlessly
-    //   re-running pass 2. loadScale is the LOAD-AWARE factor a
-    //   static rule lacks: this repo's first full-board run of the
-    //   rule landed in a ~2-3x host-steal window — every pass
-    //   inflated together, pass 1 blew past the static band for 222
-    //   of 352 queries, and the "saving" run took 1649s wall (the
-    //   exact sustained-contention failure mode that killed the r15
-    //   and r16 driver benches). The calibration job (below) measures
-    //   current box speed against the ~0.45s idle reference, is
-    //   refreshed every 50 queries, and scales the band by
-    //   clamp(cal/0.45, 1, 4): under contention pass 1 is judged
-    //   against what the PIN would cost on THIS box right now, so
-    //   stable queries still skip and the wall stays ~(pass-1 sum)
-    //   instead of doubling. All calibration readings are stamped
-    //   in-band, so a scaled-skip run is self-describing.
-    //
-    //   Backstop: even with scaling, a pathological window could
-    //   push many pass-1 readings past the scaled band; pass-2
-    //   re-measures for PINNED queries draw from a shared 240s wall
-    //   budget (unpinned/new queries are exempt — they have no
-    //   history and always get min-of-2). When it drains, pinned
-    //   queries report pass 1 with the skip counted in
-    //   pass2_budget_skips — bounded wall, disclosed accounting.
-    val fullPasses = sys.env.get("SPARK_GRAFT_FULL_PASSES").contains("1")
-    val pinsActive = !fullPasses && sfDir.stripSuffix("/").endsWith("sf0.1")
-    def pinOf(name: String): Option[Double] =
-      if (pinsActive) BenchPins.Mins.get(name) else None
-    var pass2Budget: Double = 240.0
-    var pass2BudgetSkips = 0
-    var pass2LoadSkips = 0
-    // END-OF-BOARD REPAIR accounting (r18) — see the repair block
-    // after the sweep. Stamped in-band so the JSON is self-describing.
-    var repairRuns = 0
-    var repairSec = 0.0
-    var repairReclaimedSec = 0.0
-    val repairWallCeiling =
-      sys.env.getOrElse("SPARK_GRAFT_WALL_CEILING", "660").toDouble
-
-    // noop sink: materializes every output column through the full
-    // plan (count() would let Catalyst prune projections and drop
-    // final sorts, under-measuring expression-heavy queries) without
-    // shipping rows to the driver. Up to two passes per query, min
-    // reported: the first pass pays one-time codegen/JIT (amortized
-    // in any real deployment) and single-pass numbers on this shared
-    // box swing 2-5x run to run; min-of-2 is the steady-state
-    // throughput the library actually delivers, and the history pin
-    // (above) is what licenses skipping pass 2 when pass 1 already
-    // confirms the stamped steady state. If two passes disagree >3x,
-    // a load spike likely hit one of them — a third pass keeps the
-    // min honest.
-    // Dev-only subset filter (SPARK_GRAFT_ONLY=q1,q2): bench single
-    // queries under the exact harness (warmup + memo reset + min-of-2)
-    // the per-round record uses, so A/B numbers are comparable. The
-    // driver never sets it, so round benches are always the full sweep.
-    val only = onlyEnv
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // results accumulate here so the cumulative JSON line can be
-    // emitted DURING the sweep (r16 verdict item 2): the driver
-    // records the process output tail, so when a timeout kills the
-    // run mid-board the last emitted line still carries every
-    // completed query's timing instead of zero data. Overwriting
-    // semantics — each line is the full cumulative record, last one
-    // wins; the final emission (partial=false, with the closing
-    // calibration) is the round stamp.
-    val results = scala.collection.mutable.ArrayBuffer[(String, Double, Double, Int)]()
-    def emit(partial: Boolean, calAfter: Double): Unit = {
-      val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val qsMean = results.map { case (k, _, m, _) => "\"" + k + "\":" + m }
-        .mkString("{", ",", "}")
-      val qsPasses = results.map { case (k, _, _, p) => "\"" + k + "\":" + p }
-        .mkString("{", ",", "}")
-      val total = results.map(_._2).sum
-      val totalMean = results.map(_._3).sum
-      val skipped = results.count(_._4 == 1)
-      // self-identifying mode stamp (r10 ADVICE): a warm-memo run is
-      // not comparable with the cold per-round record, so the JSON
-      // says which one it was instead of relying on the environment
-      val mode =
-        if (sys.env.get("SPARK_GRAFT_WARM").contains("1")) "warm"
-        else if (pinBases) "cold+pinned-bases"
-        else "cold"
-      val skipRule =
-        if (pinsActive)
-          s""","skip_rule":"pass2 skipped when pass1 <= (1.5*pin + 0.3s) * clamp(max(cal/$CalRef, lat/$LatRef), 1, 4); band re-checked after a decision-time probe (rate-limited to one per 10 queries); forced skip when loadScale >= 2.5 (re-measuring under heavy load is window noise); after the sweep, queries still outside the UNSCALED band are re-measured worst-excess-first while wall < ${repairWallCeiling}s (min-merged end-of-board repair: a late quiet window reclaims honest numbers a mid-run contention window would otherwise ship)","pin_source":"${BenchPins.Source}","pass2_skipped":$skipped,"pass2_run":${results.size - skipped},"pass2_budget_skips":$pass2BudgetSkips,"pass2_load_skips":$pass2LoadSkips,"repair_runs":$repairRuns,"repair_sec":${f"$repairSec%.1f"},"repair_reclaimed_sec":${f"$repairReclaimedSec%.1f"},"repair_wall_ceiling_sec":$repairWallCeiling"""
-        else ""
-      val cals = (calibrations.toSeq ++ (if (partial) Nil else Seq(calAfter)))
-        .mkString("[", ",", "]")
-      val lats = latencies.mkString("[", ",", "]")
-      val failedJson = failed.synchronized(failed.map("\"" + _ + "\"").mkString("[", ",", "]"))
-      println(s"""{"metric":"total","value":$total,"unit":"sec","passes":2,"agg":"min","mode":"$mode","partial":$partial,"completed":${results.size},"of":${selected.size},"failed":$failedJson$skipRule,"pinned_base_build_sec":$pinnedBaseSec,"mean":$totalMean,"calibration_sec":$cals,"latency_sec":$lats,"queries":$qs,"queries_mean":$qsMean,"queries_passes":$qsPasses,"sf":"$sfDir"}""")
-    }
-    // one timed cold pass of one query — shared by the sweep and the
-    // end-of-board repair loop so both measure under the exact same
-    // methodology (memo reset, composite tier, noop sink, cache clear).
-    // None when the query throws: a failed pass has no time.
-    def runPass(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      // drop object-level memos (LSH pair list, cluster labels) so
-      // every pass pays the COLD pipeline: without this the second
-      // pass — and any query after a memo-sharing sibling — clocks a
-      // memo hit (dedup_clusters read 0.07s in r5 when its cold cost
-      // is ~30x that). The memo is the right library design; the
-      // bench's job is the honest cold number.
-      // Dedup.resetMemos also clears the shared keyed base registry
-      // (Similarity's assign memo lives there)
-      // Dev-only SPARK_GRAFT_WARM=1 keeps memos across queries — the
-      // PRODUCTION number (signature/label/edge tables built once per
-      // corpus snapshot and shared). The driver never sets it, so
-      // round benches stay honest-cold and cross-round comparable.
-      if (!sys.env.get("SPARK_GRAFT_WARM").contains("1")) SparkEntry.resetMemos()
-      if (pinBases && composites(name))
-        graft.operators.Dedup.setCompositeTier(true)
-      val t0 = System.nanoTime()
-      val ok =
-        try attempt(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-        finally graft.operators.Dedup.setCompositeTier(false)
-      val dt = (System.nanoTime() - t0) / 1e9
-      // unpersist per-query cached intermediates so later queries
-      // aren't measured under accrued executor-memory pressure
-      spark.catalog.clearCache()
-      ok.map(_ => dt)
-    }
-    // rate limit for the decision-time re-probe (r17 ADVICE): under a
-    // sustained 1-2.4x contention window every out-of-band pinned
-    // query would otherwise pay a fresh ~0.5-1.7s probe — minutes of
-    // probe wall in exactly the regime the probe is meant to protect.
-    // One decision-time probe per 10 queries; between probes the
-    // band uses the latest stamped reading.
-    var lastProbeAt = -10
-    selected.foreach { case (name, fn) =>
-      def pass(): Option[Double] = runPass(name, fn)
-      // a failed pass 1 leaves the query out of the times entirely
-      pass().foreach { p1 =>
-        val pin = pinOf(name)
-        def inBand(p: Double): Boolean = p1 <= (1.5 * p + 0.3) * loadScale
-        // DECISION-TIME recalibration (r17): the periodic probes sample
-        // every 50 queries, but the contention windows measured on this
-        // box start and end BETWEEN samples — run 2 of the r17 board
-        // watched the ml_* block read 5-20x its pins against a stale
-        // low loadScale, fail the band, and spend ~45 s re-measuring
-        // numbers that were pure window noise (both passes inflated
-        // together — the exact r15/r16 driver-kill mode). So a pass-1
-        // reading outside the band first re-probes the box NOW (~0.5 s)
-        // and re-evaluates; if the band still fails under a
-        // heavily-loaded reading (loadScale >= 2.5 after the clamp), a
-        // re-measure cannot produce a steady-state number either — the
-        // pin REMAINS the best-known steady state, pass 1 is reported
-        // as measured (visibly inflated, min == mean), and the forced
-        // skip is counted in pass2_load_skips. Pass 2 runs only when
-        // the box looks sane enough (< 2.5x) for min-of-2 to mean
-        // something — a real regression on a quiet box still gets its
-        // honest two passes, and all decision-time probe readings land
-        // in the stamped calibration arrays.
-        val times =
-          if (pin.exists(inBand)) Seq(p1)
-          else if (pin.isDefined && results.size - lastProbeAt >= 10 && {
-            calibrations += calibrate(); latencies += latencyProbe()
-            lastProbeAt = results.size
-            pin.exists(inBand)
-          }) Seq(p1)
-          else if (pin.isDefined && loadScale >= 2.5) {
-            pass2LoadSkips += 1
-            Seq(p1)
-          } else if (pin.isDefined && pass2Budget <= 0) {
-            // backstop: sustained contention drained the pass-2 wall
-            // budget — report pass 1, count the forced skip in-band
-            pass2BudgetSkips += 1
-            Seq(p1)
-          } else {
-            val p2 = pass()
-            if (pin.isDefined) p2.foreach(pass2Budget -= _)
-            val two = p1 +: p2.toSeq
-            // the disagreement-triggered third pass keeps the min honest
-            // when ONE pass ate a load spike — but under a sustained spike
-            // it fires for every query in the window and adds wall exactly
-            // when the driver's timeout is at risk (the r15 rc=124 failure
-            // mode). A shared 30s budget bounds that: after it drains,
-            // spiky queries report min-of-2 (possibly inflated — visible
-            // via the mean alongside) instead of growing the run.
-            if (two.max / two.min > 3.0 && thirdPassBudget > 0) {
-              val t = pass()
-              t.foreach(thirdPassBudget -= _)
-              two ++ t
-            } else two
-          }
-        // headline stays the per-query min (steady-state throughput for
-        // multi-pass queries; the history-confirmed pass-1 reading for
-        // skipped ones); the mean is reported alongside so a noisy pass
-        // on this shared box is visible in the JSON instead of
-        // masquerading as a cross-round regression
-        results += ((name, times.min, times.sum / times.size, times.size))
-        // refresh the load scale every 50 queries (~0.5-1.5s each) so a
-        // contention window that starts mid-board is seen mid-board
-        if (results.size % 50 == 0 && results.size < selected.size) {
-          calibrations += calibrate()
-          latencies += latencyProbe()
-          lastProbeAt = results.size
-        }
-        if (results.size % 25 == 0 && results.size < selected.size)
-          emit(partial = true, calAfter = -1.0)
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) => args.isEmpty || args.contains(n) }
+    val board = new Board(spark, sfDir, cpus, queries)
+    board.failed ++= warmUp(spark, sfDir)
+    // The signature bases are built once and survive the memo resets, so each
+    // family query measures its own pipeline on them (Dedup.pinBases). The composite
+    // tier holds the sub-pipelines the composites re-run, built when one is selected.
+    Dedup.pinBases(Dedup.PinnableBaseKinds)
+    board.pinnedBaseSec = secs {
+      board.failed ++= failures(Seq("warmup:pinned_bases" -> (() => Dedup.warmPinnedBases(spark, sfDir))))
+      if (queries.exists(q => Composites(q._1))) {
+        Dedup.setCompositeTier(true)
+        try board.failed ++= Await.result(Future.sequence(Composites.toSeq.sorted.map(c =>
+          Future(failures(Seq(s"warmup:$c" -> (() => SparkEntry.queries(c)(spark, sfDir))))))),
+          Duration.Inf).flatten
+        finally Dedup.setCompositeTier(false)
       }
     }
-    // END-OF-BOARD REPAIR (r18). Evidence: the r17 DRIVER bench ran
-    // its whole sweep at 3-28x job-dispatch latency (stamped latency
-    // probes 0.85-7.0s vs the 0.25s idle reference), so the forced
-    // load-skip shipped pass-1 contention-window readings as the
-    // recorded minimum for every query whose measurement landed in a
-    // bad window — q35_corr_exact recorded 28.7s against a 1.1s pin,
-    // mm_resize 12.6s against ~2s, and the temporal_* block carried
-    // +67s of pure window noise (BENCH_r17.json vs BENCH_r17_c8.json
-    // vs BENCH_LOCAL_r17.json triangulation). Skipping the re-measure
-    // DURING a window is right (both passes inflate together — the
-    // r15/r16 kill mode); never re-measuring at all is what turned
-    // ~200s of noise into recorded data. So: after the sweep, every
-    // query whose recorded min still exceeds its UNSCALED band
-    // (1.5*pin + 0.3s) is re-measured worst-absolute-excess first,
-    // min-merged, while total bench wall stays under the ceiling —
-    // windows on both measured boxes last minutes, so the end of a
-    // ~10-minute board is very likely to see a quiet stretch. The
-    // ceiling bounds the cost: a box that stays contended to the end
-    // spends at most (ceiling - sweep) extra wall and keeps its sweep
-    // numbers; it can never make a run longer than the ceiling plus
-    // one query. Methodology is unchanged per pass (cold memos, noop
-    // sink, min-of-N aggregation — N just grows by the repair runs,
-    // stamped per query in queries_passes); this is measurement
-    // repair, not caching: every repair run recomputes the query from
-    // the parquet inputs.
-    if (pinsActive && results.nonEmpty) {
-      emit(partial = true, calAfter = -1.0) // sweep-complete snapshot
-      val fnByName = selected.toMap
-      def band(p: Double): Double = 1.5 * p + 0.3
-      var improving = true
-      var sweeps = 0
-      while (improving && sweeps < 3 && wallElapsed < repairWallCeiling) {
-        improving = false
-        sweeps += 1
-        val cands = results.zipWithIndex.collect {
-          case ((n, v, _, _), i)
-            if pinOf(n).exists(p => v - band(p) > 0.5) =>
-            (i, v - band(pinOf(n).get))
-        }.sortBy(-_._2)
-        for ((i, _) <- cands if wallElapsed < repairWallCeiling) {
-          val (n, v, m, p) = results(i)
-          repairRuns += 1
-          // a failed repair pass is named in "failed" and merges nothing
-          runPass(n, fnByName(n)).foreach { t =>
-            repairSec += t
-            if (t < v) {
-              repairReclaimedSec += v - t
-              improving = true
-            }
-            results(i) = (n, math.min(v, t), (m * p + t) / (p + 1), p + 1)
-          }
-          if (repairRuns % 5 == 0) emit(partial = true, calAfter = -1.0)
-        }
-      }
-    }
-    val calAfter = calibrate()
-    emit(partial = false, calAfter = calAfter)
+    board.sweep()
+    println(board.json(partial = true))
+    board.reRun()
+    board.probe()
+    println(board.json(partial = false))
     spark.stop()
+  }
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Composite queries, measured with [[Dedup.compositeMemo]]'s tier on. */
+  val Composites = Set("dedup_ensemble", "pipe_release_gate", "sim_recall_report", "pipe_curation_funnel", "pipeline_e2e")
+
+  /** Jobs, stages, tasks and executor CPU on one session since [[reset]]. */
+  final class Counters extends SparkListener {
+    val jobs, stages, tasks = new AtomicInteger
+    val cpuNs = new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      Option(t.taskMetrics).foreach(m => cpuNs.addAndGet(m.executorCpuTime))
+    }
+    def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0); cpuNs.set(0) }
+  }
+  def counters(s: SparkSession): Counters = { val c = new Counters; s.sparkContext.addSparkListener(c); c }
+
+  /** One measured pass: seconds (Left if the query threw), counts and the conf keys it changed. */
+  final case class Pass(time: Either[Throwable, Double], jobs: Int, stages: Int, tasks: Int, cpuS: Double, drift: Seq[String])
+
+  /** The measured pass of Bench and JobCensus: reset the memos (a cold pipeline) and
+    * counters, write to the noop sink (every column materialized, nothing shipped) under
+    * job description `name`, drain the listener bus so the counts are the query's own,
+    * clear the cache. A bus that does not drain fails the pass: its counts are not the
+    * query's. `compositeTier` opens the composite memo tier for this pass only. */
+  def measure(s: SparkSession, c: Counters, sfDir: String, name: String, q: Query, compositeTier: Boolean = false): Pass = {
+    SparkEntry.resetMemos()
+    val settled = Bridge.drainListenerBus(s)
+    c.reset()
+    s.sparkContext.setJobDescription(name)
+    val (time, drift) = GraftSession.confDrift(s) {
+      Dedup.setCompositeTier(compositeTier)
+      val t0 = System.nanoTime()
+      try {
+        q(s, sfDir).write.format("noop").mode("overwrite").save()
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(e) }
+      finally { Dedup.setCompositeTier(false); s.sparkContext.setJobDescription(null) }
+    }
+    val counted = Bridge.drainListenerBus(s)
+    s.catalog.clearCache()
+    Pass(time.filterOrElse(_ => settled && counted, new TimeoutException("listener bus did not drain")),
+      c.jobs.get, c.stages.get, c.tasks.get, c.cpuNs.get / 1e9, drift)
+  }
+
+  /** Runs each labelled step; returns the labels of those that threw, printed on stderr. */
+  private def failures(steps: Seq[(String, () => Any)]): Seq[String] =
+    steps.flatMap { case (label, step) =>
+      try { step(); Nil }
+      catch { case e: Throwable => System.err.println(s"[bench] $label failed: $e"); Seq(label) }
+    }
+
+  private def secs(body: => Any): Double = { val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9 }
+
+  /** The warm-up of Bench and JobCensus: every table's footer-schema job
+    * ([[Tables.load]]) is paid here, so a query's job count does not depend
+    * on which queries ran before it; q1, a document scan and q29 (which
+    * builds its bucketed table) warm codegen. Returns the failed steps. */
+  def warmUp(s: SparkSession, sfDir: String): Seq[String] = failures(
+    Tables.names.map(t => s"warmup:$t" -> (() => Tables.load(s, sfDir, t))) ++
+      Seq("q1_pricing_summary", "text_token_stats", "q29_bucketed_join")
+        .map(q => s"warmup:$q" -> (() => SparkEntry.queries(q)(s, sfDir).count())))
+
+  /** The re-run order: queries with wall above expected that did not fail, largest
+    * excess first, taken while the spend so far is below `budget`. `cost(q)` is what
+    * re-running q spent; the bench passes the re-run itself (measured spend). */
+  def reruns(excess: Seq[(String, Double)], failed: String => Boolean, budget: Double)(cost: String => Double): Seq[(String, Double)] = {
+    var spent = 0.0
+    excess.filter { case (q, e) => e > 0 && !failed(q) }.sortBy { case (q, e) => (-e, q) }
+      .takeWhile { case (q, _) => spent < budget && { spent += cost(q); true } }
+  }
+
+  /** A query's successful passes: min, sum and count. */
+  final case class Timing(min: Double, sum: Double, n: Int) { def +(t: Double) = Timing(math.min(min, t), sum + t, n + 1) }
+
+  /** One board run: the sweep, the re-runs and the JSON line. */
+  final class Board(s: SparkSession, sfDir: String, cpus: Int, queries: Seq[(String, Query)]) {
+    private val counters = Bench.counters(s)
+    val times = mutable.LinkedHashMap[String, Timing]()
+    val counts = mutable.LinkedHashMap[String, (Int, Double)]() // jobs, cpu_s of the sweep pass
+    val failed = mutable.LinkedHashSet[String]()
+    val drift = mutable.LinkedHashMap[String, Seq[String]]()
+    val calibrations, latencies = mutable.ArrayBuffer[Double]()
+    var rerun: Seq[(String, Double)] = Nil
+    var pinnedBaseSec, sweepSec, rerunSec = 0.0
+
+    /** Readings only: a fixed in-memory aggregation (box CPU speed) and
+      * 10 empty jobs (job-dispatch latency; the sweep's L). */
+    def probe(): Unit = {
+      calibrations += secs(s.range(500000000L).selectExpr("sum(id * 2 + 1)").collect())
+      latencies += secs((1 to 10).foreach(_ => s.range(1L).count()))
+    }
+
+    /** Measures `name` once and min-merges a successful pass. */
+    def run(name: String, q: Query): Pass = {
+      val p = measure(s, counters, sfDir, name, q, Composites(name))
+      if (p.drift.nonEmpty) drift(name) = (drift.getOrElse(name, Nil) ++ p.drift).distinct
+      p.time match {
+        case Left(e) => System.err.println(s"[bench] $name failed: $e"); failed += name
+        case Right(t) => times(name) = times.get(name).fold(Timing(t, t, 1))(_ + t)
+      }
+      p
+    }
+
+    def sweep(): Unit = {
+      if (latencies.isEmpty) probe()
+      sweepSec = secs(queries.zipWithIndex.foreach { case ((name, q), i) =>
+        val p = run(name, q)
+        if (p.time.isRight) counts(name) = (p.jobs, p.cpuS)
+        if ((i + 1) % 50 == 0 && i + 1 < queries.size) probe()
+        if ((i + 1) % 25 == 0 && i + 1 < queries.size) println(json(partial = true))
+      })
+    }
+
+    /** A swept query's expected wall: its executor CPU spread over the
+      * cpus plus its jobs at the quietest latency of the run, so a probe
+      * taken under contention does not excuse the readings taken with it. */
+    def expected(name: String): Double = { val (jobs, cpu) = counts(name); cpu / cpus + jobs * latencies.min / 10 }
+    def excess: Seq[(String, Double)] = counts.keys.toSeq.map(n => n -> (times(n).min - expected(n)))
+
+    def reRun(): Unit = rerunSec = secs {
+      val fns = queries.toMap
+      rerun = reruns(excess, failed, 0.15 * sweepSec)(n => secs(run(n, fns(n))))
+    }
+
+    def json(partial: Boolean): String = {
+      def obj[V](m: Iterable[(String, V)])(f: V => Any): String =
+        m.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+      def strs(xs: Iterable[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"metric":"total","value":${times.values.map(_.min).sum},"unit":"sec","agg":"min","mode":"cold+pinned-bases",""" +
+        s""""partial":$partial,"completed":${times.size},"of":${queries.size},"failed":${strs(failed)},""" +
+        s""""pinned_base_build_sec":$pinnedBaseSec,"sweep_sec":$sweepSec,"rerun_sec":$rerunSec,""" +
+        s""""reruns":${obj(rerun)(identity)},"calibration_sec":${calibrations.mkString("[", ",", "]")},""" +
+        s""""latency_sec":${latencies.mkString("[", ",", "]")},"queries":${obj(times)(_.min)},""" +
+        s""""queries_mean":${obj(times)(t => t.sum / t.n)},"queries_passes":${obj(times)(_.n)},""" +
+        s""""queries_jobs":${obj(counts)(_._1)},"queries_cpu_s":${obj(counts)(_._2)},""" +
+        s""""queries_expected_s":${obj(counts.keys.map(n => n -> expected(n)))(identity)},"conf_drift":${obj(drift)(strs)},"sf":"$sfDir"}"""
+    }
   }
 }

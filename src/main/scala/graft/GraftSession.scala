@@ -168,6 +168,20 @@ object GraftSession {
     }
   }
 
+  /** Executor threads for the mains' local session: the one reader of
+    * `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  /** Runs `body` and returns its result with the session conf keys it
+    * left changed (set, unset or given another explicit value), sorted.
+    * A query must leave the conf as it found it ([[withConf]] scopes). */
+  def confDrift[T](s: SparkSession)(body: => T): (T, Seq[String]) = {
+    val before = s.conf.getAll
+    val out = body
+    val after = s.conf.getAll
+    (out, (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k)).toSeq.sorted)
+  }
+
   /** Local session on `cpus` threads with matching shuffle width. */
   def local(cpus: Int, appName: String = "graft"): SparkSession = {
     val s = builder(s"local[$cpus]", cpus).appName(appName).getOrCreate()

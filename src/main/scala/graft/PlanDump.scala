@@ -19,8 +19,7 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, names) = (args(0), args(1), args.drop(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus, "graft-plandump")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-plandump")
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -20,8 +20,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus, "graft-profile")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-profile")
 
     val stages = ArrayBuffer.empty[StageRow]
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -59,8 +59,7 @@ object Scale10x {
     val copies = if (args.length > 2) args(2).toInt else 10
     val mode = if (args.length > 3) args(3) else ""
     val dupStress = mode == "prefix"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus, "graft-scale10x")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-scale10x")
     import org.apache.hadoop.fs.Path
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(out), true)

@@ -8,8 +8,7 @@ object Verify {
     // args 3+: optional query-name filter (dev loop); the driver's
     // 2-arg invocation dumps every query, unchanged
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus, "graft-verify")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // a query must leave the session conf as it found it
     // (GraftSession.withConf scopes); any key it changed is reported
@@ -17,20 +16,19 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      val before = spark.conf.getAll
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      val (_, keys) = GraftSession.confDrift(spark) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
+        // release per-query persisted intermediates (LSH signature
+        // frames etc.) so executor memory doesn't accrue across queries
+        spark.catalog.clearCache()
       }
-      // release per-query persisted intermediates (LSH signature
-      // frames etc.) so executor memory doesn't accrue across queries
-      spark.catalog.clearCache()
-      val after = spark.conf.getAll
-      val keys = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
       if (keys.nonEmpty) {
         drifted += 1
-        System.err.println(s"[verify] conf drift: $name ${keys.toSeq.sorted.mkString(",")}")
+        System.err.println(s"[verify] conf drift: $name ${keys.mkString(",")}")
       }
     }
     System.err.println(s"[verify] conf drift: $drifted queries")

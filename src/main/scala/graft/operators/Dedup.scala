@@ -1482,8 +1482,7 @@ ORDER BY tau_x10k"""
     * `pinned_base_build_sec`) and every consumer query then measures
     * its INCREMENTAL cost on the shared corpus-snapshot base — the
     * production shape (signature/assignment tables are materialized
-    * once per snapshot and shared; the SPARK_GRAFT_WARM doc calls
-    * this the production number). Sanctioned by the r15 verdict
+    * once per snapshot and shared). Sanctioned by the r15 verdict
     * (item 1b: "shared signature bases compute once per board run").
     *
     * HONESTY RULE: never pin a kind that some gated query outputs

@@ -3,11 +3,17 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
 
-/** The one `private[sql]` doorway a library-defined logical operator
-  * needs: wrapping a custom [[LogicalPlan]] node back into a public
-  * DataFrame. Spark's own connectors and every custom-plan library
-  * use exactly this package-placement pattern; everything else in
-  * graft stays on public API.
+/** The `private[spark]` doorways graft needs, in one place:
+  *
+  *  - wrapping a library-defined [[LogicalPlan]] node back into a
+  *    public DataFrame ([[ofRows]], [[logicalPlan]]) — Spark's own
+  *    connectors and every custom-plan library use exactly this
+  *    package-placement pattern;
+  *  - draining the listener bus ([[drainListenerBus]]), so a measured
+  *    pass reads its job, stage and task counters only after every
+  *    event of its jobs has been delivered.
+  *
+  * Everything else in graft stays on public API.
   */
 object Bridge {
   def ofRows(s: org.apache.spark.sql.SparkSession, plan: LogicalPlan): org.apache.spark.sql.DataFrame =
@@ -15,4 +21,10 @@ object Bridge {
 
   def logicalPlan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
     df.asInstanceOf[DataFrame].queryExecution.analyzed
+
+  /** Blocks until every listener event posted so far has been handled;
+    * false if the bus is still busy after `timeoutMs`. */
+  def drainListenerBus(s: org.apache.spark.sql.SparkSession, timeoutMs: Long = 60000): Boolean =
+    try { s.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 }
