@@ -9,11 +9,12 @@ import graft.sources.{CsvSource, PrnSource}
 
 /** Fidelity tests for the ETL core, ported 1:1 from the reference's
   * suites (see FIXTURES.md §3 for the mapping). The Workbook2 sample
-  * files are read from the read-only reference checkout. */
+  * files are the bundled fixtures `fixtures/workbook2.{csv,prn}` on the
+  * test classpath (FIXTURES.md §2). */
 class EtlSpec extends SparkSpec {
 
-  private val csvPath = "/root/reference/Workbook2.csv"
-  private val prnPath = "/root/reference/Workbook2.prn"
+  private val csvPath = resourcePath("/fixtures/workbook2.csv")
+  private val prnPath = resourcePath("/fixtures/workbook2.prn")
 
   private def rows(df: DataFrame): Seq[Map[String, String]] = {
     import org.apache.spark.sql.functions.col

@@ -96,7 +96,7 @@ class NormalizePropSpec extends SparkSpec {
   }
 
   test("golden files: CLI output for Workbook2 is byte-stable") {
-    val csvDf = CsvSource.read(spark, "/root/reference/Workbook2.csv")
+    val csvDf = CsvSource.read(spark, resourcePath("/fixtures/workbook2.csv"))
     val json = graft.sinks.JsonSink.render(csvDf)
     val html = graft.sinks.HtmlSink.render(csvDf)
     def golden(name: String): String =

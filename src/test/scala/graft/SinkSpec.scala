@@ -2,7 +2,6 @@ package graft
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Paths
 
 import org.apache.spark.SparkException
 import org.scalacheck.Gen
@@ -16,9 +15,6 @@ import graft.sources.{CsvSource, PrnSource}
   * two empty documents, row order across many input splits, and an
   * empty output when the conversion's job fails. */
 class SinkSpec extends SparkSpec {
-
-  private def resourcePath(name: String): String =
-    Paths.get(getClass.getResource(name).toURI).toString
 
   private def resourceText(name: String): String =
     new String(getClass.getResourceAsStream(name).readAllBytes(), UTF_8)

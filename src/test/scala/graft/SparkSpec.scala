@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +17,11 @@ trait SparkSpec extends AnyFunSuite {
     Files.write(f, content.getBytes(encoding))
     f.toString
   }
+
+  /** The file path of the test-classpath resource `name`, e.g. the
+    * bundled Workbook2 sample at `/fixtures/workbook2.csv`. */
+  def resourcePath(name: String): String =
+    Paths.get(getClass.getResource(name).toURI).toString
 
   /** Runs `body` with the session conf `key` set to `value`, then
     * restores the previous setting ([[GraftSession.withConf]]). */
