@@ -4,20 +4,16 @@ import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable
-import scala.concurrent.{Await, Future}
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.duration.Duration
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.operators.Dedup
-
 /** Benchmark main: times every SparkEntry query, or the queries named
   * as arguments, at `SPARK_GRAFT_SF_DIR` on `SPARK_GRAFT_CPUS` threads.
   * One cold sweep measures each query once, in name order, with its jobs
-  * and executor CPU; a reading far above its expected wall ([[Board.expected]])
+  * and executor CPU; a query that throws or drifts the session conf is
+  * named in `failed`. A reading far above its expected wall ([[Board.expected]])
   * ran under contention. The queries with the largest `wall - expected`
   * are re-run once each until the re-runs have spent 15% of the sweep's
   * wall; each query keeps its min. No history is consulted. The JSON line
@@ -34,20 +30,6 @@ object Bench {
     val queries = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) => args.isEmpty || args.contains(n) }
     val board = new Board(spark, sfDir, cpus, queries)
     board.failed ++= warmUp(spark, sfDir)
-    // The signature bases are built once and survive the memo resets, so each
-    // family query measures its own pipeline on them (Dedup.pinBases). The composite
-    // tier holds the sub-pipelines the composites re-run, built when one is selected.
-    Dedup.pinBases(Dedup.PinnableBaseKinds)
-    board.pinnedBaseSec = secs {
-      board.failed ++= failures(Seq("warmup:pinned_bases" -> (() => Dedup.warmPinnedBases(spark, sfDir))))
-      if (queries.exists(q => Composites(q._1))) {
-        Dedup.setCompositeTier(true)
-        try board.failed ++= Await.result(Future.sequence(Composites.toSeq.sorted.map(c =>
-          Future(failures(Seq(s"warmup:$c" -> (() => SparkEntry.queries(c)(spark, sfDir))))))),
-          Duration.Inf).flatten
-        finally Dedup.setCompositeTier(false)
-      }
-    }
     board.sweep()
     println(board.json(partial = true))
     board.reRun()
@@ -57,9 +39,6 @@ object Bench {
   }
 
   type Query = (SparkSession, String) => DataFrame
-
-  /** Composite queries, measured with [[Dedup.compositeMemo]]'s tier on. */
-  val Composites = Set("dedup_ensemble", "pipe_release_gate", "sim_recall_report", "pipe_curation_funnel", "pipeline_e2e")
 
   /** Jobs, stages, tasks and executor CPU on one session since [[reset]]. */
   final class Counters extends SparkListener {
@@ -82,24 +61,24 @@ object Bench {
     * counters, write to the noop sink (every column materialized, nothing shipped) under
     * job description `name`, drain the listener bus so the counts are the query's own,
     * clear the cache. A bus that does not drain fails the pass: its counts are not the
-    * query's. `compositeTier` opens the composite memo tier for this pass only. */
-  def measure(s: SparkSession, c: Counters, sfDir: String, name: String, q: Query, compositeTier: Boolean = false): Pass = {
-    SparkEntry.resetMemos()
+    * query's. So does a query that leaves the session conf changed. */
+  def measure(s: SparkSession, c: Counters, sfDir: String, name: String, q: Query): Pass = {
+    Memo.reset()
     val settled = Bridge.drainListenerBus(s)
     c.reset()
     s.sparkContext.setJobDescription(name)
     val (time, drift) = GraftSession.confDrift(s) {
-      Dedup.setCompositeTier(compositeTier)
       val t0 = System.nanoTime()
       try {
         q(s, sfDir).write.format("noop").mode("overwrite").save()
         Right((System.nanoTime() - t0) / 1e9)
       } catch { case e: Throwable => Left(e) }
-      finally { Dedup.setCompositeTier(false); s.sparkContext.setJobDescription(null) }
+      finally s.sparkContext.setJobDescription(null)
     }
     val counted = Bridge.drainListenerBus(s)
     s.catalog.clearCache()
-    Pass(time.filterOrElse(_ => settled && counted, new TimeoutException("listener bus did not drain")),
+    Pass(time.filterOrElse(_ => settled && counted, new TimeoutException("listener bus did not drain"))
+      .filterOrElse(_ => drift.isEmpty, new IllegalStateException(s"conf drift: ${drift.mkString(",")}")),
       c.jobs.get, c.stages.get, c.tasks.get, c.cpuNs.get / 1e9, drift)
   }
 
@@ -142,7 +121,7 @@ object Bench {
     val drift = mutable.LinkedHashMap[String, Seq[String]]()
     val calibrations, latencies = mutable.ArrayBuffer[Double]()
     var rerun: Seq[(String, Double)] = Nil
-    var pinnedBaseSec, sweepSec, rerunSec = 0.0
+    var sweepSec, rerunSec = 0.0
 
     /** Readings only: a fixed in-memory aggregation (box CPU speed) and
       * 10 empty jobs (job-dispatch latency; the sweep's L). */
@@ -153,7 +132,7 @@ object Bench {
 
     /** Measures `name` once and min-merges a successful pass. */
     def run(name: String, q: Query): Pass = {
-      val p = measure(s, counters, sfDir, name, q, Composites(name))
+      val p = measure(s, counters, sfDir, name, q)
       if (p.drift.nonEmpty) drift(name) = (drift.getOrElse(name, Nil) ++ p.drift).distinct
       p.time match {
         case Left(e) => System.err.println(s"[bench] $name failed: $e"); failed += name
@@ -187,9 +166,9 @@ object Bench {
       def obj[V](m: Iterable[(String, V)])(f: V => Any): String =
         m.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
       def strs(xs: Iterable[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":${times.values.map(_.min).sum},"unit":"sec","agg":"min","mode":"cold+pinned-bases",""" +
+      s"""{"metric":"total","value":${times.values.map(_.min).sum},"unit":"sec","agg":"min","mode":"cold",""" +
         s""""partial":$partial,"completed":${times.size},"of":${queries.size},"failed":${strs(failed)},""" +
-        s""""pinned_base_build_sec":$pinnedBaseSec,"sweep_sec":$sweepSec,"rerun_sec":$rerunSec,""" +
+        s""""sweep_sec":$sweepSec,"rerun_sec":$rerunSec,""" +
         s""""reruns":${obj(rerun)(identity)},"calibration_sec":${calibrations.mkString("[", ",", "]")},""" +
         s""""latency_sec":${latencies.mkString("[", ",", "]")},"queries":${obj(times)(_.min)},""" +
         s""""queries_mean":${obj(times)(t => t.sum / t.n)},"queries_passes":${obj(times)(_.n)},""" +

@@ -2,8 +2,8 @@ package graft
 
 /** One-pass census of driver-side scheduling cost per query: jobs,
   * stages, tasks and executor CPU submitted while each SparkEntry
-  * query builds and runs through the noop sink, fully cold (no pinned
-  * bases) and measured by [[Bench.measure]], the pass Bench uses. On a
+  * query builds and runs through the noop sink, cold and measured by
+  * [[Bench.measure]], the pass Bench uses. On a
   * host with slow thread wakeups (the r17 box intermittently
   * dispatches at ~1-3 ms/task and ~30-100 ms/job — measured with an
   * empty-job probe), wall time is `real work + jobs·J + tasks·T`, so

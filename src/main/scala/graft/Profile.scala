@@ -66,7 +66,7 @@ object Profile {
     name.split(",").map(_.trim).filter(_.nonEmpty).foreach { qn =>
       val fn = SparkEntry.queries(qn)
       (1 to 2).foreach { pass =>
-        SparkEntry.resetMemos()
+        Memo.reset()
         stages.synchronized(stages.clear())
         samples.clear()
         val t0 = System.nanoTime()

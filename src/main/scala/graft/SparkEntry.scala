@@ -33,12 +33,4 @@ object SparkEntry {
       Text.oracles ++ Dedup.oracles ++ Similarity.oracles ++
       Temporal.oracles ++ Multimodal.oracles ++ Streams.oracles ++ Typed.oracles ++
       Maintenance.oracles ++ Pipeline.oracles ++ Sketches.oracles ++ Models.oracles
-
-  /** Drops every operator memo ([[Dedup.resetMemos]] also clears the
-    * keyed base registry Similarity uses; [[Text.resetMemos]] the BPE
-    * merges), so the next query runs its pipeline cold. */
-  def resetMemos(): Unit = {
-    Dedup.resetMemos()
-    Text.resetMemos()
-  }
 }

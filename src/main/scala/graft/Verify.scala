@@ -11,7 +11,8 @@ object Verify {
     val spark = GraftSession.local(GraftSession.cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // a query must leave the session conf as it found it
-    // (GraftSession.withConf scopes); any key it changed is reported
+    // (GraftSession.withConf scopes); any key it changed is reported,
+    // and any drift fails the run's exit code
     var drifted = 0
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -48,5 +49,6 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (drifted > 0) sys.exit(1)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Deduplication operators over `documents` / `embeddings` — exact
   * (hash-groupBy), MinHash+LSH near-dup, SimHash, n-gram Jaccard
@@ -57,9 +57,19 @@ object Dedup {
 
   /** The memoized word-shingle signature base, exposed to
     * [[Text.qBoilerplate]] (the same memo the LSH family shares —
-    * one shingle kernel pass per corpus). */
+    * one shingle kernel pass per corpus). Each family's signature
+    * base (word, simhash, ngram, winnow, embed_assigned) is memoized
+    * per (session, sfDir) behind one eager localCheckpoint: the base
+    * kernel is the CPU-heavy part of every family, and each family
+    * query was re-materializing its own copy. */
   private[operators] def wordBase(s: SparkSession, dir: String): DataFrame =
-    memoBase("word", s, dir)(wordSignatures(s, dir))
+    Memo.get("word", s, dir)(wordSignatures(s, dir).localCheckpoint())
+  private def simhashBase(s: SparkSession, dir: String): DataFrame =
+    Memo.get("simhash", s, dir)(simhashSignatures(s, dir).localCheckpoint())
+  private def ngramBase(s: SparkSession, dir: String): DataFrame =
+    Memo.get("ngram", s, dir)(ngramSignatures(s, dir).localCheckpoint())
+  private def winnowBase(s: SparkSession, dir: String): DataFrame =
+    Memo.get("winnow", s, dir)(Text.winnowFp(s, dir).localCheckpoint())
 
   private[operators] val shinglesSqlCte =
     """w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
@@ -173,8 +183,8 @@ object Dedup {
     // leaves nothing registered in the session's catalog cache — the
     // library contract is that queries do not accrue cached relations
     // a caller must clearCache() (checkpoint blocks are freed on memo
-    // replacement or resetMemos()).
-    val base = memoBase("word", s, dir)(wordSignatures(s, dir))
+    // replacement or Memo.reset()).
+    val base = wordBase(s, dir)
     val bands = base.select(col("doc_id"), explode(bandKeyStructs).as("bk"))
     val cand = bands.select(col("bk"), col("doc_id").as("doc_a"))
       .join(bands.select(col("bk"), col("doc_id").as("doc_b")), Seq("bk"))
@@ -215,7 +225,7 @@ object Dedup {
   // memo), candidate generation unchanged, a 12-term codegen'd
   // compare chain per pair; fixed-width rows only.
   def qMinhashEst(s: SparkSession, dir: String): DataFrame = {
-    val base = memoBase("word", s, dir)(wordSignatures(s, dir))
+    val base = wordBase(s, dir)
     val bands = base.select(col("doc_id"), explode(bandKeyStructs).as("bk"))
     val cand = bands.select(col("bk"), col("doc_id").as("doc_a"))
       .join(bands.select(col("bk"), col("doc_id").as("doc_b")), Seq("bk"))
@@ -262,7 +272,7 @@ object Dedup {
   private val BbitBits = 4
 
   def qMinhashBbit(s: SparkSession, dir: String): DataFrame = {
-    val base = memoBase("word", s, dir)(wordSignatures(s, dir))
+    val base = wordBase(s, dir)
     val bands = base.select(col("doc_id"), explode(bandKeyStructs).as("bk"))
     val cand = bands.select(col("bk"), col("doc_id").as("doc_a"))
       .join(bands.select(col("bk"), col("doc_id").as("doc_b")), Seq("bk"))
@@ -370,7 +380,7 @@ object Dedup {
   private val LshBucketCap = 4
 
   def qMinHashCapped(s: SparkSession, dir: String): DataFrame = {
-    val base = memoBase("word", s, dir)(wordSignatures(s, dir))
+    val base = wordBase(s, dir)
     val bands = base.select(col("doc_id"), explode(bandKeyStructs).as("bk"))
     val kept = bands
       .withColumn("bsz", count(lit(1)).over(
@@ -521,7 +531,7 @@ FROM com"""
     val isBatch = col("doc_id") % IncrBatchMod === IncrBatchRem
     // memoized base: one signature pass feeds bands + both set
     // attaches (library cache contract, see [[qMinHashLsh]])
-    val base = memoBase("word", s, dir)(wordSignatures(s, dir))
+    val base = wordBase(s, dir)
 
     val dig = Tables.documents(s, dir).select(col("doc_id"), md5(col("text")).as("h"))
     val exact = dig.filter(!isBatch)
@@ -743,7 +753,7 @@ FROM com"""
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
     val (e, cents) = embedVecsAndCents(s, dir)
-    memoBase("embed_assigned", s, dir)({
+    Memo.get("embed_assigned", s, dir) {
       val centArr = cents.collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
         .sortBy(_._1)
@@ -769,8 +779,8 @@ FROM com"""
             Row(r.getLong(0), v.toSeq, nrm, bestCid,
               math.sqrt(math.max(0.0, 2.0 - 2.0 * bestC)))
           }
-        }(Encoders.row(schema))
-    })
+        }(Encoders.row(schema)).localCheckpoint()
+    }
   }
 
   def qEmbedCosine(s: SparkSession, dir: String): DataFrame = {
@@ -1180,7 +1190,7 @@ ORDER BY tau_x10k"""
 
   def qSimHashPairs(s: SparkSession, dir: String): DataFrame = {
     // memoized base: see [[qMinHashLsh]].
-    val sh = memoBase("simhash", s, dir)(simhashSignatures(s, dir))
+    val sh = simhashBase(s, dir)
     val bandCols = array((0 until SimBands).map { b =>
       struct(lit(b).as("band_id"),
         shiftrightunsigned(col("simhash"), SimBandBits * b)
@@ -1308,7 +1318,7 @@ ORDER BY tau_x10k"""
     // Memoized eager base: one materialization of the signature pass,
     // nothing left in the catalog cache — see [[qMinHashLsh]] for the
     // library-contract rationale.
-    val base = memoBase("ngram", s, dir)(ngramSignatures(s, dir))
+    val base = ngramBase(s, dir)
     // Band keys as (band_id, h1, h2) int structs, not concat'd strings:
     // the self-join shuffles 20 fixed-width band rows per doc and the
     // candidate set is identical to the string-key form, so the oracle
@@ -1440,182 +1450,12 @@ ORDER BY tau_x10k"""
     * pay-once pattern as Relational2.ensureBucketTables; at 100 TB
     * this is "the dedup-pairs table is materialized once per corpus
     * snapshot, consumers read it". */
-  @volatile private var pairsFor: (SparkSession, String) = null
-  private var pairsCache: DataFrame = null
+  private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame =
+    Memo.get("lsh_pairs", s, dir)(qMinHashLsh(s, dir).select(col("doc_a"), col("doc_b")).localCheckpoint())
 
-  private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame = synchronized {
-    if (pairsFor == ((s, dir)) && pairsCache != null) return pairsCache
-    // a replaced entry's localCheckpoint blocks would otherwise be
-    // pinned by this static for the JVM lifetime (the ContextCleaner
-    // only frees them once the RDD is unreachable) — release the old
-    // checkpoint explicitly before memoizing the new one
-    if (pairsCache != null) freeLocalCheckpoint(pairsCache)
-    pairsCache = qMinHashLsh(s, dir).select(col("doc_a"), col("doc_b")).localCheckpoint()
-    pairsFor = (s, dir)
-    pairsCache
-  }
-
-  /** Bench/test hook: drops the memoized pair list and cluster labels
-    * (freeing their checkpoint blocks) so the next consumer pays the
-    * full cold pipeline. The memo is the right LIBRARY design (the
-    * pairs table is materialized once per corpus snapshot and shared);
-    * this hook exists so the BENCH can measure the cold path instead
-    * of reporting a memo hit as the operator's cost — the r5 verdict's
-    * "0.07s dedup_clusters" honesty item. */
-  def resetMemos(): Unit = synchronized {
-    if (pairsCache != null) freeLocalCheckpoint(pairsCache)
-    if (labelsCache != null) freeLocalCheckpoint(labelsCache)
-    pairsCache = null
-    pairsFor = null
-    labelsCache = null
-    labelsFor = null
-    baseCache.forEach((k, v) => if (!pinnedKinds.contains(k)) freeLocalCheckpoint(v._2))
-    val toRemove = new java.util.ArrayList[String]()
-    baseCache.forEach((k, _) => if (!pinnedKinds.contains(k)) toRemove.add(k))
-    toRemove.forEach(k => baseCache.remove(k))
-  }
-
-  /** BOARD-SCOPED base pinning (bench-only; empty outside the bench,
-    * so tests/Verify see the plain memo semantics). Kinds listed here
-    * survive [[resetMemos]]: the bench warms them ONCE per board run
-    * (their build cost reported separately in the bench JSON as
-    * `pinned_base_build_sec`) and every consumer query then measures
-    * its INCREMENTAL cost on the shared corpus-snapshot base — the
-    * production shape (signature/assignment tables are materialized
-    * once per snapshot and shared). Sanctioned by the r15 verdict
-    * (item 1b: "shared signature bases compute once per board run").
-    *
-    * HONESTY RULE: never pin a kind that some gated query outputs
-    * DIRECTLY (lm_scored: text_lm_score IS that build — pinning it
-    * would clock the query as a memo hit, the r5 dedup_clusters
-    * dishonesty class). The signature bases here are inputs only:
-    * every consumer still pays its banding/join/verify pipeline and
-    * the derived pair/label memos stay per-pass cold. */
-  @volatile private var pinnedKinds: Set[String] = Set.empty
-
-  private[graft] def pinBases(kinds: Set[String]): Unit =
-    synchronized { pinnedKinds = kinds }
-
-  /** Warms every pinnable signature base concurrently (the
-    * [[ensembleEdges]] base-warm discipline: scan→repartition→kernel
-    * jobs overlap without join-machinery contention). */
-  private[graft] def warmPinnedBases(s: SparkSession, dir: String): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.sequence(Seq(
-      Future(memoBase("word", s, dir)(wordSignatures(s, dir))),
-      Future(memoBase("simhash", s, dir)(simhashSignatures(s, dir))),
-      Future(memoBase("ngram", s, dir)(ngramSignatures(s, dir))),
-      Future(memoBase("winnow", s, dir)(Text.winnowFp(s, dir))),
-      Future(embedAssigned(s, dir)),
-      Future(Similarity.assignMemo(s, dir)))), Duration.Inf)
-    ()
-  }
-
-  /** The kinds [[warmPinnedBases]] builds — the bench's pin set.
-    * sim_assign (r17): the K·N IVF assignment sweep is the shared
-    * CPU prefix of SEVEN consumers (qIvfTopk, qIvfPqTopk's encode,
-    * both nprobe configs, k-means, cell stats, the maxsim rerank's
-    * token-level candidate generation) and no gated query emits the
-    * raw assignment itself — the same corpus-snapshot-index posture
-    * as Dedup's embed_assigned, which was already pinned. */
-  private[graft] val PinnableBaseKinds: Set[String] =
-    Set("word", "simhash", "ngram", "winnow", "embed_assigned", "sim_assign")
-
-  /** COMPOSITE-ONLY memo tier (r15 verdict item 1b, second half):
-    * the five composite MEASUREMENT queries (dedup_ensemble,
-    * pipe_release_gate, sim_recall_report, pipe_curation_funnel,
-    * pipeline_e2e) re-run family sub-pipelines — pair lists, LM
-    * keep flags, quality/repetition/canonical survivor sets, exact
-    * top-k — that OTHER board queries gate in their own right. This
-    * tier memoizes those sub-pipelines once per board run, consulted
-    * ONLY while [[compositeTier]] is on; the bench enables it just
-    * around the five composites (and their warmup build, whose cost
-    * is reported in the bench JSON), so every non-composite query
-    * still pays its own pipeline fully cold. Off outside the bench:
-    * Verify/tests/users see plain call-through semantics. */
-  @volatile private var compositeTier = false
-  private val compositeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ((SparkSession, String), DataFrame)]
-  private val compositeLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
-  private[graft] def setCompositeTier(on: Boolean): Unit = { compositeTier = on }
-
-  private[graft] def resetCompositeTier(): Unit = {
-    compositeCache.forEach((_, v) => freeLocalCheckpoint(v._2))
-    compositeCache.clear()
-  }
-
-  /** Serve `build` through the composite tier when it is enabled;
-    * plain call-through otherwise. Same per-kind locking discipline
-    * as [[memoBase]]. */
-  private[graft] def compositeMemo(kind: String, s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame =
-    if (!compositeTier) build
-    else {
-      val lock = compositeLocks.computeIfAbsent(kind, _ => new Object)
-      lock.synchronized {
-        val prev = compositeCache.get(kind)
-        if (prev != null && prev._1 == ((s, dir))) prev._2
-        else {
-          if (prev != null) freeLocalCheckpoint(prev._2)
-          val df = build.localCheckpoint()
-          compositeCache.put(kind, ((s, dir), df))
-          df
-        }
-      }
-    }
-
-  /** Unpersists the block-backed RDD behind a localCheckpoint'ed
-    * frame ([[org.apache.spark.sql.execution.LogicalRDD]] holds it;
-    * `df.unpersist()` is a no-op there — the frame is not in the
-    * catalog cache). */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
-
-  /** Per-family signature bases (word shingles, simhash, char n-gram,
-    * winnow fingerprints, embed assignment), memoized per (session,
-    * sfDir) behind one eager localCheckpoint each — the [[lshPairs]]
-    * library rationale applied one level down: the base kernel is the
-    * CPU-heavy part of every family, and each family query was
-    * re-materializing its own copy. Keyed by kind in a
-    * ConcurrentHashMap (per-key compute lock) so [[ensembleEdges]]
-    * can warm all bases CONCURRENTLY: the base kernels are
-    * scan→repartition→mapPartitions jobs with no broadcast joins, so
-    * concurrent materialization fills the cores without the KeyLock
-    * contention that sank full-pipeline concurrency (A/B in
-    * PLANS.md). [[resetMemos]] drops these too, so the bench still
-    * measures the cold pipeline. */
-  private val baseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ((SparkSession, String), DataFrame)]
-  // Dedicated per-KIND lock objects: running the multi-second
-  // build.localCheckpoint() job inside ConcurrentHashMap.compute
-  // would hold that hash BIN's lock, silently serializing concurrent
-  // warms of different kinds that collide in a bin ("ngram" and
-  // "embed_assigned" do, in the initial 16-bin table) — defeating
-  // ensembleEdges' concurrent base warm. computeIfAbsent here only
-  // allocates an Object, so it never blocks on Spark work.
-  private val baseLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
-  private[graft] def memoBase(kind: String, s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame = {
-    val lock = baseLocks.computeIfAbsent(kind, _ => new Object)
-    lock.synchronized {
-      val prev = baseCache.get(kind)
-      if (prev != null && prev._1 == ((s, dir))) prev._2
-      else {
-        if (prev != null) freeLocalCheckpoint(prev._2)
-        val df = build.localCheckpoint()
-        baseCache.put(kind, ((s, dir), df))
-        df
-      }
-    }
-  }
+  /** Drops every operator memo ([[Memo.reset]]); kept public for the
+    * perfbench harness, which calls it before each query. */
+  def resetMemos(): Unit = Memo.reset()
 
   private val CcPartitions = 8
 
@@ -1702,26 +1542,20 @@ ORDER BY tau_x10k"""
     * qCanonical, Pipeline.qPipelineE2e) and the O(log d) propagation
     * rounds are the expensive part. At 100 TB this IS "the cluster
     * table is materialized once per corpus snapshot". */
-  @volatile private var labelsFor: (SparkSession, String) = null
-  private var labelsCache: DataFrame = null
-
-  private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame = synchronized {
-    if (labelsFor == ((s, dir)) && labelsCache != null) return labelsCache
-    if (labelsCache != null) freeLocalCheckpoint(labelsCache)
-    val pairs = lshPairs(s, dir)
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val (labels, _) = resolveComponents(edges)
-    // union singletons back: docs with no near-dup edge are their own
-    // cluster — they never enter the iteration
-    labelsCache = Tables.documents(s, dir).select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      .localCheckpoint()
-    labelsFor = (s, dir)
-    labelsCache
-  }
+  private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame =
+    Memo.get("cluster_labels", s, dir) {
+      val pairs = lshPairs(s, dir)
+      val edges = pairs
+        .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      val (labels, _) = resolveComponents(edges)
+      // union singletons back: docs with no near-dup edge are their own
+      // cluster — they never enter the iteration
+      Tables.documents(s, dir).select(col("doc_id"))
+        .join(labels, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
+        .localCheckpoint()
+    }
 
   def qClusters(s: SparkSession, dir: String): DataFrame =
     clusterLabels(s, dir).orderBy(col("doc_id"))
@@ -1776,7 +1610,7 @@ ORDER BY tau_x10k"""
     * union job instead of materializing serially at construction. */
   private def winnowPairsUnsorted(s: SparkSession, dir: String): DataFrame = {
     graft.plans.SetExprs.register(s) // idempotent; the scorer calls intersectCountSorted
-    val fps = memoBase("winnow", s, dir)(Text.winnowFp(s, dir))
+    val fps = winnowBase(s, dir)
     // Candidates come from the inverted index GROUPED by hash: df is
     // just the group size (no window pass), the DF cap drops
     // boilerplate groups, and pairs expand per group from the ≤
@@ -2741,17 +2575,24 @@ JOIN m USING (cluster_id) WHERE j.rn = 1 ORDER BY j.cluster_id"""
     * `DiskBlockObjectWriter` churn, not compute; two-at-a-time still
     * read 11.9s). The per-family signature BASES are different: they
     * are scan→repartition→kernel jobs with no banded joins, so
-    * warming the five [[memoBase]] checkpoints concurrently overlaps
+    * warming the five bases the families read concurrently overlaps
     * the serialized CPU-heavy prefix without the join-machinery
     * contention. Family pipelines then build sequentially on the
     * warmed bases, and the lazy union evaluates as one job whose
     * independent banded subtrees Spark's DAG scheduler interleaves at
     * the stage level. Edge rows are pair-count-bounded fixed width. */
   private[graft] def ensembleEdges(s: SparkSession, dir: String): DataFrame = {
-    warmPinnedBases(s, dir)
-    EnsembleFams.map { case (name, bit, fn) =>
-      compositeMemo(s"fam_pairs_$name", s, dir)(fn(s, dir))
-        .select(col("doc_a"), col("doc_b"), lit(bit).as("fam"))
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    Await.result(Future.sequence(Seq(
+      Future(wordBase(s, dir)),
+      Future(simhashBase(s, dir)),
+      Future(ngramBase(s, dir)),
+      Future(winnowBase(s, dir)),
+      Future(embedAssigned(s, dir)))), Duration.Inf)
+    EnsembleFams.map { case (_, bit, fn) =>
+      fn(s, dir).select(col("doc_a"), col("doc_b"), lit(bit).as("fam"))
     }.reduce(_ unionAll _)
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(bit_or(col("fam")).as("mask"))
@@ -2849,12 +2690,12 @@ FROM sz JOIN pc USING (cluster_id) ORDER BY cluster_id"""
     * preserves the partitioning, so their loop-invariant reads plan
     * no extra exchange). */
   private[operators] def copurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    memoBase("copurchase", s, dir)(
+    Memo.get("copurchase", s, dir)(
       Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey").as("c"))
         .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey").as("p")),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("c"), col("p")).distinct()
-        .repartition(CcPartitions, col("c")))
+        .repartition(CcPartitions, col("c")).localCheckpoint())
 
   // ---------------------------------------------------------------
   // COMMON-NEIGHBOR PART SIMILARITY — item-item collaborative

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Table-maintenance operators — the ops layer a 100 TB pipeline needs
   * around the query engine: small-files compaction and CDC
@@ -92,18 +92,13 @@ object Maintenance {
   // qMergeUpsert, which would otherwise re-run this full-scan max()
   // driver action on every call (same pay-once pattern as
   // Relational2.ensureBucketTables).
-  @volatile private var offsetFor: (SparkSession, String) = null
-  private var offsetCache: Long = 0L
-
-  private def insertKeyOffset(s: SparkSession, dir: String): Long = synchronized {
-    if (offsetFor == ((s, dir))) return offsetCache
-    val row = Tables.orders(s, dir).agg(max(col("o_orderkey"))).first()
-    require(!row.isNullAt(0),
-      s"orders at $dir is empty: cannot derive the merge insert-key offset")
-    offsetCache = math.pow(10, row.getLong(0).toString.length).toLong
-    offsetFor = (s, dir)
-    offsetCache
-  }
+  private def insertKeyOffset(s: SparkSession, dir: String): Long =
+    Memo.get("insert_key_offset", s, dir) {
+      val row = Tables.orders(s, dir).agg(max(col("o_orderkey"))).first()
+      require(!row.isNullAt(0),
+        s"orders at $dir is empty: cannot derive the merge insert-key offset")
+      math.pow(10, row.getLong(0).toString.length).toLong
+    }
 
   def qMergeUpsert(s: SparkSession, dir: String): DataFrame = {
     val InsertKeyOffset = insertKeyOffset(s, dir)
@@ -258,25 +253,20 @@ object Maintenance {
   private val ZCellBits = 8 // 256 cells per dimension
   private val ZBucketShift = 8 // bucket = top 4 bits of each dim -> <=256 files
 
-  @volatile private var zMaxFor: (SparkSession, String) = null
-  private var zMaxCache: (Long, Long) = (0L, 0L)
-
-  private def zMaxima(s: SparkSession, dir: String): (Long, Long) = synchronized {
-    if (zMaxFor == ((s, dir))) return zMaxCache
-    val dy = datediff(col("o_orderdate"), lit("1992-01-01")).cast("long")
-    val row = Tables.orders(s, dir)
-      .agg(max(col("o_custkey")), max(dy), min(col("o_custkey")), min(dy)).first()
-    require(!row.isNullAt(0) && !row.isNullAt(1),
-      s"orders at $dir is empty: cannot derive z-order cell scales")
-    // negative dimension values would bit-interleave as garbage
-    // (two's-complement high bits): reject rather than mis-bucket
-    require(row.getLong(2) >= 0 && row.getLong(3) >= 0,
-      s"z-order dims must be non-negative (got min custkey ${row.getLong(2)}, " +
-        s"min day ${row.getLong(3)}): shift the epoch below the data")
-    zMaxCache = (row.getLong(0), row.getLong(1))
-    zMaxFor = (s, dir)
-    zMaxCache
-  }
+  private def zMaxima(s: SparkSession, dir: String): (Long, Long) =
+    Memo.get("z_maxima", s, dir) {
+      val dy = datediff(col("o_orderdate"), lit("1992-01-01")).cast("long")
+      val row = Tables.orders(s, dir)
+        .agg(max(col("o_custkey")), max(dy), min(col("o_custkey")), min(dy)).first()
+      require(!row.isNullAt(0) && !row.isNullAt(1),
+        s"orders at $dir is empty: cannot derive z-order cell scales")
+      // negative dimension values would bit-interleave as garbage
+      // (two's-complement high bits): reject rather than mis-bucket
+      require(row.getLong(2) >= 0 && row.getLong(3) >= 0,
+        s"z-order dims must be non-negative (got min custkey ${row.getLong(2)}, " +
+          s"min day ${row.getLong(3)}): shift the epoch below the data")
+      (row.getLong(0), row.getLong(1))
+    }
 
   def qZOrder(s: SparkSession, dir: String): DataFrame = {
     val (mck, mdy) = zMaxima(s, dir)

@@ -208,13 +208,10 @@ object Pipeline {
     // (qual by three, rep by two) — checkpoint the doc-id-sized
     // survivor lists once so no filter pipeline re-executes per stage
     // (measured: 12.3s → the canonical leg's own cost at 10×)
-    val qual = Dedup.compositeMemo("qual_ids", s, dir)(
-      Text.qQuality(s, dir)
-        .filter(col("quality_score") >= MinQuality).select("doc_id")).localCheckpoint()
-    val rep = Dedup.compositeMemo("rep_ids", s, dir)(
-      Text.qRepetition(s, dir).filter(col("keep")).select("doc_id")).localCheckpoint()
-    val keep = Dedup.compositeMemo("canon_ids", s, dir)(
-      Dedup.qCanonical(s, dir).select(col("kept_doc").as("doc_id"))).localCheckpoint()
+    val qual = Text.qQuality(s, dir)
+      .filter(col("quality_score") >= MinQuality).select("doc_id").localCheckpoint()
+    val rep = Text.qRepetition(s, dir).filter(col("keep")).select("doc_id").localCheckpoint()
+    val keep = Dedup.qCanonical(s, dir).select(col("kept_doc").as("doc_id")).localCheckpoint()
     val stages = Seq[(String, DataFrame)](
       ("0_raw", toks.select("doc_id")),
       ("1_quality", qual),
@@ -429,15 +426,10 @@ FROM agg a, tot t ORDER BY a.thr_ppm"""
   private val MinQuality = 0.75
 
   def qPipelineE2e(s: SparkSession, dir: String): DataFrame = {
-    // same composite-tier keys as qCurationFunnel: one board-scoped
-    // build serves both (plain call-through outside the bench)
-    val qual = Dedup.compositeMemo("qual_ids", s, dir)(
-      Text.qQuality(s, dir)
-        .filter(col("quality_score") >= MinQuality).select("doc_id"))
-    val rep = Dedup.compositeMemo("rep_ids", s, dir)(
-      Text.qRepetition(s, dir).filter(col("keep")).select("doc_id"))
-    val keep = Dedup.compositeMemo("canon_ids", s, dir)(
-      Dedup.qCanonical(s, dir).select(col("kept_doc").as("doc_id")))
+    val qual = Text.qQuality(s, dir)
+      .filter(col("quality_score") >= MinQuality).select("doc_id")
+    val rep = Text.qRepetition(s, dir).filter(col("keep")).select("doc_id")
+    val keep = Dedup.qCanonical(s, dir).select(col("kept_doc").as("doc_id"))
     val surv = qual.join(rep, "doc_id").join(keep, "doc_id")
     Tables.documents(s, dir)
       .select(col("doc_id"), (col("doc_id") % DefaultShardCount).as("shard"),
@@ -1793,21 +1785,16 @@ FROM u ORDER BY doc_id"""
   def qReleaseGate(s: SparkSession, dir: String): DataFrame = {
     val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
     val base = src.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-    // the three audit sub-pipelines ride the bench's composite tier
-    // (board-scoped, plain call-through outside it — Dedup.compositeMemo)
-    val keep = Dedup.compositeMemo("lm_keep", s, dir)(
-        Text.qLmScore(s, dir).select(col("doc_id"), col("keep")))
+    val keep = Text.qLmScore(s, dir).select(col("doc_id"), col("keep"))
       .join(src, "doc_id").groupBy(col("source"))
       .agg(count(lit(1)).as("n_scored"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"))
       .localCheckpoint()
-    val contam = Dedup.compositeMemo("contam_ids", s, dir)(
-        qContamReport(s, dir).select(col("doc_id")))
+    val contam = qContamReport(s, dir).select(col("doc_id"))
       .join(src, "doc_id").groupBy(col("source"))
       .agg(count(lit(1)).as("contam_docs"))
       .localCheckpoint()
-    val nd = Dedup.compositeMemo("fam_pairs_minhash", s, dir)(
-        Dedup.qMinHashLsh(s, dir).select(col("doc_a"), col("doc_b")))
+    val nd = Dedup.qMinHashLsh(s, dir).select(col("doc_a"), col("doc_b"))
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
       .join(src, "doc_id").groupBy(col("source"))
       .agg(count(lit(1)).as("neardup_docs"))

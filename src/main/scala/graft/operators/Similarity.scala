@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (64-dim float vectors).
@@ -782,15 +782,13 @@ ORDER BY pq.qdoc"""
   }
 
   /** [[assignToCentroids]] memoized per (session, sfDir) behind one
-    * eager localCheckpoint, via the shared [[Dedup.memoBase]] keyed
-    * registry (one memo/reset mechanism for the whole library): the
-    * K·N assignment sweep is the shared CPU prefix of SIX consumers
+    * eager localCheckpoint, in the library's [[Memo]] registry:
+    * the K·N assignment sweep is the shared CPU prefix of SIX consumers
     * (qIvfTopk, qIvfPqTopk's encode, both nprobe configs, k-means,
     * cell stats), and the recall report was paying it twice in one
-    * query (its own `assign` plus qIvfPqTopk's internal copy).
-    * [[Dedup.resetMemos]] drops it so the bench still measures cold. */
+    * query (its own `assign` plus qIvfPqTopk's internal copy). */
   private[operators] def assignMemo(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoBase("sim_assign", s, dir)(assignToCentroids(s, dir))
+    Memo.get("sim_assign", s, dir)(assignToCentroids(s, dir).localCheckpoint())
 
   def qIvfTopk(s: SparkSession, dir: String): DataFrame = {
     val assign = assignMemo(s, dir)
@@ -2083,11 +2081,7 @@ ORDER BY pq.qdoc"""
   def qRecallReport(s: SparkSession, dir: String): DataFrame = {
     // checkpointed: four consumers (the qid base + three hit joins)
     // would otherwise each replan the all-pairs exact top-k subtree
-    // board-scoped on the bench's composite tier (call-through and
-    // locally checkpointed otherwise — see Dedup.compositeMemo)
-    val exact = graft.operators.Dedup.compositeMemo("sim_exact_topk", s, dir)(
-      qTopkCosine(s, dir).select(col("qid"), col("neighbor")))
-      .localCheckpoint()
+    val exact = qTopkCosine(s, dir).select(col("qid"), col("neighbor")).localCheckpoint()
     // each config's hit counts materialize eagerly here: five
     // unmaterialized retrieval subtrees joined under the final
     // orderBy made this the board's contention amplifier (the range
@@ -2103,25 +2097,19 @@ ORDER BY pq.qdoc"""
         .localCheckpoint()
     // one assignment sweep feeds both nprobe configurations (the
     // probe-cell tables are K-row metadata; the K-N assign is the
-    // cost). Lazy: memoBase builds eagerly, and when the composite
-    // tier serves both IVF hit frames this build would be dead work
-    lazy val assign = assignMemo(s, dir)
+    // cost)
+    val assign = assignMemo(s, dir)
     // the kNN graph covers every vector; its probe rows measure how
     // well single-bucket hyperplane candidates recall the exact list
-    val knnProbes = graft.operators.Dedup.compositeMemo("sim_knn_probes", s, dir)(
-      qKnnGraph(s, dir)
-        .filter(col("vec_id") % QueryStride === 0)
-        .select(col("vec_id").as("qid"), col("neighbor")))
+    val knnProbes = qKnnGraph(s, dir)
+      .filter(col("vec_id") % QueryStride === 0)
+      .select(col("vec_id").as("qid"), col("neighbor"))
     // the shared wide 1-bit pass (see the h_hamm/h_casc joins below)
-    val hammWide = graft.operators.Dedup.compositeMemo("sim_hamm_wide", s, dir)(
-      hammingTopkK(s, dir, CascHammK)).localCheckpoint()
+    val hammWide = hammingTopkK(s, dir, CascHammK).localCheckpoint()
     exact.select(col("qid")).distinct()
-      .join(hitsOf(graft.operators.Dedup.compositeMemo("sim_ivfpq_topk", s, dir)(
-        qIvfPqTopk(s, dir)), "h_pq"), Seq("qid"), "left")
-      .join(hitsOf(graft.operators.Dedup.compositeMemo("sim_ivf_np1", s, dir)(
-        ivfTopkFromAssign(assign, probeCellsN(s, dir, 1))), "h_np1"), Seq("qid"), "left")
-      .join(hitsOf(graft.operators.Dedup.compositeMemo("sim_ivf_np4", s, dir)(
-        ivfTopkFromAssign(assign, probeCellsN(s, dir, IvfNProbeMulti))), "h_np4"), Seq("qid"), "left")
+      .join(hitsOf(qIvfPqTopk(s, dir), "h_pq"), Seq("qid"), "left")
+      .join(hitsOf(ivfTopkFromAssign(assign, probeCellsN(s, dir, 1)), "h_np1"), Seq("qid"), "left")
+      .join(hitsOf(ivfTopkFromAssign(assign, probeCellsN(s, dir, IvfNProbeMulti)), "h_np4"), Seq("qid"), "left")
       .join(hitsOf(knnProbes, "h_knn"), Seq("qid"), "left")
       // the 1-bit tier: how much of the exact list sign-bit hamming
       // alone recovers — the floor every cheaper rerank starts from.
@@ -2132,9 +2120,8 @@ ORDER BY pq.qdoc"""
       // ... and the cascade built ON that tier (wide hamming → ADC →
       // exact re-rank): its lift over n_hits_hamm is the gated
       // evidence the refine stages pay for themselves
-      .join(hitsOf(graft.operators.Dedup.compositeMemo("sim_casc_topk", s, dir)(
-        cascadeTopkFrom(s, dir, cascadeCandidatesFrom(s, dir,
-          hammWide.select(col("qid"), col("neighbor").as("vec_id"))))), "h_casc"),
+      .join(hitsOf(cascadeTopkFrom(s, dir, cascadeCandidatesFrom(s, dir,
+          hammWide.select(col("qid"), col("neighbor").as("vec_id")))), "h_casc"),
         Seq("qid"), "left")
       .select(col("qid"),
         coalesce(col("h_pq"), lit(0L)).as("n_hits"),

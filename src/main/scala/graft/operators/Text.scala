@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Text-analysis operators over the `documents` table — the
   * training-data-pipeline layer (token counting, quality scoring,
@@ -1352,26 +1352,18 @@ ORDER BY c.labeled_lang, c.predicted_lang"""
   // aggregates, each over a localCheckpoint'ed vocabulary so the plan
   // does not re-grow with the iteration (the resolveComponents
   // discipline — per-round cost is vocabulary-sized and measured in
-  // PLANS.md). Memoized per (session, dir): the encoder replays the
-  // same table; [[resetMemos]] restores bench honesty.
+  // PLANS.md). Memoized per (session, dir) in [[Memo]]: the
+  // encoder replays the same table.
   // Output: (merge_idx, pair, cnt, vocab_size) — merges.txt plus the
   // vocabulary-size trajectory |alphabet| + rank.
   private val BpeTrainK = 16
   private val BpeMinPairCount = 2L
   private val BpeKMarkers: Seq[String] = (1 to BpeTrainK).map(i => (0xE000 + i).toChar.toString)
 
-  @volatile private var bpeKFor: (SparkSession, String) = null
-  private var bpeKCache: Seq[(String, String, Long)] = null
-
   /** The learned rank-k merge table: (raw pair incl. marker symbols,
     * rendered pair, count), in rank order. */
   private[operators] def bpeMergesK(s: SparkSession, dir: String): Seq[(String, String, Long)] =
-    synchronized {
-      if (bpeKFor == ((s, dir)) && bpeKCache != null) return bpeKCache
-      bpeKCache = trainMergesLoop(wordTypes(s, dir).localCheckpoint())
-      bpeKFor = (s, dir)
-      bpeKCache
-    }
+    Memo.get("bpe_merges_k", s, dir)(trainMergesLoop(wordTypes(s, dir).localCheckpoint()))
 
   /** The rank-k trainer loop over an arbitrary starting vocabulary —
     * shared by the full-corpus (memoized) table and the holdout
@@ -1407,11 +1399,9 @@ ORDER BY c.labeled_lang, c.predicted_lang"""
     out.toSeq
   }
 
-  /** Bench/test hook — see [[Dedup.resetMemos]]. */
-  def resetMemos(): Unit = synchronized {
-    bpeKCache = null
-    bpeKFor = null
-  }
+  /** Drops every operator memo ([[Memo.reset]]); kept public for
+    * the perfbench harness, which calls it before each query. */
+  def resetMemos(): Unit = Memo.reset()
 
   def qBpeTrainK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1854,16 +1844,15 @@ FROM f GROUP BY split ORDER BY split"""
     lmScored(s, dir).orderBy(col("doc_id"))
 
   /** The per-doc scored frame behind [[qLmScore]] (unsorted),
-    * memoized per (session, dir) through the shared keyed registry
-    * ([[Dedup.memoBase]], the lshPairs discipline; [[Dedup
-    * .resetMemos]] drops it so the bench stays honest-cold): the
+    * memoized per (session, dir) in [[Memo]] behind one eager
+    * localCheckpoint (the lshPairs discipline): the
     * corpus bigram explode + three count joins is the shared prefix
     * of SIX consumers (lm_score, ccnet_buckets, ess_clip,
     * calibration, quality_budget, the dedup LM tier) and each was
     * paying its own scoring pass (r10 item 8 — measured ~1.2s/pass
     * at sf0.1, ~6s across the board in one Verify session). */
   private[operators] def lmScored(s: SparkSession, dir: String): DataFrame =
-    Dedup.memoBase("lm_scored", s, dir)(buildLmScored(s, dir))
+    Memo.get("lm_scored", s, dir)(buildLmScored(s, dir).localCheckpoint())
 
   private def buildLmScored(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}

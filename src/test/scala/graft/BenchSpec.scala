@@ -94,4 +94,17 @@ class BenchSpec extends SparkSpec {
     assert(json.contains("\"completed\":1,\"of\":2,\"failed\":[\"boom\"]"))
     assert(!json.contains("\"boom\":"), json)
   }
+
+  test("a query that leaves the session conf changed gets no time and is named in failed") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.getAll.get(key)
+    val drifts: Bench.Query = (s, d) => { s.conf.set(key, "7"); q1(s, d) }
+    val board = new Bench.Board(spark, sfDir, 4, Seq("drifts" -> drifts, "q1_pricing_summary" -> q1))
+    try board.sweep()
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(board.failed.toSeq == Seq("drifts"))
+    assert(board.drift.toMap == Map("drifts" -> Seq(key)))
+    assert(board.times.keySet == Set("q1_pricing_summary"))
+    assert(board.json(partial = false).contains("\"failed\":[\"drifts\"]"))
+  }
 }

@@ -76,9 +76,9 @@ class SessionConfSpec extends SparkSpec {
     def run(q: String): Seq[String] =
       SparkEntry.queries(q)(spark, sfDir).collect().map(_.toString).toSeq
     val before = explicit(Aqe)
-    SparkEntry.resetMemos()
+    Memo.reset()
     val sequential = loops.map(run)
-    SparkEntry.resetMemos()
+    Memo.reset()
     val concurrent = Await.result(Future.sequence(loops.map(q => Future(run(q)))), 10.minutes)
     assert(explicit(Aqe) == before)
     assert(concurrent == sequential)
