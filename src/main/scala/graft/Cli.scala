@@ -3,6 +3,7 @@ package graft
 import java.io.{BufferedOutputStream, FileDescriptor, FileOutputStream, InputStreamReader, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -33,13 +34,13 @@ object Cli {
   private def debugLog(msg: => String): Unit = if (isDebug) System.err.println(s"DEBUG: $msg")
 
   def validateInputType(v: String): String = {
-    val lower = v.toLowerCase
+    val lower = v.toLowerCase(Locale.ROOT)
     if (AllowedInputs.contains(lower)) lower
     else throw new IllegalArgumentException(s"Input type must be one of: ${AllowedInputs.mkString(", ")}.")
   }
 
   def validateOutputType(v: String): String = {
-    val lower = v.toLowerCase
+    val lower = v.toLowerCase(Locale.ROOT)
     if (AllowedOutputs.contains(lower)) lower
     else throw new IllegalArgumentException(s"Output type must be one of: ${AllowedOutputs.mkString(", ")}.")
   }
@@ -167,6 +168,10 @@ object Cli {
       finally spool.close()
     debugLog(s"Spooled $chars bytes of stdin to $tmp")
 
+    // The executors share this JVM: Spark's non-ASCII `upper` then
+    // maps case like JavaScript's `toUpperCase`, whatever the user's
+    // locale (under `tr`, `i` would map to `İ`; see GraftSession).
+    Locale.setDefault(Locale.ROOT)
     val spark = GraftSession
       .builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32)
       .appName("graft-cli")

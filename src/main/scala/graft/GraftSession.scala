@@ -13,7 +13,15 @@ import org.apache.spark.sql.SparkSession
   *    operators and their oracles render timestamps as civil
   *    strings), keeps AQE on (runtime join-strategy changes, skew
   *    splitting and post-shuffle coalescing are assumed by the
-  *    operator plans) and turns the UI off.
+  *    operator plans) and turns the UI off. It also turns
+  *    `spark.sql.icu.caseMappings.enabled` off: with it on, the first
+  *    non-ASCII `upper` (the postcode normalizer's) runs ICU's
+  *    case-table initializer, 1.5–2 s of every CLI launch. Off, Spark
+  *    upper-cases non-ASCII strings with `String.toUpperCase()`, which
+  *    follows the JVM's default locale: [[Cli]] sets `Locale.ROOT`, so
+  *    its output matches JavaScript's locale-free `toUpperCase`; a
+  *    library caller's case mapping follows its own JVM's default
+  *    locale (under `tr`, `i` in a non-ASCII string maps to `İ`).
   *  - Installed: [[install]] holds the idempotent settings a query
   *    needs on any session — `nanosAsLong` (events.ts may be
   *    TIMESTAMP(NANOS)), the `graft` DSv2 catalog and v2 bucketing
@@ -102,6 +110,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.icu.caseMappings.enabled", "false")
     // shuffle blocks, spills and RocksDB state-store working dirs on
     // the fast local medium (the cluster deployment rule is NVMe
     // spark.local.dir; locally that is tmpfs). Spark sweeps its

@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -21,21 +23,38 @@ import graft.Canonical
   *    reference does NOT validate day/month ranges, so neither do we
   *    — `31/31/2024` becomes `2024-31-31`, not null)
   *  - text (`:94-99`): trim only
+  *
+  * "Whitespace" and "trim" mean JavaScript's: the set of [[JsWhitespace]].
   */
 object Normalize {
 
-  /** F1 — postcode: `"4532 AA"` → `"4532AA"`. */
+  /** The characters JavaScript's `\s` and `String.prototype.trim`
+    * match: its WhiteSpace and LineTerminator sets, TAB..CR, SPACE,
+    * NBSP, the Unicode space separators, LS, PS and U+FEFF. Java's `\s`
+    * lacks NBSP and Spark's `trim` strips only U+0020. */
+  val JsWhitespace: String =
+    "\t\n\u000B\f\r \u00A0\u1680" + ('\u2000' to '\u200A').mkString +
+      "\u2028\u2029\u202F\u205F\u3000\uFEFF"
+
+  /** JavaScript's `trim()`: [[JsWhitespace]] off both ends. */
+  def jsTrim(c: Column): Column = trim(c, JsWhitespace)
+
+  private val jsWhitespaceRun: String =
+    JsWhitespace.map(ch => f"\\u${ch.toInt}%04X").mkString("[", "", "]+")
+
+  /** F1 — postcode: `"4532 AA"` → `"4532AA"`, as
+    * `s.replace(/\s+/g, '').toUpperCase()`. */
   def postcode(c: Column): Column =
-    upper(regexp_replace(trim(c), "\\s+", ""))
+    upper(regexp_replace(c, jsWhitespaceRun, ""))
 
   /** F2 — phone: `"+44 728 889838"` → `"+44728889838"`,
     * `"0313-398475"` → `"0313398475"`. */
-  def phone(c: Column): Column = {
-    val t = trim(c)
+  def phone(c: Column): Column = trimmedPhone(jsTrim(c))
+
+  private def trimmedPhone(t: Column): Column =
     when(t.startsWith("+"),
       concat(lit("+"), regexp_replace(t.substr(lit(2), length(t)), "[^0-9]", "")))
       .otherwise(regexp_replace(t, "[^0-9]", ""))
-  }
 
   /** F3 — credit limit: `"54.5"` → `"54.50"`, `"1,5"` → `"1.50"`,
     * `"abc"` → `"0.00"`.
@@ -46,8 +65,10 @@ object Normalize {
     * inputs (documented divergence only at float-representation
     * boundaries — SURVEY.md §7.4 R3).
     */
-  def creditLimit(c: Column): Column = {
-    val t = regexp_replace(trim(c), ",", ".")
+  def creditLimit(c: Column): Column = trimmedCreditLimit(jsTrim(c))
+
+  private def trimmedCreditLimit(trimmed: Column): Column = {
+    val t = regexp_replace(trimmed, ",", ".")
     val prefix = regexp_extract(t, "^[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?", 0)
     val num = when(prefix =!= "", prefix.cast(DecimalType(38, 2)))
     // parseFloat also accepts a [+-]Infinity prefix; toFixed renders it
@@ -60,8 +81,9 @@ object Normalize {
   /** F4 — birthday. Pure string rebuilds (no `to_date`) because the
     * reference's regexes don't validate calendar ranges and
     * unparsable values must pass through verbatim. */
-  def birthday(c: Column): Column = {
-    val t = trim(c)
+  def birthday(c: Column): Column = trimmedBirthday(jsTrim(c))
+
+  private def trimmedBirthday(t: Column): Column = {
     val dmy = "^(\\d{1,2})/(\\d{1,2})/(\\d{4})$"
     val ymd8 = "^(\\d{4})(\\d{2})(\\d{2})$"
     val iso = "^(\\d{4})-(\\d{1,2})-(\\d{1,2})$"
@@ -81,39 +103,45 @@ object Normalize {
   }
 
   /** F5 — Name / Address / default: trim only. */
-  def text(c: Column): Column = trim(c)
+  def text(c: Column): Column = jsTrim(c)
 
-  /** Normalizer for one canonical column. */
-  def forHeader(header: String)(c: Column): Column = header match {
-    case Canonical.Postcode    => postcode(c)
-    case Canonical.Phone       => phone(c)
-    case Canonical.CreditLimit => creditLimit(c)
-    case Canonical.Birthday    => birthday(c)
-    case _                     => text(c)
+  /** Normalizer for one canonical column, of a cell already trimmed. */
+  private def ofTrimmed(header: String)(t: Column): Column = header match {
+    case Canonical.Postcode    => postcode(t)
+    case Canonical.Phone       => trimmedPhone(t)
+    case Canonical.CreditLimit => trimmedCreditLimit(t)
+    case Canonical.Birthday    => trimmedBirthday(t)
+    case _                     => t
   }
 
-  /** P1–P4 — schema alignment + normalization in one narrow
-    * projection (mirrors `csvParser.ts:30-43` + `normalizeRow`):
-    * case-insensitive header resolution, extra columns dropped,
-    * missing columns default-filled, every kept cell normalized.
+  /** P1–P4 — schema alignment + normalization in two narrow
+    * projections, fused into one codegen'd stage (mirrors
+    * `csvParser.ts:30-43` + `normalizeRow`): case-insensitive header
+    * resolution, extra columns dropped, missing columns default-filled,
+    * every kept cell normalized.
     * Null cells (empty CSV fields) take the column default.
     *
     * Input may carry [[Canonical.idxCol]]; it is preserved.
     */
   def align(df: DataFrame): DataFrame = {
     val present = df.columns
-    val exprs = Canonical.headers.map { h =>
-      present.find(_.trim.toLowerCase == h.toLowerCase) match {
-        case Some(actual) =>
-          val cell = col(s"`$actual`").cast("string")
-          val normalized = forHeader(h)(cell)
-          when(cell.isNull, lit(Canonical.default(h)))
-            .otherwise(normalized).as(h)
-        case None => lit(Canonical.default(h)).as(h)
-      }
+    val found = Canonical.headers.flatMap { h =>
+      present.find(_.trim.toLowerCase(Locale.ROOT) == h.toLowerCase(Locale.ROOT)).map(h -> _)
     }
     val carry =
       if (present.contains(Canonical.idxCol)) Seq(col(Canonical.idxCol)) else Nil
-    df.select(exprs ++ carry: _*)
+    // Each cell is trimmed once, in a projection of its own: Catalyst
+    // does not inline a non-cheap expression that the next projection
+    // reads more than once (the birthday reads its cell up to ten times).
+    val trimmed = df.select(found.map { case (h, actual) =>
+      jsTrim(col(s"`$actual`").cast("string")).as(h)
+    } ++ carry: _*)
+    val exprs = Canonical.headers.map { h =>
+      val cell = col(s"`$h`")
+      if (found.exists(_._1 == h))
+        when(cell.isNull, lit(Canonical.default(h))).otherwise(ofTrimmed(h)(cell)).as(h)
+      else lit(Canonical.default(h)).as(h)
+    }
+    trimmed.select(exprs ++ carry: _*)
   }
 }

@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.io.{ByteArrayOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Locale
 
 import scala.collection.concurrent.TrieMap
 
@@ -26,12 +27,12 @@ object SinkRegistry {
     "html" -> HtmlSink.write)
 
   def register(name: String, writer: Writer): Unit =
-    writers.put(name.toLowerCase, writer)
+    writers.put(name.toLowerCase(Locale.ROOT), writer)
 
   def supported: Seq[String] = writers.keys.toSeq.sorted
 
   def writer(name: String): Writer =
-    writers.getOrElse(name.toLowerCase,
+    writers.getOrElse(name.toLowerCase(Locale.ROOT),
       throw new IllegalArgumentException(
         s"Unsupported output type: $name. Supported types are: ${supported.mkString(", ")}"))
 

@@ -1,10 +1,10 @@
 package graft.sources
 
-import java.io.InputStreamReader
+import java.io.{BufferedInputStream, InputStreamReader}
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Canonical, functions}
@@ -26,36 +26,54 @@ import graft.{Canonical, functions}
 object CsvSource {
 
   /** @param fidelityChecks when true (the CLI path: one local file),
-    *   one driver-side pass over the file runs first: an RFC-4180
-    *   quote scan that rejects unterminated quoted fields with the
-    *   reference's error shape (`csvParser.ts:55-57` — univocity
-    *   would swallow small malformed files silently), and a blank-file
-    *   check so empty input yields the canonical empty frame instead
+    *   one driver-side pass over the file runs first ([[firstLine]]):
+    *   an RFC-4180 quote scan that rejects unterminated quoted fields
+    *   with the reference's error shape (`csvParser.ts:55-57` —
+    *   univocity would swallow small malformed files silently), and
+    *   the header line, from which the schema is derived without a
+    *   Spark job; blank input yields the canonical empty frame instead
     *   of a schema inference error. It reads the file on the driver
     *   — set false for bulk/distributed paths (directories, globs,
-    *   remote filesystems), where no driver-side I/O happens at all. */
+    *   remote filesystems), where no driver-side I/O happens and Spark
+    *   infers the header with a job. */
   def read(
       spark: SparkSession,
       path: String,
       delimiter: String = ",",
       encoding: String = "ISO-8859-1",
-      fidelityChecks: Boolean = true): DataFrame = {
+      fidelityChecks: Boolean = true): DataFrame =
+    scan(spark, path, delimiter, encoding, fidelityChecks) match {
+      // monotonically_increasing_id rises within a partition and across
+      // partition ids, which follow the file: the Canonical.idxCol contract.
+      case Some(raw) =>
+        functions.Normalize.align(raw.withColumn(Canonical.idxCol, monotonically_increasing_id()))
+      case None => empty(spark)
+    }
 
-    if (fidelityChecks && checkQuotesAndBlank(path, encoding)) return empty(spark)
-
-    val raw = spark.read
+  /** The file as Spark's CSV reader parses it, header names as
+    * columns, all strings; None for a blank file (fidelity checks
+    * only). With the checks on, the schema comes from [[firstLine]]
+    * parsed by the same reader as a one-line local Dataset, which runs
+    * Spark's own header logic (quoted, duplicate and empty names) and
+    * no job. */
+  private[graft] def scan(
+      spark: SparkSession,
+      path: String,
+      delimiter: String,
+      encoding: String,
+      fidelityChecks: Boolean): Option[DataFrame] = {
+    def reader = spark.read
       .option("header", "true")
       .option("delimiter", delimiter)
       .option("encoding", encoding)
       .option("quote", "\"")
       .option("escape", "\"") // RFC-4180 doubled-quote escaping
       .option("mode", "FAILFAST")
-      .csv(path)
-
-    // monotonically_increasing_id rises within a partition and across
-    // partition ids, which follow the file: the Canonical.idxCol contract.
-    functions.Normalize.align(
-      raw.withColumn(Canonical.idxCol, monotonically_increasing_id()))
+    if (!fidelityChecks) Some(reader.csv(path))
+    else firstLine(path, encoding).map { header =>
+      val schema = reader.csv(spark.createDataset(Seq(header))(Encoders.STRING)).schema
+      reader.schema(schema).csv(path)
+    }
   }
 
   /** Canonical empty frame (0 rows, 6 columns + idx). */
@@ -67,13 +85,21 @@ object CsvSource {
 
   /** One buffered pass over the raw file: a minimal RFC-4180 state
     * machine that flags an unterminated quoted field at EOF, and the
-    * blank test — every char ≤ U+0020, as `String.trim` counts them.
-    * @return whether the file is blank */
-  private def checkQuotesAndBlank(path: String, encoding: String): Boolean = {
-    val in = new InputStreamReader(Files.newInputStream(Paths.get(path)), Charset.forName(encoding))
+    * line Spark's CSV reader takes as the header — the first whose
+    * `String.trim` is non-empty, lines ending at `\n`, `\r\n` or a lone
+    * `\r`, after a UTF-8 byte-order mark, which Hadoop's line reader
+    * skips at the start of a file whatever the encoding.
+    * @return the header line, None when the file is blank */
+  private def firstLine(path: String, encoding: String): Option[String] = {
+    val bytes = new BufferedInputStream(Files.newInputStream(Paths.get(path)))
+    bytes.mark(3)
+    if (!java.util.Arrays.equals(bytes.readNBytes(3), Array(0xEF, 0xBB, 0xBF).map(_.toByte)))
+      bytes.reset()
+    val in = new InputStreamReader(bytes, Charset.forName(encoding))
     try {
       val buf = new Array[Char](1 << 16)
-      var blank = true
+      val line = new StringBuilder
+      var header: Option[String] = None
       var inQuotes = false
       var prevQuote = false
       var n = in.read(buf)
@@ -81,7 +107,11 @@ object CsvSource {
         var i = 0
         while (i < n) {
           val c = buf(i)
-          if (c > ' ') blank = false
+          if (header.isEmpty) {
+            if (c != '\n' && c != '\r') line += c
+            else if (line.toString.trim.isEmpty) line.clear()
+            else header = Some(line.toString)
+          }
           if (inQuotes) {
             if (prevQuote) {
               // previous char was a quote inside a quoted field:
@@ -99,7 +129,7 @@ object CsvSource {
       if (inQuotes && !prevQuote)
         throw new IllegalArgumentException(
           "CSV parsing error: Quote Not Closed: the parsing of the file ended with an unclosed quoted field")
-      blank
+      header.orElse(Some(line.toString).filter(_.trim.nonEmpty))
     } finally in.close()
   }
 }

@@ -86,10 +86,13 @@ object PrnSource {
         val specs = inferSpecs(headerLine, warn)
         val data = lines
           .filter(col(Canonical.idxCol) > headerId && trim(col("value")) =!= "")
+        // The reference trims each slice; Normalize.align trims every
+        // column the same way (JavaScript's trim), so only the cents,
+        // parsed here, are trimmed first.
         val cols: Seq[Column] = specs.map { spec =>
-          val slice = trim(substring(col("value"), spec.start + 1, spec.end - spec.start))
+          val slice = substring(col("value"), spec.start + 1, spec.end - spec.start)
           val v =
-            if (spec.name == Canonical.CreditLimit) centsToUnits(slice)
+            if (spec.name == Canonical.CreditLimit) centsToUnits(functions.Normalize.jsTrim(slice))
             else slice
           v.as(spec.name)
         }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.util.Locale
+
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,12 +28,12 @@ object SourceRegistry {
     "prn" -> ((s, p, o) => PrnSource.read(s, p, o.encoding)))
 
   def register(name: String, reader: Reader): Unit =
-    readers.put(name.toLowerCase, reader)
+    readers.put(name.toLowerCase(Locale.ROOT), reader)
 
   def supported: Seq[String] = readers.keys.toSeq.sorted
 
   def apply(name: String): Reader =
-    readers.getOrElse(name.toLowerCase,
+    readers.getOrElse(name.toLowerCase(Locale.ROOT),
       throw new IllegalArgumentException(
         s"Unsupported input type: $name. Supported types are: ${supported.mkString(", ")}"))
 }

@@ -1,8 +1,14 @@
 package graft
 
+import java.io.File
+import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.sinks.{HtmlSink, JsonSink}
 import graft.sources.{CsvSource, PrnSource}
@@ -88,7 +94,42 @@ class EtlSpec extends SparkSpec {
     assert(e.getMessage.startsWith("CSV parsing error:"))
   }
 
-  // -- PRN source ---------------------------------------------------
+  test("CSV: the schema read from the header line is Spark's own inference, and runs no job") {
+    val cases = Seq(
+      ("a UTF-8 byte-order mark", "\uFEFFName,Address\nAl,Main 1\n", ",", "UTF-8"),
+      ("byte-order mark bytes read as latin1", "\u00EF\u00BB\u00BFName,Address\nAl,Main 1\n", ",", "ISO-8859-1"),
+      ("blank lines before the header", "\n  \r\n \nName,Address\nAl,Main 1\n", ",", "ISO-8859-1"),
+      ("\\r\\n line ends", "Name,Address\r\nAl,Main 1\r\nBo,Side 2\r\n", ",", "ISO-8859-1"),
+      ("lone \\r line ends", "Name,Address\rAl,Main 1\rBo,Side 2\r", ",", "ISO-8859-1"),
+      ("a quoted header field", "\"Name\",\"Credit, Limit\",Address\nAl,1,Main 1\n", ",", "ISO-8859-1"),
+      ("duplicate and empty header names", "Name,name,,Address,\nAl,Bo,x,Main 1,y\n", ",", "ISO-8859-1"),
+      ("-d ';'", "Name;Address;Postcode\n\"Al;x\";Main 1;1a\n", ";", "ISO-8859-1"))
+    val c = Bench.counters(spark)
+    try cases.foreach { case (what, content, delimiter, encoding) =>
+      val p = tmpFile(content, encoding)
+      val inferred = CsvSource.scan(spark, p, delimiter, encoding, fidelityChecks = false).get
+      assert(Bridge.drainListenerBus(spark))
+      c.reset()
+      val explicit = CsvSource.scan(spark, p, delimiter, encoding, fidelityChecks = true).get
+      assert(Bridge.drainListenerBus(spark))
+      assert(c.jobs.get == 0, s"$what: ${c.jobs.get} jobs before an action")
+      assert(explicit.schema == inferred.schema, what)
+      assert(explicit.collect().toSeq == inferred.collect().toSeq, what)
+    } finally spark.sparkContext.removeSparkListener(c)
+    // Spark's inference blanks only U+0020 and takes a tab line for the
+    // header; its reader, like the header line, skips it
+    val tabbed = rows(CsvSource.read(spark, tmpFile("\t\nName,Address\nAl,Main 1\n")))
+    assert(tabbed.map(r => (r("Name"), r("Address"))) == Seq(("Al", "Main 1")))
+  }
+
+  test("CSV: JavaScript whitespace is trimmed and stripped, NBSP and tabs included") {
+    val p = tmpFile("Name,Postcode,Birthday\n\tBob \u00A0,12\u00A0ab,\t1/2/2000 \n")
+    val got = rows(CsvSource.read(spark, p)).head
+    assert(got("Name") == "Bob")
+    assert(got("Postcode") == "12AB")
+    assert(got("Birthday") == "2000-02-01")
+  }
+
 
   test("PRN: full sample parses to the same 7 golden rows") {
     val got = rows(PrnSource.read(spark, prnPath))
@@ -220,6 +261,13 @@ class EtlSpec extends SparkSpec {
     assert(HtmlSink.render(csvDf) == HtmlSink.render(prnDf))
   }
 
+  test("PRN: slices are trimmed of JavaScript whitespace") {
+    val p = tmpFile("Name      Postcode\nBob\u00A0\u00A0\t\u00A0\u00A0  12 ab\u00A0\n")
+    val got = rows(PrnSource.read(spark, p, warn = _ => ())).head
+    assert(got("Name") == "Bob")
+    assert(got("Postcode") == "12AB")
+  }
+
   // -- CLI arg surface ----------------------------------------------
 
   test("CLI: validators accept case-insensitively and reject with reference messages") {
@@ -276,5 +324,23 @@ class EtlSpec extends SparkSpec {
     val rows = JsonSink.render(df)
     assert(rows.contains(""""Name":"Johnson, John""""))
     assert(rows.contains(""""Postcode":"3732GE""""))
+  }
+
+  test("CLI: a forked run under the tr locale prints the reference's bytes") {
+    // Lower-cased in tr, "CREDIT LIMIT" is "credıt lımıt"; upper-cased, "ié" is "İÉ"
+    val in = tmpFile("NAME,ADDRESS,POSTCODE,PHONE,CREDIT LIMIT,BIRTHDAY\n" +
+      "Ida,Børke 1,ié 12,020 1,12.5,1/2/2000\n")
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.filter(_.startsWith("--add-opens"))
+    val err = Files.createTempFile("graft_cli_", ".err")
+    err.toFile.deleteOnExit()
+    val cmd = Seq(java, "-Duser.language=tr", "-Duser.country=TR", "-Xmx1g") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.Cli", "csv", "json")
+    val proc = new ProcessBuilder(cmd.asJava).redirectInput(new File(in)).redirectError(err.toFile).start()
+    val out = proc.getInputStream.readAllBytes()
+    assert(proc.waitFor() == 0, Files.readString(err))
+    val expected = "[\n  {\"Name\":\"Ida\",\"Address\":\"Børke 1\",\"Postcode\":\"IÉ12\"," +
+      "\"Phone\":\"0201\",\"Credit Limit\":\"12.50\",\"Birthday\":\"2000-02-01\"}\n]\n"
+    assert(out.sameElements(expected.getBytes(StandardCharsets.UTF_8)), new String(out, StandardCharsets.UTF_8))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.Locale
+
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -55,6 +57,38 @@ class NormalizePropSpec extends SparkSpec {
     }
     runNorm(Normalize.creditLimit, inputs).foreach { case (_, once, _) =>
       assert(once.matches("-?\\d+\\.\\d{2}|-?Infinity"), s"money: '$once'")
+    }
+  }
+
+  /** (c, F1, F5) per latin1 character c: the reference's postcode and
+    * text normalizers applied to `c + "a" + c` by JavaScript, from
+    * `fixtures/js_latin1.tsv` (its generating command is in FIXTURES.md). */
+  private lazy val jsLatin1: Seq[(String, String, String)] = {
+    def chars(hex: String) = hex.split(" ").map(h => Integer.parseInt(h, 16).toChar).mkString
+    scala.io.Source.fromInputStream(getClass.getResourceAsStream("/fixtures/js_latin1.tsv"), "UTF-8")
+      .getLines().map(_.split("\t")).map(f => (Integer.parseInt(f(0), 16).toChar.toString, chars(f(1)), chars(f(2))))
+      .toSeq
+  }
+
+  test("postcode and text match JavaScript on every latin1 character, also under the tr locale") {
+    assert(spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false")
+    def check(): Unit = {
+      import spark.implicits._
+      val got = jsLatin1.map { case (c, _, _) => c + "a" + c }.toDF("s")
+        .select(Normalize.postcode(col("s")), Normalize.text(col("s"))).collect()
+      jsLatin1.zip(got).foreach { case ((c, f1, f5), r) =>
+        assert((r.getString(0), r.getString(1)) == (f1, f5), f"U+${c.head.toInt}%04X")
+      }
+    }
+    check()
+    val (display, format) = (Locale.getDefault(Locale.Category.DISPLAY), Locale.getDefault(Locale.Category.FORMAT))
+    val default = Locale.getDefault
+    Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+    try check()
+    finally {
+      Locale.setDefault(default)
+      Locale.setDefault(Locale.Category.DISPLAY, display)
+      Locale.setDefault(Locale.Category.FORMAT, format)
     }
   }
 
