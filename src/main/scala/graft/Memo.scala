@@ -47,13 +47,18 @@ object Memo {
 
   private def free(slot: Slot): Unit = {
     slot.value match {
-      // the block-backed RDD a LogicalRDD holds: `df.unpersist()` is a no-op
-      // there, the frame is not in the catalog cache
-      case df: Dataset[_] => df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
-        .foreach(_.unpersist(blocking = false))
+      case df: Dataset[_] => freeBlocks(df)
       case _ =>
     }
     slot.key = null
     slot.value = null
   }
+
+  /** Frees the blocks of a `localCheckpoint`ed frame: the block-backed RDD
+    * its LogicalRDD holds. `df.unpersist()` is a no-op there, the frame is
+    * not in the catalog cache. A frame that reads the freed blocks fails
+    * when it next runs. */
+  private[graft] def freeBlocks(df: Dataset[_]): Unit =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
+      .foreach(_.unpersist(blocking = false))
 }

@@ -23,8 +23,9 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // release per-query persisted intermediates (LSH signature
-        // frames etc.) so executor memory doesn't accrue across queries
+        // drop the query's catalog-cache entries (persisted frames);
+        // localCheckpoint blocks are not in that cache: Memo and
+        // Fixpoint free their own
         spark.catalog.clearCache()
       }
       if (keys.nonEmpty) {

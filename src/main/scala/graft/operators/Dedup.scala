@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.{Memo, Tables}
 
@@ -1480,61 +1481,55 @@ ORDER BY tau_x10k"""
     // count cannot change the min-label fixpoint. At true scale the
     // label table is large and the session width is the right one;
     // this mirrors how an iterative job sizes its own stages.
-    // AQE stays ON here, unlike the graph loops' GraftSession.AqeOff
-    // scope: with it off the CC consumers ran a half to a fifth of the
-    // jobs but 1.2-1.5x the executor CPU (sf0.1, 4 cpus).
+    // AQE stays ON here, unlike the graph loops: with it off the CC
+    // consumers ran a half to a fifth of the jobs but 1.2-1.5x the
+    // executor CPU (sf0.1, 4 cpus).
     val p = CcPartitions
-    // loop-invariant edge list: partitioned ONCE on dst (the join key
-    // of every round's neighbor lookup) and materialized
-    val edges = edges0.repartition(p, col("dst")).localCheckpoint()
-    // the p-wide repartition ahead of the same-key dropDuplicates
-    // shares one exchange (the CLAUDE.md dropDuplicates rule)
-    var labels = edges.select(col("src").as("doc_id"))
-      .repartition(p, col("doc_id")).dropDuplicates("doc_id")
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .localCheckpoint()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      // labels is doc_id-partitioned; the alias to dst carries the
-      // partitioning, so this join zips with edges' dst partitioning
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("dst"), col("cluster_id").as("nbr_label")), "dst")
-        .repartition(p, col("src"))
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("nbr_label")).as("nbr_min"))
-      // hop: take the min over self + neighbors (labels only
-      // decrease); the OLD label rides along so the convergence check
-      // below needs no extra join
-      val prop = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cluster_id").as("old"),
-          least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id"))).as("cluster_id"))
-      // jump: l(u) <- min(l(u), l(l(u))) — label values are node ids,
-      // so every label row resolves against the labels frame itself.
-      // (A second jump per round — log₄ convergence — was measured
-      // SLOWER here: the self-join's duplicated subtree recomputes
-      // the whole round twice, costing more than the saved rounds.)
-      val next = prop.repartition(p, col("cluster_id"))
-        .join(prop.select(col("doc_id").as("cluster_id"), col("cluster_id").as("pl")),
-          Seq("cluster_id"), "left")
-        .select(col("doc_id"), col("old"),
-          least(col("cluster_id"), coalesce(col("pl"), col("cluster_id"))).as("cluster_id"))
-        // back to doc_id partitioning: ALL of next round's label joins
-        // then zip exchange-free
-        .repartition(p, col("doc_id"))
-        .select(col("doc_id"), col("cluster_id"),
-          (col("cluster_id") < col("old")).cast("long").as("ch"))
-        .localCheckpoint()
-      // the changed count is a map-only sum over the checkpointed
-      // partitions — the previous form re-joined next against labels
-      // (one extra ~5-stage job per round on a loop that is pure
-      // per-job fixed overhead at test SF)
-      val changed = next.agg(coalesce(sum(col("ch")), lit(0L)).as("c")).first().getLong(0)
-      converged = changed == 0
-      labels = next.select(col("doc_id"), col("cluster_id"))
-      rounds += 1
+    Fixpoint.run(edges0.sparkSession, aqe = true) { fp =>
+      // loop-invariant edge list: partitioned ONCE on dst (the join key
+      // of every round's neighbor lookup)
+      val edges = fp.checkpoint(edges0.repartition(p, col("dst")))
+      // the p-wide repartition ahead of the same-key dropDuplicates
+      // shares one exchange with it
+      val labels0 = fp.checkpoint(edges.select(col("src").as("doc_id"))
+        .repartition(p, col("doc_id")).dropDuplicates("doc_id")
+        .select(col("doc_id"), col("doc_id").as("cluster_id")))
+      val res = fp.loop(maxRounds, labels0) { (labels, _) =>
+        // labels is doc_id-partitioned; the alias to dst carries the
+        // partitioning, so this join zips with edges' dst partitioning
+        val nbrMin = edges
+          .join(labels.select(col("doc_id").as("dst"), col("cluster_id").as("nbr_label")), "dst")
+          .repartition(p, col("src"))
+          .groupBy(col("src").as("doc_id"))
+          .agg(min(col("nbr_label")).as("nbr_min"))
+        // hop: take the min over self + neighbors (labels only
+        // decrease); the OLD label rides along so the convergence check
+        // below needs no extra join
+        val prop = labels.join(nbrMin, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("cluster_id").as("old"),
+            least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id"))).as("cluster_id"))
+        // jump: l(u) <- min(l(u), l(l(u))) — label values are node ids,
+        // so every label row resolves against the labels frame itself.
+        // (A second jump per round — log₄ convergence — was measured
+        // SLOWER here: the self-join's duplicated subtree recomputes
+        // the whole round twice, costing more than the saved rounds.)
+        val next = fp.checkpoint(prop.repartition(p, col("cluster_id"))
+          .join(prop.select(col("doc_id").as("cluster_id"), col("cluster_id").as("pl")),
+            Seq("cluster_id"), "left")
+          .select(col("doc_id"), col("old"),
+            least(col("cluster_id"), coalesce(col("pl"), col("cluster_id"))).as("cluster_id"))
+          // back to doc_id partitioning: ALL of next round's label joins
+          // then zip exchange-free
+          .repartition(p, col("doc_id"))
+          .select(col("doc_id"), col("cluster_id"),
+            (col("cluster_id") < col("old")).cast("long").as("ch")))
+        // the changed count is a map-only sum over the checkpointed
+        // partitions
+        val changed = next.agg(coalesce(sum(col("ch")), lit(0L)).as("c")).first().getLong(0)
+        Fixpoint.Round(next.select(col("doc_id"), col("cluster_id")), done = changed == 0)
+      }
+      (res.state, res.rounds)
     }
-    (labels, rounds)
   }
 
   /** Resolved (doc_id, cluster_id) labels, memoized per (session, dir)
@@ -1551,10 +1546,12 @@ ORDER BY tau_x10k"""
       val (labels, _) = resolveComponents(edges)
       // union singletons back: docs with no near-dup edge are their own
       // cluster — they never enter the iteration
-      Tables.documents(s, dir).select(col("doc_id"))
+      val all = Tables.documents(s, dir).select(col("doc_id"))
         .join(labels, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
         .localCheckpoint()
+      Memo.freeBlocks(labels)
+      all
     }
 
   def qClusters(s: SparkSession, dir: String): DataFrame =
@@ -1878,9 +1875,7 @@ ORDER BY tau_x10k"""
   // truncating division, operands non-negative, bit-identical on
   // both engines; dangling nodes absorb rank and contribute none —
   // the deterministic leak variant, stated in the trace rather than
-  // libm-renormalized away). Loop shape: edges repartitioned ONCE
-  // and checkpointed (loop-invariant), scores checkpointed per round
-  // so the plan never grows; the oracle unrolls the same rounds as
+  // libm-renormalized away). The oracle unrolls the same rounds as
   // MATERIALIZED chained CTEs (one per step — the
   // accumulator-as-column-ref rule).
   private val PrMaxRounds = 6
@@ -1888,56 +1883,39 @@ ORDER BY tau_x10k"""
   def qPagerankConverge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val p0 = CcPartitions
-    // offset projection over the shared [[copurchaseEdges]] memo —
-    // map-only over the checkpointed blocks, partitioning preserved
-    // through the alias (src = c)
-    val edges = copurchaseEdges(s, dir)
-      .select(col("c").as("src"), (col("p") + 10000000L).as("dst"))
-    graft.GraftSession.withConf(s, graft.GraftSession.AqeOff) {
-    // deg consumes the edge memo's hash(src, 8) partitioning —
-    // exchange-free groupBy whose output zips into the node join;
-    // the node list pins its width BEFORE the distinct so dedup and
-    // the deg join share the union's one exchange (r17, guide §2.4 —
-    // previously: 32-wide distinct exchange + 32-wide deg exchange +
-    // the explicit 8-wide re-pin = 3 exchanges for this init)
-    val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val nodes = edges.select(col("src").as("node"))
-      .unionAll(edges.select(col("dst").as("node")))
-      .repartition(p0, col("node")).distinct()
-      .join(deg, Seq("node"), "left")
-      .select(col("node"), coalesce(col("outdeg"), lit(1L)).as("outdeg"))
-      .localCheckpoint()
-    var pr = nodes.select(col("node"), col("outdeg"), lit(1000000000L).as("pr"))
-      .localCheckpoint()
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    var r = 0
-    var done = false
-    while (r < PrMaxRounds && !done) {
-      r += 1
-      // one exchange per round (r17, guide §2.4): pin the width BEFORE
-      // the groupBy so the rank-mass aggregation consumes hash(dst, 8)
-      // exchange-free and the score join zips on it — the
-      // qHitsConverge half-step fusion (the groupBy previously planned
-      // its own exchange and the pin re-exchanged the aggregate)
-      val recv = edges.join(pr, edges("src") === pr("node"))
-        .select(col("dst"), expr("pr div outdeg").as("c"))
-        .repartition(p0, col("dst"))
-        .groupBy(col("dst").as("node")).agg(sum(col("c")).as("recv"))
-      val next = pr.select(col("node"), col("outdeg"), col("pr").as("prev"))
-        .join(recv, Seq("node"), "left")
-        .select(col("node"), col("outdeg"),
-          (lit(150000000L) + expr("(coalesce(recv, 0) * 85) div 100")).as("pr"),
-          col("prev"))
-        .localCheckpoint()
-      val row = next.agg(
-        coalesce(sum(abs(col("pr") - col("prev"))), lit(0L)).as("d"),
-        coalesce(max(col("pr")), lit(0L)).as("m")).collect()(0)
-      rounds += ((r.toLong, row.getLong(0), row.getLong(1)))
-      pr = next.select(col("node"), col("outdeg"), col("pr"))
-      done = row.getLong(0) == 0L
+    val edges = copurchaseGraph(s, dir)
+    Fixpoint.run(s, aqe = false) { fp =>
+      // deg consumes the edge memo's hash(src, 8) partitioning —
+      // exchange-free groupBy whose output zips into the node join;
+      // the node list pins its width BEFORE the distinct so dedup and
+      // the deg join share the union's one exchange
+      val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
+      val nodes = fp.checkpoint(edges.select(col("src").as("node"))
+        .unionAll(edges.select(col("dst").as("node")))
+        .repartition(p0, col("node")).distinct()
+        .join(deg, Seq("node"), "left")
+        .select(col("node"), coalesce(col("outdeg"), lit(1L)).as("outdeg")))
+      val pr0 = fp.checkpoint(nodes.select(col("node"), col("outdeg"), lit(1000000000L).as("pr")))
+      fp.loop(PrMaxRounds, pr0) { (pr, r) =>
+        // one exchange per round: the width pin sits BEFORE the groupBy
+        // so the rank-mass aggregation consumes hash(dst, 8)
+        // exchange-free and the score join zips on it
+        val recv = edges.join(pr, edges("src") === pr("node"))
+          .select(col("dst"), expr("pr div outdeg").as("c"))
+          .repartition(p0, col("dst"))
+          .groupBy(col("dst").as("node")).agg(sum(col("c")).as("recv"))
+        val next = fp.checkpoint(pr.select(col("node"), col("outdeg"), col("pr").as("prev"))
+          .join(recv, Seq("node"), "left")
+          .select(col("node"), col("outdeg"),
+            (lit(150000000L) + expr("(coalesce(recv, 0) * 85) div 100")).as("pr"),
+            col("prev")))
+        val row = next.agg(
+          coalesce(sum(abs(col("pr") - col("prev"))), lit(0L)).as("d"),
+          coalesce(max(col("pr")), lit(0L)).as("m")).collect()(0)
+        Fixpoint.Round(next.select(col("node"), col("outdeg"), col("pr")),
+          Seq((r.toLong, row.getLong(0), row.getLong(1))), done = row.getLong(0) == 0L)
+      }.trace.toDF("round", "delta", "pr_max").orderBy(col("round"))
     }
-    rounds.toSeq.toDF("round", "delta", "pr_max").orderBy(col("round"))
-    } // withConf(AqeOff)
   }
 
   val qPagerankConvergeSql: String = {
@@ -2083,71 +2061,51 @@ WHERE a.n_members > 1 ORDER BY a.cluster_id"""
   // each round's removals push more nodes under the bar (7 rounds to
   // total core collapse at sf0.01: 2948 → 2619 → 2316 → 1869 → 1119
   // → 90 → 0) — which is exactly the phenomenon the gated
-  // (round, nodes, pairs) trace exhibits. Loop discipline as CC/
-  // HITS: edges checkpointed per round (fixed-width longs), one
-  // degree partial-agg + two semi-joins per round, 1-row collect;
-  // the oracle unrolls the same rounds as chained MATERIALIZED CTEs
-  // and emits the strictly-decreasing prefix.
+  // (round, nodes, pairs) trace exhibits. One degree partial-agg +
+  // two semi-joins per round; the oracle unrolls the same rounds as
+  // chained MATERIALIZED CTEs and emits the strictly-decreasing
+  // prefix.
   private val KcoreK = 25
   private val KcoreMaxRounds = 10
 
   def qKcore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val p0 = CcPartitions
-    // round-0 edges are the offset projection of the shared
-    // [[copurchaseEdges]] memo (map-only, partitioning preserved;
-    // memo built OUTSIDE the loop-AQE scope — GraftSession.AqeOff);
-    // each peel round re-checkpoints its own shrunk edge list below
-    var edges = copurchaseEdges(s, dir)
-      .select(col("c").as("src"), (col("p") + 10000000L).as("dst"))
-    graft.GraftSession.withConf(s, graft.GraftSession.AqeOff) {
-    var prevNodes = edges.select(col("src").as("node"))
-      .unionAll(edges.select(col("dst").as("node"))).distinct().count()
-    val trace = Array.newBuilder[(Long, Long, Long)]
-    var r = 0
-    var done = false
-    while (r < KcoreMaxRounds && !done) {
-      r += 1
-      // ONE exchange for the degree peel (r17, guide §2.4): the width
-      // pin moves BEFORE the groupBy, so the aggregation consumes
-      // hash(node, 8) exchange-free and the filter preserves that
-      // partitioning into the checkpoint — previously the groupBy
-      // planned its own exchange and the pin re-exchanged the
-      // filtered keep set (2 exchanges + 2 AQE stage-jobs per round).
-      val deg = edges.select(col("src").as("node"))
-        .unionAll(edges.select(col("dst").as("node")))
-        .repartition(p0, col("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= KcoreK).select(col("node"))
-        .localCheckpoint()
-      // keep is checkpointed (stats erased — no auto-broadcast, the
-      // CLAUDE.md rule) and node-corpus-sized at scale, so it stays a
-      // shuffle semi join with the hash build pinned on the keep side:
-      // the src probe zips on the shared hash(·, 8) partitioning, the
-      // dst probe pays the round's one edge re-key.
-      val next = edges
-        .join(keep.withColumnRenamed("node", "src").hint("shuffle_hash"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("node", "dst").hint("shuffle_hash"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .repartition(p0, col("src")).localCheckpoint()
-      // one fused 2-row collect for both counts (was two count jobs
-      // per round — the hits-converge job-overhead lesson). On the
-      // stable-core fixpoint the freshly built `next` equals `edges`
-      // by construction (same keep set both sides), so building it
-      // before the check changes no gated value.
-      val cnts = keep.agg(count(lit(1)).as("n"))
-        .unionAll(next.agg(count(lit(1)).as("n"))).collect()
-      val (nKeep, nEdges) = (cnts(0).getLong(0), cnts(1).getLong(0))
-      if (nKeep == prevNodes) done = true
-      else {
-        edges = next
-        trace += ((r.toLong, nKeep, nEdges))
-        prevNodes = nKeep
-        if (nKeep == 0) done = true
-      }
+    val edges0 = copurchaseGraph(s, dir)
+    Fixpoint.run(s, aqe = false) { fp =>
+      val nodes0 = edges0.select(col("src").as("node"))
+        .unionAll(edges0.select(col("dst").as("node"))).distinct().count()
+      fp.loop(KcoreMaxRounds, (edges0, nodes0)) { case ((edges, prevNodes), r) =>
+        // ONE exchange for the degree peel: the width pin sits BEFORE
+        // the groupBy, so the aggregation consumes hash(node, 8)
+        // exchange-free and the filter preserves that partitioning into
+        // the checkpoint
+        val deg = edges.select(col("src").as("node"))
+          .unionAll(edges.select(col("dst").as("node")))
+          .repartition(p0, col("node"))
+          .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+        val keep = fp.checkpoint(deg.filter(col("deg") >= KcoreK).select(col("node")))
+        // keep is checkpointed (its stats erased, so no auto-broadcast)
+        // and node-corpus-sized at scale, so it stays a
+        // shuffle semi join with the hash build pinned on the keep side:
+        // the src probe zips on the shared hash(·, 8) partitioning, the
+        // dst probe pays the round's one edge re-key.
+        val next = fp.checkpoint(edges
+          .join(keep.withColumnRenamed("node", "src").hint("shuffle_hash"), Seq("src"), "left_semi")
+          .join(keep.withColumnRenamed("node", "dst").hint("shuffle_hash"), Seq("dst"), "left_semi")
+          .select(col("src"), col("dst"))
+          .repartition(p0, col("src")))
+        // one fused 2-row collect for both counts. On the stable-core
+        // fixpoint the freshly built `next` equals `edges` by
+        // construction (same keep set both sides), so building it
+        // before the check changes no gated value.
+        val cnts = keep.agg(count(lit(1)).as("n"))
+          .unionAll(next.agg(count(lit(1)).as("n"))).collect()
+        val (nKeep, nEdges) = (cnts(0).getLong(0), cnts(1).getLong(0))
+        if (nKeep == prevNodes) Fixpoint.Round((edges, prevNodes), done = true)
+        else Fixpoint.Round((next, nKeep), Seq((r.toLong, nKeep, nEdges)), done = nKeep == 0)
+      }.trace.toDF("round", "n_nodes", "n_pairs").orderBy(col("round"))
     }
-    trace.result().toSeq.toDF("round", "n_nodes", "n_pairs").orderBy(col("round"))
-    } // withConf(AqeOff)
   }
 
   val qKcoreSql: String = {
@@ -2697,6 +2655,13 @@ FROM sz JOIN pc USING (cluster_id) ORDER BY cluster_id"""
         .select(col("c"), col("p")).distinct()
         .repartition(CcPartitions, col("c")).localCheckpoint())
 
+  /** [[copurchaseEdges]] as one id space, (src, dst) = (customer, part +
+    * 10⁷): the directed graph of pagerank, k-core, BFS and path counts.
+    * A map-only projection over the memo's blocks whose alias keeps its
+    * hash(src, 8) partitioning. */
+  private def copurchaseGraph(s: SparkSession, dir: String): DataFrame =
+    copurchaseEdges(s, dir).select(col("c").as("src"), (col("p") + 10000000L).as("dst"))
+
   // ---------------------------------------------------------------
   // COMMON-NEIGHBOR PART SIMILARITY — item-item collaborative
   // filtering's counting core on the co-purchase graph: two parts
@@ -3126,9 +3091,8 @@ FROM mv GROUP BY 1, 2 ORDER BY 1, 2"""
   // MATERIALIZED CTEs (the deep-oracle rule) and emits rows up to the
   // first zero-delta round, mirroring the early exit. Scale shape:
   // per round two co-partitioned join+groupBy sweeps over the
-  // checkpointed edge list, a 1-row max broadcast, and metadata-only
-  // delta aggregates — the qPagerankStep shape iterated, labels
-  // checkpointed per round so plans don't grow. Normalization goes
+  // checkpointed edge list and metadata-only max and delta
+  // aggregates — the qPagerankStep shape iterated. Normalization goes
   // through DECIMAL(38,0)/HUGEINT (raw·1e6 can pass Long at
   // 100 TB-scale degrees).
   // 6 rounds: the per-round L1 delta decays geometrically (~10×/round
@@ -3143,134 +3107,89 @@ FROM mv GROUP BY 1, 2 ORDER BY 1, 2"""
     val p0 = CcPartitions
     // both join orientations materialized ONCE: each half-step then
     // zips its score-frame join exchange-free and pays only the one
-    // groupBy shuffle the half-step IS (the CC loop-invariant-edges
-    // discipline; a single edge copy re-exchanged every round at
-    // first measurement). The by-c orientation is the shared
-    // [[copurchaseEdges]] memo — built OUTSIDE the loop-AQE scope
-    // (corpus-scale single-pass plan; see GraftSession.AqeOff).
+    // groupBy shuffle the half-step IS. The by-c orientation is the
+    // shared [[copurchaseEdges]] memo, built outside the AQE-off scope
+    // (a corpus-scale single-pass plan).
     val edgesByC = copurchaseEdges(s, dir)
-    graft.GraftSession.withConf(s, graft.GraftSession.AqeOff) {
-    val edgesByP = edgesByC.repartition(p0, col("p")).localCheckpoint()
-    // score inits dedup ON the edge lists' existing hash(·, 8)
-    // partitioning (select preserves it), so neither distinct plans
-    // an exchange and the checkpoints inherit the width the loop
-    // zips on (r17 — previously each init paid a 32-wide distinct
-    // exchange plus the explicit 8-wide re-pin)
-    var hub = edgesByC.select(col("c")).distinct()
-      .select(col("c"), lit(1000000L).as("h"))
-      .localCheckpoint()
-    var auth = edgesByP.select(col("p")).distinct()
-      .select(col("p"), lit(1000000L).as("a"))
-      .localCheckpoint()
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    var r = 0
-    var done = false
-    // LAGGED delta_hub (r18, guide §2.4/§1.2): the round previously
-    // ran 5 actions (2 checkpoints, 2 max collects, 1 fused delta
-    // collect). delta_auth needs only maxA, so it rides the maxH
-    // collect; delta_hub needs maxH, so it rides the NEXT round's
-    // maxA collect (both frames stay cached — the sums are map-only).
-    // 4 actions per round; the exit test is unchanged because
-    // delta_hub is fetched eagerly (one standalone 1-row job) exactly
-    // when delta_auth == 0 — the only state in which the exit is
-    // reachable — and the pending value is drained after the loop for
-    // the final trace row. Same gated rows, same early-exit round.
-    var dhPending: Option[(Long, DataFrame)] = None // (round, hNext w/ dh)
-    var rounds0Auth = 0L // delta_auth of the round whose delta_hub is pending
-    def drainDh(): Long = {
-      val (_, hN) = dhPending.get
-      val v = hN.agg(coalesce(sum(col("dh")), lit(0L))).collect()(0).getLong(0)
-      dhPending = None
-      v
+    Fixpoint.run(s, aqe = false) { fp =>
+      val edgesByP = fp.checkpoint(edgesByC.repartition(p0, col("p")))
+      // score inits dedup ON the edge lists' existing hash(·, 8)
+      // partitioning (select preserves it), so neither distinct plans
+      // an exchange and the checkpoints inherit the width the loop
+      // zips on
+      val hub0 = fp.checkpoint(edgesByC.select(col("c")).distinct()
+        .select(col("c"), lit(1000000L).as("h")))
+      val auth0 = fp.checkpoint(edgesByP.select(col("p")).distinct()
+        .select(col("p"), lit(1000000L).as("a")))
+      def deltaHub(hNext: DataFrame): DataFrame = hNext.agg(coalesce(sum(col("dh")), lit(0L)).as("v"))
+      // LAGGED delta_hub: delta_auth needs only maxA, so it rides the
+      // maxH collect; delta_hub needs maxH, so it rides the NEXT round's
+      // maxA collect (both frames stay cached — the sums are map-only),
+      // which makes 4 actions per round. The state carries the pending
+      // (delta_auth, hNext) of the round whose delta_hub is unread.
+      // delta_hub is fetched eagerly (one standalone 1-row job) when
+      // delta_auth == 0 — the only state in which the exit is reachable
+      // — and in the last round, for its trace row.
+      val start = (hub0, auth0, Option.empty[(Long, DataFrame)])
+      fp.loop(HitsMaxRounds, start) { case ((hub, auth, pending), r) =>
+        // the previous score rides each checkpoint so the convergence
+        // delta is a map-only sum over it — no per-round compare join.
+        // The round max: checkpoint the RAW half-step aggregate
+        // (previous score attached), read the max in a map-only 1-row
+        // collect over the cached blocks, and apply it to the
+        // normalization as a LITERAL. No single-partition WindowExec,
+        // and no crossJoin(broadcast(agg)) — the broadcast form plans
+        // the half-step subtree under BOTH join sides (each round
+        // computed twice, the expensive-build-side trap). The
+        // normalized score is a cheap projection over the cached raw
+        // frame, so its three consumers (next half-step, delta sum,
+        // next round's previous-score join) re-read cache, not the
+        // plan. ONE exchange per half-step: the width pin sits BEFORE
+        // the aggregation, so the groupBy consumes hash(p, 8)
+        // exchange-free and the previous-score join zips on the same
+        // partitioning.
+        val aRaw = fp.checkpoint(edgesByC.join(hub, "c")
+          .repartition(p0, col("p"))
+          .groupBy(col("p")).agg(sum(col("h")).as("raw"))
+          .join(auth.withColumnRenamed("a", "pa"), "p"))
+        // collect 1: this round's maxA + (lagged) last round's delta_hub
+        val m1 = aRaw.agg(max(col("raw")).as("v"))
+        val (maxA, lagged) = pending match {
+          case Some((dAuthPrev, hPrev)) =>
+            val rows = m1.unionAll(deltaHub(hPrev)).collect()
+            (rows(0).getLong(0), Seq((r - 1L, rows(1).getLong(0), dAuthPrev)))
+          case None => (m1.collect()(0).getLong(0), Nil)
+        }
+        val aNext = aRaw.select(col("p"),
+            expr(s"(cast(raw as decimal(38,0)) * 1000000) div cast($maxA as bigint)").as("a"),
+            col("pa"))
+          .select(col("p"), col("a"), abs(col("a") - col("pa")).as("da"))
+        val hRaw = fp.checkpoint(edgesByP.join(aNext.select(col("p"), col("a")), "p")
+          .repartition(p0, col("c"))
+          .groupBy(col("c")).agg(sum(col("a")).as("raw"))
+          .join(hub.withColumnRenamed("h", "ph"), "c"))
+        // collect 2: this round's maxH + this round's delta_auth
+        // (map-only sums over the eagerly-checkpointed frames; no
+        // crossJoin pairing — a 1-row broadcast per round costs more
+        // KeyLock time than it saves)
+        val c2 = hRaw.agg(max(col("raw")).as("v"))
+          .unionAll(aNext.agg(coalesce(sum(col("da")), lit(0L)).as("v")))
+          .collect()
+        val (maxH, dAuth) = (c2(0).getLong(0), c2(1).getLong(0))
+        val hNext = hRaw.select(col("c"),
+            expr(s"(cast(raw as decimal(38,0)) * 1000000) div cast($maxH as bigint)").as("h"),
+            col("ph"))
+          .select(col("c"), col("h"), abs(col("h") - col("ph")).as("dh"))
+        val (hubN, authN) = (hNext.select(col("c"), col("h")), aNext.select(col("p"), col("a")))
+        // early exit is load-bearing at scale: a graph at its fixpoint
+        // at round k must not pay rounds k+1..max of corpus-scale
+        // shuffles
+        if (dAuth == 0L || r == HitsMaxRounds) {
+          val dHub = deltaHub(hNext).collect()(0).getLong(0)
+          Fixpoint.Round((hubN, authN, None), lagged :+ ((r.toLong, dHub, dAuth)), done = dHub == 0L)
+        } else Fixpoint.Round((hubN, authN, Some((dAuth, hNext))), lagged)
+      }.trace.toDF("round", "delta_hub", "delta_auth").orderBy(col("round"))
     }
-    while (r < HitsMaxRounds && !done) {
-      r += 1
-      // the previous score rides each checkpoint so the convergence
-      // delta is a map-only sum over it (the fused CC changed-count
-      // discipline) — no per-round compare join.
-      // The round max (r13 verdict item 3): checkpoint the RAW
-      // half-step aggregate (previous score attached), read the max
-      // in a map-only 1-row collect over the cached blocks, and
-      // apply it to the normalization as a LITERAL. No
-      // single-partition WindowExec (the family's last
-      // single-task stage), and no crossJoin(broadcast(agg)) — the
-      // broadcast form plans the half-step subtree under BOTH join
-      // sides (each round computed twice, the expensive-build-side
-      // trap). The normalized score is a cheap projection over the
-      // cached raw frame, so its three consumers (next half-step,
-      // delta sum, next round's previous-score join) re-read cache,
-      // not the plan.
-      // ONE exchange per half-step (r17, guide §2.4): the width pin
-      // moves BEFORE the aggregation, so the groupBy consumes
-      // hash(p, 8) exchange-free and the previous-score join zips on
-      // the same partitioning — previously groupBy planned its own
-      // exchange (AQE-coalesced) and the pin re-exchanged the
-      // aggregate (2 exchanges = 2 extra AQE stage-jobs per
-      // half-step x 12 half-steps; the shuffled bytes are the same
-      // ~6 MB either way at test SF — per-partition partial
-      // aggregation barely shrinks this key set).
-      val aRaw = edgesByC.join(hub, "c")
-        .repartition(p0, col("p"))
-        .groupBy(col("p")).agg(sum(col("h")).as("raw"))
-        .join(auth.withColumnRenamed("a", "pa"), "p")
-        .localCheckpoint()
-      // collect 1: this round's maxA + (lagged) last round's delta_hub
-      val m1 = aRaw.agg(max(col("raw")).as("v"))
-      val c1 = dhPending match {
-        case Some((pr, hN)) =>
-          val rows = m1.unionAll(
-            hN.agg(coalesce(sum(col("dh")), lit(0L)).as("v"))).collect()
-          val dHubPrev = rows(1).getLong(0)
-          rounds += ((pr, dHubPrev, rounds0Auth))
-          dhPending = None
-          rows(0).getLong(0)
-        case None => m1.collect()(0).getLong(0)
-      }
-      val maxA = c1
-      val aNext = aRaw.select(col("p"),
-          expr(s"(cast(raw as decimal(38,0)) * 1000000) div cast($maxA as bigint)").as("a"),
-          col("pa"))
-        .select(col("p"), col("a"), abs(col("a") - col("pa")).as("da"))
-      val hRaw = edgesByP.join(aNext.select(col("p"), col("a")), "p")
-        .repartition(p0, col("c"))
-        .groupBy(col("c")).agg(sum(col("a")).as("raw"))
-        .join(hub.withColumnRenamed("h", "ph"), "c")
-        .localCheckpoint()
-      // collect 2: this round's maxH + this round's delta_auth
-      // (map-only sums over the eagerly-checkpointed frames; no
-      // crossJoin pairing — a 1-row broadcast per round costs more
-      // KeyLock time than it saves)
-      val c2 = hRaw.agg(max(col("raw")).as("v"))
-        .unionAll(aNext.agg(coalesce(sum(col("da")), lit(0L)).as("v")))
-        .collect()
-      val (maxH, dAuth) = (c2(0).getLong(0), c2(1).getLong(0))
-      val hNext = hRaw.select(col("c"),
-          expr(s"(cast(raw as decimal(38,0)) * 1000000) div cast($maxH as bigint)").as("h"),
-          col("ph"))
-        .select(col("c"), col("h"), abs(col("h") - col("ph")).as("dh"))
-      dhPending = Some((r.toLong, hNext))
-      rounds0Auth = dAuth
-      auth = aNext.select(col("p"), col("a"))
-      hub = hNext.select(col("c"), col("h"))
-      // early exit is load-bearing at scale: a graph at its fixpoint
-      // at round k must not pay rounds k+1..max of corpus-scale
-      // shuffles (an r10 review finding reversed the lazy-trace form
-      // that did exactly that). The exit is only reachable when
-      // dAuth == 0, so delta_hub is fetched eagerly just then.
-      if (dAuth == 0L) {
-        val dHub = drainDh()
-        rounds += ((r.toLong, dHub, dAuth))
-        done = dHub == 0L
-      }
-    }
-    // drain the last round's pending delta_hub for its trace row
-    if (dhPending.isDefined) {
-      val pr = dhPending.get._1
-      val dHub = drainDh()
-      rounds += ((pr, dHub, rounds0Auth))
-    }
-    rounds.toSeq.toDF("round", "delta_hub", "delta_auth").orderBy(col("round"))
-    } // withConf(AqeOff)
   }
 
   val qHitsConvergeSql: String = {
@@ -3307,31 +3226,17 @@ SELECT CAST(round AS BIGINT) AS round, delta_hub, delta_auth FROM alld, stop WHE
   // anti-join). Gated per level: node count, min/max id, and the id
   // sum as a DECIMAL(38,0)-backed string (no wrap horizon).
   //
-  // Scale shape: the textbook distributed BFS — the undirected edge
-  // list is repartitioned by src ONCE and checkpointed
-  // (loop-invariant, every round's frontier join co-locates on it);
-  // each frontier is repartitioned on the node key BEFORE its
-  // dropDuplicates so dedup and the visited anti-join share one
-  // exchange; frontier and visited are checkpointed per round so the
-  // plan never grows (the [[qPagerankConverge]] loop discipline).
+  // Scale shape: the textbook distributed BFS ([[levelExpansion]]).
   // Driver traffic is 5 one-row stat reads — never a node list. The
   // oracle unrolls the same 4 rounds as MATERIALIZED chained CTEs.
   private val BfsRounds = 4
 
-  def qBfsLevels(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val p0 = CcPartitions
-    val edges = copurchaseEdges(s, dir)
-      .select(col("c").as("src"), (col("p") + 10000000L).as("dst"))
-    graft.GraftSession.withConf(s, graft.GraftSession.AqeOff) {
-    val eb = edges
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(p0, col("src")).localCheckpoint()
-    val seed = edges.groupBy(col("dst").as("node")).agg(count(lit(1)).as("d"))
-      .orderBy(col("d").desc, col("node")).limit(1).select(col("node"))
-      .localCheckpoint()
-    def levelStats(level: Long, f: DataFrame): Row = {
+  def qBfsLevels(s: SparkSession, dir: String): DataFrame =
+    levelExpansion(s, dir, Nil, _.dropDuplicates("node"),
+      StructType(Seq(
+        StructField("level", LongType), StructField("n_nodes", LongType),
+        StructField("min_node", LongType), StructField("max_node", LongType),
+        StructField("sum_node", StringType)))) { (level, f) =>
       val r = f.agg(count(lit(1)).as("n"),
         coalesce(min(col("node")), lit(-1L)).as("mn"),
         coalesce(max(col("node")), lit(-1L)).as("mx"),
@@ -3340,37 +3245,40 @@ SELECT CAST(round AS BIGINT) AS round, delta_hub, delta_auth FROM alld, stop WHE
       Row(level, r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDecimal(3).toBigInteger.toString)
     }
-    val out = scala.collection.mutable.ArrayBuffer(levelStats(0L, seed))
-    // visited = the chain of prior frontiers (r18): the union-and-
-    // re-checkpoint frame cost one checkpoint job plus one p0-wide
-    // exchange per level; anti-joining each prior frontier instead is
-    // the same set subtraction over the SAME checkpointed blocks —
-    // BfsRounds is a small constant, every frontier is already
-    // node-partitioned (or broadcast-sized), and no per-level
-    // materialization remains.
-    var frontiers = List(seed)
-    var frontier = seed
-    var lvl = 0
-    while (lvl < BfsRounds) {
-      lvl += 1
-      val next = frontiers.foldLeft(
-          eb.join(frontier, eb("src") === frontier("node"))
-            .select(col("dst").as("node"))
-            .repartition(p0, col("node")).dropDuplicates("node")) {
-          (acc, f) => acc.join(f.select(col("node")), Seq("node"), "left_anti")
-        }
-        .localCheckpoint()
-      out += levelStats(lvl.toLong, next)
-      frontiers ::= next
-      frontier = next
+
+  /** The level-synchronous expansion [[qBfsLevels]] and [[qPathCounts]]
+    * share: the seed, the max-degree part, carries the `payload`
+    * columns; each level joins the frontier to the checkpointed
+    * undirected edge list, pins the node width, folds the frontier with
+    * `reduce` (the same exchange serves it) and anti-joins every prior
+    * level — the visited set is the chain of prior frontiers, the same
+    * set subtraction over the same checkpointed blocks as a union
+    * re-checkpointed per level, without its job and exchange.
+    * `stats(level, frontier)` is one level's output row. */
+  private def levelExpansion(s: SparkSession, dir: String, payload: Seq[Column],
+      reduce: DataFrame => DataFrame, schema: StructType)(stats: (Long, DataFrame) => Row): DataFrame = {
+    val p0 = CcPartitions
+    val edges = copurchaseGraph(s, dir)
+    val rows = Fixpoint.run(s, aqe = false) { fp =>
+      val eb = fp.checkpoint(edges
+        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .repartition(p0, col("src")))
+      val seed = fp.checkpoint(edges.groupBy(col("dst").as("node")).agg(count(lit(1)).as("d"))
+        .orderBy(col("d").desc, col("node")).limit(1).select(col("node") +: payload: _*))
+      val level0 = stats(0L, seed)
+      level0 +: fp.loop(BfsRounds, List(seed)) { (frontiers, lvl) =>
+        val frontier = frontiers.head
+        val next = fp.checkpoint(frontiers.foldLeft(
+            // the reached node, then the payload the frontier carries
+            reduce(eb.join(frontier, eb("src") === frontier("node"))
+              .select(col("dst").as("node") +: frontier.columns.tail.map(col): _*)
+              .repartition(p0, col("node")))) {
+            (acc, f) => acc.join(f.select(col("node")), Seq("node"), "left_anti")
+          })
+        Fixpoint.Round(next :: frontiers, Seq(stats(lvl.toLong, next)))
+      }.trace
     }
-    val schema = StructType(Seq(
-      StructField("level", LongType), StructField("n_nodes", LongType),
-      StructField("min_node", LongType), StructField("max_node", LongType),
-      StructField("sum_node", StringType)))
-    s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
-      .orderBy(col("level"))
-    } // withConf(AqeOff)
+    s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema).orderBy(col("level"))
   }
 
   val qBfsLevelsSql: String = {
@@ -3406,65 +3314,28 @@ SELECT CAST(round AS BIGINT) AS round, delta_hub, delta_auth FROM alld, stop WHE
   // it: σ(seed)=1 and σ(v) at level k is the SUM of σ over its
   // level-(k−1) parents — the path-counting half of betweenness
   // centrality, and the quantity that separates "reachable in k
-  // hops" from "how much of the k-hop flow passes through v". Same
-  // level-synchronous join discipline as BFS (frontier join +
-  // groupBy(dst) sum + anti-join visited — integer sums, so the
-  // per-level aggregation is order-independent and gates exactly);
+  // hops" from "how much of the k-hop flow passes through v". The
+  // BFS expansion with a groupBy(node) sum in place of the dedup
+  // (integer sums, so the per-level aggregation is order-independent
+  // and gates exactly);
   // σ grows multiplicatively with branching, so it rides
   // decimal(38,0)/HUGEINT end-to-end and ships as strings. The
   // backward dependency pass is deliberately NOT shipped: its δ
   // accumulations are rationals with per-node denominators σ(w) —
   // no bounded exact form to gate.
   def qPathCounts(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val p0 = CcPartitions
     val d38 = "decimal(38,0)"
-    val edges = copurchaseEdges(s, dir)
-      .select(col("c").as("src"), (col("p") + 10000000L).as("dst"))
-    graft.GraftSession.withConf(s, graft.GraftSession.AqeOff) {
-    val eb = edges
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(p0, col("src")).localCheckpoint()
-    val seed = edges.groupBy(col("dst").as("node")).agg(count(lit(1)).as("d"))
-      .orderBy(col("d").desc, col("node")).limit(1)
-      .select(col("node"), lit(1L).cast(d38).as("sigma"))
-      .localCheckpoint()
-    def levelStats(level: Long, f: DataFrame): Row = {
+    levelExpansion(s, dir, Seq(lit(1L).cast(d38).as("sigma")),
+      _.groupBy(col("node")).agg(sum(col("sigma")).cast(d38).as("sigma")),
+      StructType(Seq(
+        StructField("level", LongType), StructField("n_nodes", LongType),
+        StructField("sum_sigma", StringType), StructField("max_sigma", StringType)))) { (level, f) =>
       val r = f.agg(count(lit(1)).as("n"),
         coalesce(sum(col("sigma")), lit(0L).cast(d38)).as("sm"),
         coalesce(max(col("sigma")), lit(0L).cast(d38)).as("mx")).first()
       Row(level, r.getLong(0),
         r.getDecimal(1).toBigInteger.toString, r.getDecimal(2).toBigInteger.toString)
     }
-    val out = scala.collection.mutable.ArrayBuffer(levelStats(0L, seed))
-    // visited = the chain of prior frontiers (r18; the qBfsLevels
-    // change): anti-join each already-checkpointed level instead of
-    // maintaining a union-and-re-checkpoint frame — one checkpoint
-    // job and one p0-wide exchange saved per level
-    var frontiers = List(seed)
-    var frontier = seed
-    var lvl = 0
-    while (lvl < BfsRounds) {
-      lvl += 1
-      val next = frontiers.foldLeft(
-          eb.join(frontier, eb("src") === frontier("node"))
-            .select(col("dst").as("node"), col("sigma"))
-            .repartition(p0, col("node"))
-            .groupBy(col("node")).agg(sum(col("sigma")).cast(d38).as("sigma"))) {
-          (acc, f) => acc.join(f.select(col("node")), Seq("node"), "left_anti")
-        }
-        .localCheckpoint()
-      out += levelStats(lvl.toLong, next)
-      frontiers ::= next
-      frontier = next
-    }
-    val schema = StructType(Seq(
-      StructField("level", LongType), StructField("n_nodes", LongType),
-      StructField("sum_sigma", StringType), StructField("max_sigma", StringType)))
-    s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
-      .orderBy(col("level"))
-    } // withConf(AqeOff)
   }
 
   val qPathCountsSql: String = {

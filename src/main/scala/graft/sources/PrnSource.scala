@@ -85,7 +85,7 @@ object PrnSource {
       case Some((headerId, headerLine)) =>
         val specs = inferSpecs(headerLine, warn)
         val data = lines
-          .filter(col(Canonical.idxCol) > headerId && trim(col("value")) =!= "")
+          .filter(col(Canonical.idxCol) > headerId && nonBlank)
         // The reference trims each slice; Normalize.align trims every
         // column the same way (JavaScript's trim), so only the cents,
         // parsed here, are trimmed first.
@@ -101,8 +101,13 @@ object PrnSource {
     }
   }
 
-  /** Id and text of the first non-blank line (blank: every char
-    * ≤ U+0020, as `String.trim` counts them). When the file's first
+  /** A line that is not blank: some char above U+0020. Blank is
+    * `String.trim`'s rule, which the CSV reader's line filter follows
+    * too; Spark's `trim` strips only U+0020. The match stops at the
+    * first non-blank char. */
+  private val nonBlank: Column = col("value").rlike("[^\\x00-\\x20]")
+
+  /** Id and text of the first [[nonBlank]] line. When the file's first
     * line is that line its id is 0, the first row of partition 0, and
     * no job runs; otherwise one first-match job finds it in `lines`. */
   private def findHeader(path: String, lines: DataFrame): Option[(Long, String)] = {
@@ -110,7 +115,7 @@ object PrnSource {
     val first = try in.readLine() finally in.close()
     if (first == null) None
     else if (first.trim.nonEmpty) Some((0L, first))
-    else lines.filter(col("value").rlike("[^\\x00-\\x20]"))
+    else lines.filter(nonBlank)
       .select(col(Canonical.idxCol), col("value"))
       .head(1).headOption
       .map(r => (r.getLong(0), r.getString(1)))

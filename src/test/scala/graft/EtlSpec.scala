@@ -225,6 +225,21 @@ class EtlSpec extends SparkSpec {
     }
   }
 
+  test("PRN: tab-only and tab-space-CR lines between rows are skipped, as the CSV reader skips them") {
+    val blanks = "\t\n\t \r\n"
+    val plain = JsonSink.render(PrnSource.read(spark, tmpFile(prnHeader + prnRow1 + prnRow7)))
+    val padded = PrnSource.read(spark, tmpFile(prnHeader + prnRow1 + blanks + prnRow7))
+    assert(JsonSink.render(padded) == plain)
+    val csv = CsvSource.read(spark, tmpFile("Name,Address,Postcode,Phone,Credit Limit,Birthday\n" +
+      "\"Johnson, John\",Voorstraat 32,3122gg,020 3849381,10000,01/01/1987\n" + blanks +
+      "\"Smith, John\",Børkestraße 32,87823,+44 728 889838,9898.3,20/09/1999\n"))
+    assert(JsonSink.render(csv) == plain)
+    // an NBSP-only line is not blank to either source: a default-filled row
+    val nbsp = "\u00A0\n"
+    assert(rows(PrnSource.read(spark, tmpFile(prnHeader + prnRow1 + nbsp + prnRow7))).length == 3)
+    assert(rows(CsvSource.read(spark, tmpFile("Name\nAl\n" + nbsp + "Bo\n"))).length == 3)
+  }
+
   // -- JSON sink ----------------------------------------------------
 
   test("JSON: exact framing, canonical key order, and empty case") {

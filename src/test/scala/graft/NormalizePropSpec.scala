@@ -128,16 +128,4 @@ class NormalizePropSpec extends SparkSpec {
     val b = graft.sinks.JsonSink.render(PrnSource.read(spark, tmpFile(prn.toString), warn = _ => ()))
     assert(a == b)
   }
-
-  test("golden files: CLI output for Workbook2 is byte-stable") {
-    val csvDf = CsvSource.read(spark, resourcePath("/fixtures/workbook2.csv"))
-    val json = graft.sinks.JsonSink.render(csvDf)
-    val html = graft.sinks.HtmlSink.render(csvDf)
-    def golden(name: String): String =
-      new String(getClass.getResourceAsStream(s"/golden/$name").readAllBytes(), "UTF-8")
-    assert(json == golden("workbook2.json"))
-    assert(html == golden("workbook2.html"))
-    // condenseHtml (F7): whitespace-resilient comparison utility works
-    assert(TestHtml.condenseHtml("<td>  x  </td>\n  <td>y</td>") == "<td>x</td><td>y</td>")
-  }
 }
