@@ -2520,8 +2520,8 @@ JOIN m USING (cluster_id) WHERE j.rn = 1 ORDER BY j.cluster_id"""
     ("embed", 16L, (s: SparkSession, d: String) =>
       qEmbedCosine(s, d).select(col("ia").as("doc_a"), col("ib").as("doc_b"))))
 
-  /** Union evidence graph: one row per pair with the provenance
-    * bitmask of the families that found it.
+  /** Union evidence graph, checkpointed: one row per pair with the
+    * provenance bitmask of the families that found it.
     *
     * Concurrency here is BASE-ONLY — measured, not guessed (r9 A/B
     * table in PLANS.md, Bench harness min-of-2 at sf0.1): running the
@@ -2549,20 +2549,30 @@ JOIN m USING (cluster_id) WHERE j.rn = 1 ORDER BY j.cluster_id"""
       Future(ngramBase(s, dir)),
       Future(winnowBase(s, dir)),
       Future(embedAssigned(s, dir)))), Duration.Inf)
-    EnsembleFams.map { case (_, bit, fn) =>
-      fn(s, dir).select(col("doc_a"), col("doc_b"), lit(bit).as("fam"))
-    }.reduce(_ unionAll _)
+    val fams = EnsembleFams.map { case (name, bit, fn) =>
+      name -> fn(s, dir).select(col("doc_a"), col("doc_b"), lit(bit).as("fam"))
+    }
+    val edges = fams.map(_._2).reduce(_ unionAll _)
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(bit_or(col("fam")).as("mask"))
+      .localCheckpoint()
+    // the edge list holds the embed family's rows now; that family's own
+    // pre-sort checkpoint is the one here no memo owns
+    fams.collectFirst { case ("embed", f) => Memo.freeBlocks(f) }
+    edges
   }
 
   def qDedupEnsemble(s: SparkSession, dir: String): DataFrame = {
     // materialized once: the edge list feeds the component resolution
-    // (many iterations) AND the per-cluster stats join
-    val edges = ensembleEdges(s, dir).localCheckpoint()
-    val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val (labels, _) = resolveComponents(sym)
+    // (many iterations) AND the per-cluster stats join. The returned
+    // frame reads the edge list's and the labels' checkpoints, so Memo
+    // owns them and frees them.
+    val edges = Memo.get("ensemble_edges", s, dir)(ensembleEdges(s, dir))
+    val labels = Memo.get("ensemble_labels", s, dir) {
+      val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      resolveComponents(sym)._1
+    }
     val edgeCl = edges
       .join(labels.select(col("doc_id").as("doc_a"), col("cluster_id")), "doc_a")
     val perCluster = edgeCl.groupBy(col("cluster_id"))

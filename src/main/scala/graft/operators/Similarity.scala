@@ -2444,12 +2444,15 @@ FROM r WHERE rank <= $FusionTopK ORDER BY qid, rank"""
   private val SemClusterCosMin = 0.3
 
   def qGraphComponents(s: SparkSession, dir: String): DataFrame = {
-    val e = qKnnGraph(s, dir)
-      .filter(col("cosine") >= SemClusterCosMin)
-      .select(col("vec_id").as("src"), col("neighbor").as("dst"))
-    val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    val (labels, _) = Dedup.resolveComponents(sym)
+    // the returned frame reads the labels' checkpoint: Memo owns and frees it
+    val labels = Memo.get("knn_components", s, dir) {
+      val e = qKnnGraph(s, dir)
+        .filter(col("cosine") >= SemClusterCosMin)
+        .select(col("vec_id").as("src"), col("neighbor").as("dst"))
+      val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+      Dedup.resolveComponents(sym)._1
+    }
     labels.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_members"),
         min(col("doc_id")).as("min_member"), max(col("doc_id")).as("max_member"))

@@ -4,6 +4,8 @@ import java.io.OutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Canonical
 
@@ -12,22 +14,42 @@ import graft.Canonical
   * the same prologue/`<style>`/`<thead>` block, one `<tr>` per row
   * with HTML-escaped cells at the same indentation, a
   * `No data available` row (colspan=6) for empty input, and the same
-  * epilogue. Rows render to UTF-8 on the executors and the driver
-  * writes head, parts and tail only once every part has arrived, as
-  * in [[JsonSink]]. A column absent from the frame renders as an
-  * empty cell.
+  * epilogue. Each row renders to UTF-8 on the executors as one
+  * [[RenderRow]] and the driver writes head, parts and tail only once
+  * every part has arrived, as in [[JsonSink]]. Cells and header names
+  * go through the one byte escaper, [[escape]]. A column absent from
+  * the frame renders as an empty cell.
   */
 object HtmlSink {
 
-  /** `& < > " '` → entities, in the reference's replacement order
-    * (`/root/reference/src/utils/string.ts:1-11`). `&` first, so
-    * later-introduced entities are not double-escaped. */
-  def escapeHtml(s: String): String =
-    s.replace("&", "&amp;")
-      .replace("<", "&lt;")
-      .replace(">", "&gt;")
-      .replace("\"", "&quot;")
-      .replace("'", "&#039;")
+  private val Entities: Array[Array[Byte]] = {
+    val e = new Array[Array[Byte]](128)
+    Seq('&' -> "&amp;", '<' -> "&lt;", '>' -> "&gt;", '"' -> "&quot;", '\'' -> "&#039;")
+      .foreach { case (c, entity) => e(c) = entity.getBytes(UTF_8) }
+    e
+  }
+
+  /** `& < > " '` → entities, as the reference's `escapeHtml`
+    * (`src/utils/string.ts:1-11` of the reference) replaces them;
+    * every other byte passes through. */
+  def escape(s: UTF8String, out: ByteSink): Unit = {
+    val n = s.numBytes
+    var from = 0
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      if (b < 0 || Entities(b) == null) i += 1
+      else {
+        out.write(s, from, i)
+        out.write(Entities(b))
+        i += 1
+        from = i
+      }
+    }
+    out.write(s, from, n)
+  }
+
+  def escapeHtml(s: String): String = SinkRegistry.escaped(escape)(s)
 
   private val prologue: String =
     """<!DOCTYPE html>
@@ -59,7 +81,7 @@ object HtmlSink {
       |""".stripMargin
 
   def write(df: DataFrame, out: OutputStream): Unit = {
-    val parts = SinkRegistry.renderParts(df, "")(renderRow)
+    val parts = SinkRegistry.renderParts(df, "")(row)
     val head = new StringBuilder(prologue)
     Canonical.headers.foreach(h => head.append(s"        <th>${escapeHtml(h)}</th>\n"))
     head.append("      </tr>\n")
@@ -74,7 +96,11 @@ object HtmlSink {
 
   def render(df: DataFrame): String = SinkRegistry.asString(write)(df)
 
-  private def renderRow(values: Seq[Option[String]]): String =
-    values.map(v => s"        <td>${escapeHtml(v.getOrElse(""))}</td>\n")
-      .mkString("      <tr>\n", "", "      </tr>\n")
+  /** `<tr>` with one `<td>` per canonical column, empty for an absent one. */
+  private def row(cells: Seq[Option[Expression]]): RenderRow = {
+    val td = "</td>\n        <td>"
+    RenderRow(html = true,
+      ("      <tr>\n        <td>" +: Seq.fill(cells.length - 1)(td)) :+ "</td>\n      </tr>\n",
+      cells.map(_.getOrElse(Literal(""))))
+  }
 }

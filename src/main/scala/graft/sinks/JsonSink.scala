@@ -4,6 +4,8 @@ import java.io.OutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Canonical
 
@@ -13,8 +15,9 @@ import graft.Canonical
   * objects, empty input → exactly `[]`.
   *
   * Spark's own JSON writer emits JSON-Lines with no array framing, so
-  * the rows are rendered to UTF-8 on the executors
-  * ([[SinkRegistry.renderParts]]) and the driver only frames the parts:
+  * each row is rendered to UTF-8 on the executors by one [[RenderRow]]
+  * (the keys, escaped once on the driver, are its fixed fragments) and
+  * the driver only frames the parts ([[SinkRegistry.renderParts]]):
   * head, parts joined by the row separator, tail. Nothing is written
   * until every part has arrived, so a failed job leaves `out` empty.
   * A column absent from the frame is omitted from every object.
@@ -24,7 +27,7 @@ object JsonSink {
   private val Sep = ",\n  "
 
   def write(df: DataFrame, out: OutputStream): Unit = {
-    val parts = SinkRegistry.renderParts(df, Sep)(renderRow)
+    val parts = SinkRegistry.renderParts(df, Sep)(row)
     if (parts.isEmpty) out.write("[]".getBytes(UTF_8))
     else {
       val sep = Sep.getBytes(UTF_8)
@@ -37,29 +40,49 @@ object JsonSink {
 
   def render(df: DataFrame): String = SinkRegistry.asString(write)(df)
 
-  private def renderRow(values: Seq[Option[String]]): String =
-    Canonical.headers.zip(values)
-      .collect { case (h, Some(v)) => s"${jsonString(h)}:${jsonString(v)}" }
-      .mkString("{", ",", "}")
+  /** `{"key":"cell",...}` over the present columns. */
+  private def row(cells: Seq[Option[Expression]]): RenderRow = {
+    val present = Canonical.headers.zip(cells).collect { case (h, Some(c)) => (h, c) }
+    val key = SinkRegistry.escaped(escape) _
+    val frags =
+      if (present.isEmpty) Seq("{}")
+      else present.zipWithIndex.map { case ((h, _), i) =>
+        (if (i == 0) "{\"" else "\",\"") + key(h) + "\":\""
+      } :+ "\"}"
+    RenderRow(html = false, frags, present.map(_._2))
+  }
 
-  /** JSON string literal, matching `JSON.stringify`: short escapes for
-    * the common control chars, `\ u` form for the rest, non-ASCII
-    * passes through (output is UTF-8). */
-  private[sinks] def jsonString(s: String): String = {
-    val sb = new StringBuilder(s.length + 2)
-    sb.append('"')
-    s.foreach {
-      case '"'  => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\b' => sb.append("\\b")
-      case '\f' => sb.append("\\f")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+  private val Hex = "0123456789abcdef".getBytes(UTF_8)
+
+  /** The body of a JSON string literal, matching `JSON.stringify`:
+    * short escapes for `"`, `\\` and the common control chars, `\\u00xx`
+    * for the other C0 controls; every other byte passes through
+    * (output is UTF-8). */
+  def escape(s: UTF8String, out: ByteSink): Unit = {
+    val n = s.numBytes
+    var from = 0
+    var i = 0
+    while (i < n) {
+      val c = s.getByte(i) & 0xFF
+      if (c >= 0x20 && c != '"' && c != '\\') i += 1
+      else {
+        out.write(s, from, i)
+        out.write('\\')
+        c match {
+          case 0x22 | 0x5C => out.write(c)
+          case 0x08 => out.write('b')
+          case 0x0C => out.write('f')
+          case 0x0A => out.write('n')
+          case 0x0D => out.write('r')
+          case 0x09 => out.write('t')
+          case _ =>
+            out.write('u'); out.write('0'); out.write('0')
+            out.write(Hex(c >> 4)); out.write(Hex(c & 0xF))
+        }
+        i += 1
+        from = i
+      }
     }
-    sb.append('"')
-    sb.toString
+    out.write(s, from, n)
   }
 }

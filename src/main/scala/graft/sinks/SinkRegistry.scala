@@ -7,7 +7,10 @@ import java.util.Locale
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Canonical
 
@@ -16,7 +19,13 @@ import graft.Canonical
   * case-insensitive lookup, `register` for extension, unknown type →
   * error naming the registered set. A writer renders the canonical
   * frame as one document onto an `OutputStream`; [[apply]] adapts it
-  * to a function returning the document as a string. */
+  * to a function returning the document as a string.
+  *
+  * The built-in writers render each row to UTF-8 bytes inside the
+  * scan's whole-stage-codegen'd stage with one [[RenderRow]]
+  * expression, whose cells go through the sink's byte escaper; the
+  * Dataset side ([[renderParts]]) only groups that binary column into
+  * parts. */
 object SinkRegistry {
 
   type Writer = (DataFrame, OutputStream) => Unit
@@ -50,21 +59,34 @@ object SinkRegistry {
 
   /** Renders the rows of `df` on the executors and returns the parts in
     * partition order, which is input order (see [[Canonical.idxCol]]),
-    * so nothing is sorted. Each partition yields UTF-8 parts of up to
-    * [[PartRows]] rows, joined by `sep`; an empty partition yields none,
-    * so every part is non-empty. One Dataset action: one job, no
-    * shuffle. `row` gets the cells in canonical order: `None` for a
-    * column the frame lacks, `""` for a null value. */
+    * so nothing is sorted. `row` builds the one binary column that holds
+    * each row's bytes (a [[RenderRow]]) from the cells in canonical
+    * order: `None` for a column the frame lacks, else the column cast
+    * to string. Each partition yields parts of up to [[PartRows]] rows,
+    * joined by `sep`; an empty partition yields none, so every part is
+    * non-empty. One Dataset action: one job, no shuffle. */
   private[sinks] def renderParts(df: DataFrame, sep: String)(
-      row: Seq[Option[String]] => String): Array[Array[Byte]] = {
-    val present = Canonical.headers.filter(df.columns.contains)
-    val slots = Canonical.headers.map(present.indexOf)
-    df.select(present.map(c => col(s"`$c`").cast("string")): _*)
+      row: Seq[Option[Expression]] => RenderRow): Array[Array[Byte]] = {
+    val cells = Canonical.headers.map { h =>
+      if (df.columns.contains(h)) Some(Bridge.expression(col(s"`$h`").cast("string"))) else None
+    }
+    val sepBytes = sep.getBytes(UTF_8)
+    df.select(Bridge.column(row(cells))).as(Encoders.BINARY)
       .mapPartitions(_.grouped(PartRows).map { rows =>
-        rows.map { r =>
-          row(slots.map(i => if (i < 0) None else Some(Option(r.getString(i)).getOrElse(""))))
-        }.mkString(sep).getBytes(UTF_8)
+        val part = new ByteSink(1 << 16)
+        rows.iterator.zipWithIndex.foreach { case (r, i) =>
+          if (i > 0) part.write(sepBytes)
+          part.write(r)
+        }
+        part.toByteArray
       })(Encoders.BINARY)
       .collect()
+  }
+
+  /** `s` through a sink's byte escaper, as a string: the head and keys. */
+  private[sinks] def escaped(escape: (UTF8String, ByteSink) => Unit)(s: String): String = {
+    val out = new ByteSink
+    escape(UTF8String.fromString(s), out)
+    new String(out.toByteArray, UTF_8)
   }
 }

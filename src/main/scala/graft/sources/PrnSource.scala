@@ -1,12 +1,15 @@
 package graft.sources
 
+import java.io.InputStreamReader
 import java.nio.charset.{Charset, StandardCharsets}
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.{Canonical, functions}
+import graft.Canonical
+import graft.functions.{EtlKernels, Normalize, PrnSlices}
 
 /** Fixed-width ("PRN") source producing the canonical 6-column frame.
   *
@@ -22,15 +25,20 @@ import graft.{Canonical, functions}
   *
   * The data path is one `spark.read.text` scan numbered by
   * `monotonically_increasing_id()`, a filter that drops the header by
-  * its id, and one generated `substring` projection, all inside
-  * whole-stage codegen. The header is found by a driver-side peek at
-  * the first line; only when blank lines precede it does a
-  * first-match job look it up, to learn its id.
+  * its id and the blank lines by the `nonBlank` byte kernel, and one
+  * [[PrnSlices]] per line: a single walk over the line's characters
+  * that returns every column's slice already JavaScript-trimmed, in
+  * place of one `substring` per column. Credit Limit's integer prefix
+  * is the `intPrefix` kernel. All of it runs inside whole-stage
+  * codegen. The header is found by a driver-side peek at the first
+  * line; only when blank lines precede it does a first-match job look
+  * it up, to learn its id.
   *
   * Spark's text source decodes UTF-8 only, so non-UTF-8 input (the
-  * reference's latin1) is transcoded driver-side to a temp file first
-  * (SURVEY.md §7.4 R1) — character offsets are unaffected because the
-  * reference indexes decoded characters too.
+  * reference's latin1) is transcoded driver-side to a temp file first,
+  * streamed through a fixed buffer (SURVEY.md §7.4 R1) — character
+  * offsets are unaffected because the reference indexes decoded
+  * characters too.
   */
 object PrnSource {
 
@@ -86,26 +94,24 @@ object PrnSource {
         val specs = inferSpecs(headerLine, warn)
         val data = lines
           .filter(col(Canonical.idxCol) > headerId && nonBlank)
-        // The reference trims each slice; Normalize.align trims every
-        // column the same way (JavaScript's trim), so only the cents,
-        // parsed here, are trimmed first.
+        val slices = Bridge.column(PrnSlices(specs.map(_.name), specs.map(_.start), specs.map(_.end),
+          Bridge.expression(col("value"))))
+        // the reference trims each slice and parses the cents of the
+        // trimmed one; Normalize.align's trim of a trimmed cell is a no-op
         val cols: Seq[Column] = specs.map { spec =>
-          val slice = substring(col("value"), spec.start + 1, spec.end - spec.start)
-          val v =
-            if (spec.name == Canonical.CreditLimit) centsToUnits(functions.Normalize.jsTrim(slice))
-            else slice
-          v.as(spec.name)
+          val v = col("slices").getField(spec.name)
+          (if (spec.name == Canonical.CreditLimit) centsToUnits(v) else v).as(spec.name)
         }
-        functions.Normalize.align(
-          data.select(cols :+ col(Canonical.idxCol): _*))
+        Normalize.align(data
+          .select(slices.as("slices"), col(Canonical.idxCol))
+          .select(cols :+ col(Canonical.idxCol): _*))
     }
   }
 
-  /** A line that is not blank: some char above U+0020. Blank is
-    * `String.trim`'s rule, which the CSV reader's line filter follows
-    * too; Spark's `trim` strips only U+0020. The match stops at the
-    * first non-blank char. */
-  private val nonBlank: Column = col("value").rlike("[^\\x00-\\x20]")
+  /** A line that is not blank ([[EtlKernels.nonBlank]]): some char
+    * above U+0020, `String.trim`'s rule, which the CSV reader's line
+    * filter follows too; Spark's `trim` strips only U+0020. */
+  private[graft] val nonBlank: Column = EtlKernels(EtlKernels.NonBlank, col("value"))
 
   /** Id and text of the first [[nonBlank]] line. When the file's first
     * line is that line its id is 0, the first row of partition 0, and
@@ -126,21 +132,25 @@ object PrnSource {
     * divide by 100 at 2 decimal places, non-numeric → "" (which the
     * normalizer then defaults to 0.00). Exact: integer cents / 100 at
     * scale 2 has no rounding. */
-  private def centsToUnits(v: Column): Column = {
-    val intPrefix = regexp_extract(v, "^[+-]?\\d+", 0)
-    when(intPrefix =!= "",
-      (intPrefix.cast("decimal(38,0)") / 100).cast("decimal(38,2)").cast("string"))
-      .otherwise(lit(""))
-  }
+  private[graft] def centsToUnits(trimmed: Column): Column =
+    coalesce(
+      (EtlKernels(EtlKernels.IntPrefix, trimmed).cast("decimal(38,0)") / 100)
+        .cast("decimal(38,2)").cast("string"),
+      lit(""))
 
+  /** `path` as a UTF-8 file: itself when already UTF-8 or ASCII, else
+    * a temp file it is transcoded into, a buffer at a time. */
   private def ensureUtf8(path: String, encoding: String): String = {
     val cs = Charset.forName(encoding)
     if (cs == StandardCharsets.UTF_8 || cs == StandardCharsets.US_ASCII) path
     else {
-      val text = new String(Files.readAllBytes(Paths.get(path)), cs)
       val tmp = Files.createTempFile("graft_prn_", ".txt")
       tmp.toFile.deleteOnExit()
-      Files.write(tmp, text.getBytes(StandardCharsets.UTF_8), StandardOpenOption.TRUNCATE_EXISTING)
+      val in = new InputStreamReader(Files.newInputStream(Paths.get(path)), cs)
+      try {
+        val out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
+        try in.transferTo(out) finally out.close()
+      } finally in.close()
       tmp.toString
     }
   }

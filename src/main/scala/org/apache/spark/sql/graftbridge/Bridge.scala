@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.classic.{DataFrame, Dataset, ExpressionUtils, SparkSession}
 
 /** The `private[spark]` doorways graft needs, in one place:
   *
@@ -9,6 +10,9 @@ import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
   *    public DataFrame ([[ofRows]], [[logicalPlan]]) — Spark's own
   *    connectors and every custom-plan library use exactly this
   *    package-placement pattern;
+  *  - turning a library-defined Catalyst [[Expression]] into a public
+  *    Column and back ([[column]], [[expression]]), so a kernel joins a
+  *    Column tree without a session or a function-registry entry;
   *  - draining the listener bus ([[drainListenerBus]]), so a measured
   *    pass reads its job, stage and task counters only after every
   *    event of its jobs has been delivered.
@@ -21,6 +25,10 @@ object Bridge {
 
   def logicalPlan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
     df.asInstanceOf[DataFrame].queryExecution.analyzed
+
+  def column(e: Expression): org.apache.spark.sql.Column = ExpressionUtils.column(e)
+
+  def expression(c: org.apache.spark.sql.Column): Expression = ExpressionUtils.expression(c)
 
   /** Blocks until every listener event posted so far has been handled;
     * false if the bus is still busy after `timeoutMs`. */

@@ -276,6 +276,16 @@ class EtlSpec extends SparkSpec {
     assert(HtmlSink.render(csvDf) == HtmlSink.render(prnDf))
   }
 
+  test("PRN: a latin1 file read as ISO-8859-1 equals its UTF-8 twin") {
+    // longer than the transcoder's buffers, non-ASCII on every line
+    val body = (0 until 400).map(i => f"Smith$i%-11d Børkestraße $i%-9d 87823    +44 728 889838      $i%6d 19990920\n").mkString
+    val text = prnHeader + body
+    val latin1 = rows(PrnSource.read(spark, tmpFile(text, "ISO-8859-1"), "ISO-8859-1"))
+    assert(latin1.length == 400)
+    assert(latin1(7)("Address") == "Børkestraße 7")
+    assert(latin1 == rows(PrnSource.read(spark, tmpFile(text, "UTF-8"), "UTF-8")))
+  }
+
   test("PRN: slices are trimmed of JavaScript whitespace") {
     val p = tmpFile("Name      Postcode\nBob\u00A0\u00A0\t\u00A0\u00A0  12 ab\u00A0\n")
     val got = rows(PrnSource.read(spark, p, warn = _ => ())).head
@@ -341,21 +351,37 @@ class EtlSpec extends SparkSpec {
     assert(rows.contains(""""Postcode":"3732GE""""))
   }
 
-  test("CLI: a forked run under the tr locale prints the reference's bytes") {
-    // Lower-cased in tr, "CREDIT LIMIT" is "credıt lımıt"; upper-cased, "ié" is "İÉ"
-    val in = tmpFile("NAME,ADDRESS,POSTCODE,PHONE,CREDIT LIMIT,BIRTHDAY\n" +
-      "Ida,Børke 1,ié 12,020 1,12.5,1/2/2000\n")
+  /** `graft.Cli` run in a forked JVM on the file `in`: exit code and stdout. */
+  private def forkCli(in: String, jvmArgs: Seq[String], args: String*): (Int, Array[Byte], String) = {
     val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.filter(_.startsWith("--add-opens"))
     val err = Files.createTempFile("graft_cli_", ".err")
     err.toFile.deleteOnExit()
-    val cmd = Seq(java, "-Duser.language=tr", "-Duser.country=TR", "-Xmx1g") ++ opens ++
-      Seq("-cp", System.getProperty("java.class.path"), "graft.Cli", "csv", "json")
+    val cmd = Seq(java, "-Xmx1g") ++ jvmArgs ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.Cli") ++ args
     val proc = new ProcessBuilder(cmd.asJava).redirectInput(new File(in)).redirectError(err.toFile).start()
     val out = proc.getInputStream.readAllBytes()
-    assert(proc.waitFor() == 0, Files.readString(err))
+    (proc.waitFor(), out, Files.readString(err))
+  }
+
+  test("CLI: a forked run under the tr locale prints the reference's bytes") {
+    // Lower-cased in tr, "CREDIT LIMIT" is "credıt lımıt"; upper-cased, "ié" is "İÉ"
+    val in = tmpFile("NAME,ADDRESS,POSTCODE,PHONE,CREDIT LIMIT,BIRTHDAY\n" +
+      "Ida,Børke 1,ié 12,020 1,12.5,1/2/2000\n")
+    val (code, out, err) = forkCli(in, Seq("-Duser.language=tr", "-Duser.country=TR"), "csv", "json")
+    assert(code == 0, err)
     val expected = "[\n  {\"Name\":\"Ida\",\"Address\":\"Børke 1\",\"Postcode\":\"IÉ12\"," +
       "\"Phone\":\"0201\",\"Credit Limit\":\"12.50\",\"Birthday\":\"2000-02-01\"}\n]\n"
+    assert(out.sameElements(expected.getBytes(StandardCharsets.UTF_8)), new String(out, StandardCharsets.UTF_8))
+  }
+
+  test("CLI: a birthday followed by U+0085 passes through, as JavaScript's `$` does not match before it") {
+    // latin1 byte 0x85 is U+0085, a Java line terminator and no JavaScript whitespace
+    val in = tmpFile("Name,Address,Postcode,Phone,Credit Limit,Birthday\nA,B,1,2,3,19870312\u0085\n")
+    val (code, out, err) = forkCli(in, Nil, "csv", "json")
+    assert(code == 0, err)
+    val expected = "[\n  {\"Name\":\"A\",\"Address\":\"B\",\"Postcode\":\"1\",\"Phone\":\"2\"," +
+      "\"Credit Limit\":\"3.00\",\"Birthday\":\"19870312\u0085\"}\n]\n"
     assert(out.sameElements(expected.getBytes(StandardCharsets.UTF_8)), new String(out, StandardCharsets.UTF_8))
   }
 }
