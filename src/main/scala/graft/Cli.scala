@@ -16,14 +16,17 @@ import graft.sources.SourceRegistry
   * whitelist validation with the same error strings, latin1 stdin
   * decoding, progress lines on stderr only (stdout stays pure data so
   * the cross-format `diff` acceptance check holds), exit 1 on any
-  * failure, and a DEBUG-gated stderr logger.
+  * failure, and a DEBUG-gated stderr logger, which also times each
+  * phase in ms: spool, session, source, sink (its job and the write)
+  * and stop.
   *
   * Spark sources are path-based, so stdin is streamed into a temp
   * file (transcoded latin1 → UTF-8, see SURVEY.md §7.4 R1) before the
   * job runs. The sink writes to a buffered stream on fd 1 only after
   * its job has succeeded, so a failed conversion prints nothing on
   * stdout. One conversion's output still passes through a single
-  * collect, bounded by `spark.driver.maxResultSize`.
+  * collect of LZ4-compressed parts, bounded by
+  * `spark.driver.maxResultSize`.
   */
 object Cli {
 
@@ -139,8 +142,14 @@ object Cli {
   def convert(spark: SparkSession, args: Args, inputPath: String, inputIsUtf8: Boolean, out: OutputStream): Unit = {
     val encoding = if (inputIsUtf8) "UTF-8" else "ISO-8859-1"
     val opts = SourceRegistry.SourceOptions(args.csvDelimiter.getOrElse(","), encoding)
-    val df: DataFrame = SourceRegistry(args.inputType)(spark, inputPath, opts)
-    SinkRegistry.writer(args.outputType)(df, out)
+    val df: DataFrame = phase("source")(SourceRegistry(args.inputType)(spark, inputPath, opts))
+    phase("sink") { SinkRegistry.writer(args.outputType)(df, out); out.flush() }
+  }
+
+  /** `body`, with its wall time on stderr under DEBUG. */
+  private def phase[T](name: String)(body: => T): T = {
+    val t0 = System.nanoTime
+    try body finally debugLog(s"$name ${(System.nanoTime - t0) / 1000000} ms")
   }
 
   def main(argv: Array[String]): Unit = {
@@ -162,21 +171,25 @@ object Cli {
     // Spark sources.
     val tmp = Files.createTempFile("graft_stdin_", ".txt")
     tmp.toFile.deleteOnExit()
-    val spool = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-    val chars =
+    val chars = phase("spool") {
+      val spool = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
       try new InputStreamReader(System.in, StandardCharsets.ISO_8859_1).transferTo(spool)
       finally spool.close()
+    }
     debugLog(s"Spooled $chars bytes of stdin to $tmp")
 
     // The executors share this JVM: Spark's non-ASCII `upper` then
     // maps case like JavaScript's `toUpperCase`, whatever the user's
     // locale (under `tr`, `i` would map to `İ`; see GraftSession).
     Locale.setDefault(Locale.ROOT)
-    val spark = GraftSession
-      .builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32)
-      .appName("graft-cli")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = phase("session") {
+      val s = GraftSession
+        .builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32)
+        .appName("graft-cli")
+        .getOrCreate()
+      s.sparkContext.setLogLevel("ERROR")
+      s
+    }
 
     try {
       System.err.println(s"Processing ${args.inputType} to ${args.outputType}...")
@@ -186,17 +199,16 @@ object Cli {
       // valid UTF-8 regardless of locale (reference README.md:31-33).
       val stdout = new BufferedOutputStream(new FileOutputStream(FileDescriptor.out), 1 << 16)
       convert(spark, args, tmp.toString, inputIsUtf8 = true, stdout)
-      stdout.flush()
       System.err.println("Processing complete.")
     } catch {
       case e: Throwable =>
         System.err.println("\nAn error occurred during processing:")
         System.err.println(userMessage(args.inputType, e))
         if (isDebug) e.printStackTrace()
-        spark.stop()
+        phase("stop")(spark.stop())
         sys.exit(1)
     }
-    spark.stop()
+    phase("stop")(spark.stop())
   }
 
   /** Mirrors the reference's error channel (`csvParser.ts:55-57`):

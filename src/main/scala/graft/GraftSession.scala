@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{classic, SparkSession}
 
 /** The library's recommended SparkSession configuration, in one
   * place — what a user of the engine starts from instead of
@@ -102,9 +102,12 @@ object GraftSession {
   }
 
   /** Builder preloaded with the recommended configuration; callers
-    * override as needed before `getOrCreate()`. */
-  def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
-    val b = Installed.foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+    * override as needed before `getOrCreate()`. It is the classic
+    * (in-process) session's builder: `SparkSession.builder()` would
+    * first look its implementation up through Scala runtime reflection,
+    * whose universe costs about a second of every CLI launch. */
+  def builder(master: String, shufflePartitions: Int): classic.SparkSession.Builder = {
+    val b = Installed.foldLeft(classic.SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")

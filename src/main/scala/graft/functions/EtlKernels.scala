@@ -130,6 +130,45 @@ object EtlKernels {
     if (end == start) null else copy(t, 0, end)
   }
 
+  /** F3 of a numeric prefix ([[numPrefix]]) whose value `x` is at least
+    * 1e21 in magnitude: `x.toFixed(2)`, which JavaScript renders as
+    * `Number#toString` there ([[jsExponent]]); null for a smaller one,
+    * which the `decimal(38,2)` cast renders. */
+  def largeFixed(p: UTF8String): UTF8String =
+    if (p.numBytes < 21 && !p.contains(ExpLower) && !p.contains(ExpUpper)) null // below 1e21
+    else jsExponent(java.lang.Double.parseDouble(p.toString))
+
+  /** The PRN cents of an integer prefix ([[intPrefix]]) as
+    * `(parseInt(p) / 100).toFixed(2)` when that is at least 1e21 in
+    * magnitude; null for a smaller one, as in [[largeFixed]]. */
+  def largeCents(p: UTF8String): UTF8String =
+    if (p.numBytes < 23) null // below 1e21 * 100
+    else jsExponent(java.lang.Double.parseDouble(p.toString) / 100)
+
+  private val ExpLower = UTF8String.fromString("e")
+  private val ExpUpper = UTF8String.fromString("E")
+
+  /** JavaScript's `Number#toString` of `x` when |x| >= 1e21, else null:
+    * the fewest significant digits that read back as `x` (of two
+    * candidates, the closer), as `d[.ddd]e+n`. */
+  private def jsExponent(x: Double): UTF8String = {
+    val a = math.abs(x)
+    if (!(a >= 1e21)) return null
+    val sign = if (x < 0) "-" else ""
+    if (a.isInfinite) return UTF8String.fromString(sign + "Infinity")
+    val exact = new java.math.BigDecimal(a)
+    val digits = Iterator.from(1).map { p =>
+      Seq(java.math.RoundingMode.FLOOR, java.math.RoundingMode.CEILING)
+        .map(m => exact.round(new java.math.MathContext(p, m)))
+        .filter(_.doubleValue == a)
+        .sortBy(_.subtract(exact).abs)
+        .headOption
+    }.collectFirst { case Some(d) => d.stripTrailingZeros }.get
+    val s = digits.unscaledValue.toString
+    val mantissa = if (s.length == 1) s else s"${s.head}.${s.tail}"
+    UTF8String.fromString(s"$sign${mantissa}e+${s.length - 1 - digits.scale}")
+  }
+
   /** A line that is not blank: some byte above `0x20`. Blank is
     * `String.trim`'s rule, which the CSV reader's line filter follows
     * too. */
@@ -214,6 +253,8 @@ object EtlKernels {
   case object NumPrefix extends Op("numPrefix", nullable = true)
   case object Birthday extends Op("birthday")
   case object IntPrefix extends Op("intPrefix", nullable = true)
+  case object LargeFixed extends Op("largeFixed", nullable = true)
+  case object LargeCents extends Op("largeCents", nullable = true)
   case object NonBlank extends Op("nonBlank", BooleanType)
 
   /** `op` of `s`, as the interpreted path runs it. */
@@ -224,6 +265,8 @@ object EtlKernels {
     case NumPrefix       => numPrefix(s)
     case Birthday        => birthday(s)
     case IntPrefix       => intPrefix(s)
+    case LargeFixed      => largeFixed(s)
+    case LargeCents      => largeCents(s)
     case NonBlank        => nonBlank(s)
   }
 

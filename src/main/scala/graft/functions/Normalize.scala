@@ -31,7 +31,7 @@ import graft.Canonical
   * `graftbridge.Bridge`, not the function registry.
   */
 object Normalize {
-  import EtlKernels.{Birthday, JsTrim, NumPrefix, PhoneDigits, StripWhitespace}
+  import EtlKernels.{Birthday, JsTrim, LargeFixed, NumPrefix, PhoneDigits, StripWhitespace}
 
   /** JavaScript's `trim()`. */
   def jsTrim(c: Column): Column = EtlKernels(JsTrim, c)
@@ -51,7 +51,9 @@ object Normalize {
     * the kernel cuts before the cast. The cast to decimal(38,2) rounds
     * HALF_UP like `toFixed(2)` does for these inputs (documented
     * divergence only at float-representation boundaries — SURVEY.md
-    * §7.4 R3).
+    * §7.4 R3). From 1e21 up, `toFixed` renders `Number#toString`'s
+    * exponent form (`9e99` → `"9e+99"`), as [[EtlKernels.largeFixed]]
+    * does.
     */
   def creditLimit(c: Column): Column = trimmedCreditLimit(jsTrim(c))
 
@@ -60,7 +62,12 @@ object Normalize {
     // verbatim (minus an explicit '+', which Number drops).
     when(t.startsWith("Infinity") || t.startsWith("+Infinity"), lit("Infinity"))
       .when(t.startsWith("-Infinity"), lit("-Infinity"))
-      .otherwise(coalesce(EtlKernels(NumPrefix, t).cast(DecimalType(38, 2)).cast("string"), lit("0.00")))
+      .otherwise {
+        // from 1e21 up toFixed is an exponent form, and past 36 integer
+        // digits the cast would fail the conversion under ANSI
+        val p = EtlKernels(NumPrefix, t)
+        coalesce(EtlKernels(LargeFixed, p), p.cast(DecimalType(38, 2)).cast("string"), lit("0.00"))
+      }
 
   /** F4 — birthday. Pure string rebuilds (no `to_date`) because the
     * reference's regexes don't validate calendar ranges and

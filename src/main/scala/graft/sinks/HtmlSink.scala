@@ -87,7 +87,7 @@ object HtmlSink {
     head.append("      </tr>\n")
     head.append("    </thead>\n")
     head.append("    <tbody>\n")
-    if (parts.isEmpty)
+    if (!parts.hasNext)
       head.append(s"""      <tr><td colspan="${Canonical.headers.length}" style="text-align:center;">No data available</td></tr>\n""")
     out.write(head.toString.getBytes(UTF_8))
     parts.foreach(out.write)

@@ -28,12 +28,12 @@ object JsonSink {
 
   def write(df: DataFrame, out: OutputStream): Unit = {
     val parts = SinkRegistry.renderParts(df, Sep)(row)
-    if (parts.isEmpty) out.write("[]".getBytes(UTF_8))
+    if (!parts.hasNext) out.write("[]".getBytes(UTF_8))
     else {
       val sep = Sep.getBytes(UTF_8)
       out.write("[\n  ".getBytes(UTF_8))
-      out.write(parts.head)
-      parts.iterator.drop(1).foreach { p => out.write(sep); out.write(p) }
+      out.write(parts.next())
+      parts.foreach { p => out.write(sep); out.write(p) }
       out.write("\n]\n".getBytes(UTF_8))
     }
   }

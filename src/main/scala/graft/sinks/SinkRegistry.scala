@@ -6,7 +6,8 @@ import java.util.Locale
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import net.jpountz.lz4.LZ4Factory
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.Bridge
@@ -23,9 +24,8 @@ import graft.Canonical
   *
   * The built-in writers render each row to UTF-8 bytes inside the
   * scan's whole-stage-codegen'd stage with one [[RenderRow]]
-  * expression, whose cells go through the sink's byte escaper; the
-  * Dataset side ([[renderParts]]) only groups that binary column into
-  * parts. */
+  * expression, whose cells go through the sink's byte escaper;
+  * [[renderParts]] only groups that binary column into parts. */
 object SinkRegistry {
 
   type Writer = (DataFrame, OutputStream) => Unit
@@ -64,23 +64,32 @@ object SinkRegistry {
     * order: `None` for a column the frame lacks, else the column cast
     * to string. Each partition yields parts of up to [[PartRows]] rows,
     * joined by `sep`; an empty partition yields none, so every part is
-    * non-empty. One Dataset action: one job, no shuffle. */
+    * non-empty. One job, no shuffle, no encoder: the tasks read the
+    * rendered bytes straight off the plan's rows. The job has finished
+    * when this returns; a part travels and waits LZ4-compressed, so
+    * `spark.driver.maxResultSize` and the driver's heap bound the
+    * compressed document, and it is decompressed as the iterator
+    * reaches it. */
   private[sinks] def renderParts(df: DataFrame, sep: String)(
-      row: Seq[Option[Expression]] => RenderRow): Array[Array[Byte]] = {
+      row: Seq[Option[Expression]] => RenderRow): Iterator[Array[Byte]] = {
     val cells = Canonical.headers.map { h =>
       if (df.columns.contains(h)) Some(Bridge.expression(col(s"`$h`").cast("string"))) else None
     }
     val sepBytes = sep.getBytes(UTF_8)
-    df.select(Bridge.column(row(cells))).as(Encoders.BINARY)
-      .mapPartitions(_.grouped(PartRows).map { rows =>
+    val packed = Bridge.runJob(df.select(Bridge.column(row(cells))), "render") { rows =>
+      val lz4 = LZ4Factory.fastestJavaInstance().fastCompressor()
+      rows.map(_.getBinary(0)).grouped(PartRows).map { rendered =>
         val part = new ByteSink(1 << 16)
-        rows.iterator.zipWithIndex.foreach { case (r, i) =>
+        rendered.iterator.zipWithIndex.foreach { case (r, i) =>
           if (i > 0) part.write(sepBytes)
           part.write(r)
         }
-        part.toByteArray
-      })(Encoders.BINARY)
-      .collect()
+        val bytes = part.toByteArray
+        (bytes.length, lz4.compress(bytes))
+      }.toArray
+    }.flatten
+    val lz4 = LZ4Factory.fastestJavaInstance().fastDecompressor()
+    packed.iterator.map { case (length, bytes) => lz4.decompress(bytes, length) }
   }
 
   /** `s` through a sink's byte escaper, as a string: the head and keys. */

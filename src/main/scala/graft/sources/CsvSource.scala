@@ -4,8 +4,12 @@ import java.io.{BufferedInputStream, InputStreamReader}
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.{Canonical, functions}
 
@@ -52,28 +56,43 @@ object CsvSource {
 
   /** The file as Spark's CSV reader parses it, header names as
     * columns, all strings; None for a blank file (fidelity checks
-    * only). With the checks on, the schema comes from [[firstLine]]
-    * parsed by the same reader as a one-line local Dataset, which runs
-    * Spark's own header logic (quoted, duplicate and empty names) and
-    * no job. */
+    * only). With the checks on, the schema is [[headerSchema]] of
+    * [[firstLine]]: no job, no query. */
   private[graft] def scan(
       spark: SparkSession,
       path: String,
       delimiter: String,
       encoding: String,
       fidelityChecks: Boolean): Option[DataFrame] = {
-    def reader = spark.read
-      .option("header", "true")
-      .option("delimiter", delimiter)
-      .option("encoding", encoding)
-      .option("quote", "\"")
-      .option("escape", "\"") // RFC-4180 doubled-quote escaping
-      .option("mode", "FAILFAST")
-    if (!fidelityChecks) Some(reader.csv(path))
+    val options = readerOptions(delimiter, encoding)
+    if (!fidelityChecks) Some(spark.read.options(options).csv(path))
     else firstLine(path, encoding).map { header =>
-      val schema = reader.csv(spark.createDataset(Seq(header))(Encoders.STRING)).schema
-      reader.schema(schema).csv(path)
+      spark.read.options(options).schema(headerSchema(spark, header, options)).csv(path)
     }
+  }
+
+  /** The CSV reader's options: a header row, RFC-4180 quoting with
+    * doubled-quote escaping, and a failure on a malformed record. */
+  private[graft] def readerOptions(delimiter: String, encoding: String): Map[String, String] = Map(
+    "header" -> "true",
+    "delimiter" -> delimiter,
+    "encoding" -> encoding,
+    "quote" -> "\"",
+    "escape" -> "\"",
+    "mode" -> "FAILFAST")
+
+  /** The schema Spark's CSV reader infers from `header` under `options`
+    * with schema inference off, as `TextInputCSVDataSource.inferFromDataset`
+    * derives it: the line split by univocity with the reader's
+    * settings, then `makeSafeHeader` (empty names become `_c<i>`,
+    * duplicates, case-insensitively unless the session is
+    * case-sensitive, get their index appended), every field a string.
+    * Computed on the driver without planning a query. */
+  private[graft] def headerSchema(spark: SparkSession, header: String, options: Map[String, String]): StructType = {
+    val parsed = new CSVOptions(options, false, "UTC") // column pruning and time zone: unused by the header
+    val names = new CsvParser(parsed.asParserSettings).parseLine(header)
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    StructType(CSVUtils.makeSafeHeader(names, caseSensitive, parsed).map(StructField(_, StringType)))
   }
 
   /** Canonical empty frame (0 rows, 6 columns + idx). */

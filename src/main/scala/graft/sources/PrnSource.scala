@@ -115,28 +115,31 @@ object PrnSource {
 
   /** Id and text of the first [[nonBlank]] line. When the file's first
     * line is that line its id is 0, the first row of partition 0, and
-    * no job runs; otherwise one first-match job finds it in `lines`. */
+    * no job runs; otherwise one first-match job finds it in `lines`,
+    * read off the plan's rows with no encoder. */
   private def findHeader(path: String, lines: DataFrame): Option[(Long, String)] = {
     val in = Files.newBufferedReader(Paths.get(path), StandardCharsets.UTF_8)
     val first = try in.readLine() finally in.close()
     if (first == null) None
     else if (first.trim.nonEmpty) Some((0L, first))
-    else lines.filter(nonBlank)
-      .select(col(Canonical.idxCol), col("value"))
-      .head(1).headOption
-      .map(r => (r.getLong(0), r.getString(1)))
+    else Bridge.collectRows(lines.filter(nonBlank).select(col(Canonical.idxCol), col("value")).limit(1), "head")
+      .headOption.map(r => (r.getLong(0), r.getUTF8String(1).toString))
   }
 
   /** PRN stores Credit Limit as integer cents; mirror of
     * `prnParser.ts:130-137`: `parseInt` (numeric prefix, like JS),
     * divide by 100 at 2 decimal places, non-numeric → "" (which the
     * normalizer then defaults to 0.00). Exact: integer cents / 100 at
-    * scale 2 has no rounding. */
-  private[graft] def centsToUnits(trimmed: Column): Column =
+    * scale 2 has no rounding. From 1e21 units up it is JavaScript's
+    * exponent form ([[EtlKernels.largeCents]]), which also keeps cents
+    * past 38 digits from failing the `decimal(38,0)` cast. */
+  private[graft] def centsToUnits(trimmed: Column): Column = {
+    val cents = EtlKernels(EtlKernels.IntPrefix, trimmed)
     coalesce(
-      (EtlKernels(EtlKernels.IntPrefix, trimmed).cast("decimal(38,0)") / 100)
-        .cast("decimal(38,2)").cast("string"),
+      EtlKernels(EtlKernels.LargeCents, cents),
+      (cents.cast("decimal(38,0)") / 100).cast("decimal(38,2)").cast("string"),
       lit(""))
+  }
 
   /** `path` as a UTF-8 file: itself when already UTF-8 or ASCII, else
     * a temp file it is transcoded into, a buffer at a time. */

@@ -50,8 +50,9 @@ class EtlKernelSpec extends SparkSpec {
       pad + core + pick("", "", "", "\u0085", "x", ",") + pad
     }
     val free = Seq.fill(3000)(randomString(new Random(r.nextLong()), alphabet, 12))
-    // a two-digit exponent can pass decimal(38,2)'s range, which fails
-    // the conversion with either formulation
+    // a two-digit exponent can pass decimal(38,2)'s range, where the
+    // oracle's cast fails the conversion (node's table below checks the
+    // kernels there)
     (Seq("19870312\u0085", " 1/2/2000\u0085 ", "1999-1-2\u0085") ++ aimed ++ free)
       .filterNot(_.matches("(?s).*[eE][+-]?\\d\\d.*"))
   }
@@ -103,6 +104,25 @@ class EtlKernelSpec extends SparkSpec {
       assert(nel.nonEmpty, s"$path: no U+0085 case was generated")
       assert(got.count { case (f, _, k, _) => f == "birthday" && k.toString.matches("\\d{4}-\\d\\d-\\d\\d") } > 100)
       assert(got.count { case (f, _, k, _) => f == "credit limit" && k != "0.00" } > 500)
+    }
+  }
+
+  test("F3 and the PRN cents from 1e21 up are JavaScript's toFixed(2), as node computes it") {
+    // fixtures/js_tofixed.tsv: kind, input, node's result (FIXTURES.md §3.2)
+    val table = scala.io.Source.fromInputStream(getClass.getResourceAsStream("/fixtures/js_tofixed.tsv"), "UTF-8")
+    val lines = try table.getLines().map(_.split("\t")).toList finally table.close()
+    val s = col("s")
+    val normalizers = Map[String, Column](
+      "f3" -> Normalize.creditLimit(s),
+      "prn" -> PrnSource.centsToUnits(Normalize.jsTrim(s)))
+    assert(lines.map(_(0)).toSet == normalizers.keySet && lines.size > 30)
+    bothPaths { path =>
+      normalizers.foreach { case (kind, f) =>
+        val expected = lines.collect { case Array(`kind`, in, out) => in -> out }.toMap
+        val got = pairs(path, expected.keys.toSeq, "s")((kind, f, s)).map { case (_, in, k, _) => in -> k }.toMap
+        val wrong = expected.filter { case (in, out) => got(in) != out }
+        assert(wrong.isEmpty, s"$path $kind: " + wrong.map { case (in, out) => s"$in -> ${got(in)}, node: $out" }.mkString("; "))
+      }
     }
   }
 

@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.sinks.{HtmlSink, JsonSink}
@@ -120,6 +120,26 @@ class EtlSpec extends SparkSpec {
     // header; its reader, like the header line, skips it
     val tabbed = rows(CsvSource.read(spark, tmpFile("\t\nName,Address\nAl,Main 1\n")))
     assert(tabbed.map(r => (r("Name"), r("Address"))) == Seq(("Al", "Main 1")))
+  }
+
+  test("CSV: the header schema is the reader's inference from the header as a one-line Dataset") {
+    // (case, header line, delimiter); each also under a case-sensitive session
+    val cases = Seq(
+      ("duplicate names", "Name,Address,Name,name", ","),
+      ("case-differing names", "a,A", ","),
+      ("empty names", ",Name,,", ","),
+      ("quoted names holding the delimiter or a doubled quote", "\"Credit, Limit\",\"Say \"\"hi\"\"\",\"\",Name", ","),
+      ("a UTF-8 byte-order mark", "\uFEFFName,Address", ","),
+      ("';'", "Name;Address;\"a;b\";name", ";"),
+      ("'\\t'", "Name\tAddress\t\t\"a\tb\"", "\t"),
+      ("whitespace-only cells", "Name, ,  ,\t,Address,\u00A0", ","))
+    for (caseSensitive <- Seq("false", "true")) withConf("spark.sql.caseSensitive", caseSensitive) {
+      cases.foreach { case (what, header, delimiter) =>
+        val options = CsvSource.readerOptions(delimiter, "ISO-8859-1")
+        val inferred = spark.read.options(options).csv(spark.createDataset(Seq(header))(Encoders.STRING)).schema
+        assert(CsvSource.headerSchema(spark, header, options) == inferred, s"$what, caseSensitive=$caseSensitive")
+      }
+    }
   }
 
   test("CSV: JavaScript whitespace is trimmed and stripped, NBSP and tabs included") {
@@ -351,24 +371,66 @@ class EtlSpec extends SparkSpec {
     assert(rows.contains(""""Postcode":"3732GE""""))
   }
 
-  /** `graft.Cli` run in a forked JVM on the file `in`: exit code and stdout. */
-  private def forkCli(in: String, jvmArgs: Seq[String], args: String*): (Int, Array[Byte], String) = {
+  /** `graft.Cli args` in a forked JVM on the test classpath, the file
+    * `in` on stdin: exit code, stdout bytes and stderr. */
+  private def forkCli(in: String, jvmArgs: Seq[String], args: Seq[String],
+      env: Map[String, String] = Map.empty): (Int, Array[Byte], String) = {
     val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.filter(_.startsWith("--add-opens"))
     val err = Files.createTempFile("graft_cli_", ".err")
     err.toFile.deleteOnExit()
     val cmd = Seq(java, "-Xmx1g") ++ jvmArgs ++ opens ++
       Seq("-cp", System.getProperty("java.class.path"), "graft.Cli") ++ args
-    val proc = new ProcessBuilder(cmd.asJava).redirectInput(new File(in)).redirectError(err.toFile).start()
+    val pb = new ProcessBuilder(cmd.asJava).redirectInput(new File(in)).redirectError(err.toFile)
+    pb.environment().putAll(env.asJava)
+    val proc = pb.start()
     val out = proc.getInputStream.readAllBytes()
     (proc.waitFor(), out, Files.readString(err))
+  }
+
+  test("CLI: a launch loads no Scala runtime reflection, on every source and sink path") {
+    val header = "Name,Address,Postcode,Phone,Credit Limit,Birthday\n"
+    val prn = Files.readAllBytes(Paths.get(prnPath))
+    val blankFirst = Files.createTempFile("graft_test_", ".prn")
+    blankFirst.toFile.deleteOnExit()
+    Files.write(blankFirst, "\n  \n".getBytes(StandardCharsets.ISO_8859_1) ++ prn)
+    val golden = (f: String) => Files.readAllBytes(Paths.get(resourcePath(s"/golden/workbook2.$f")))
+    // (stdin, arguments, the document expected on stdout or None)
+    val runs = Seq(
+      (tmpFile(header + "A,B,1,2,9e99,1\n"), Seq("csv", "json"), Some(
+        ("[\n  {\"Name\":\"A\",\"Address\":\"B\",\"Postcode\":\"1\",\"Phone\":\"2\"," +
+          "\"Credit Limit\":\"9e+99\",\"Birthday\":\"1\"}\n]\n").getBytes(StandardCharsets.UTF_8))),
+      (tmpFile(header.replace(',', ';') + "\"x;y\";B;1;2;3;1/2/2000\n"), Seq("csv", "html", "-d", ";"), None),
+      (prnPath, Seq("prn", "json"), Some(golden("json"))),
+      (blankFirst.toString, Seq("prn", "html"), Some(golden("html"))))
+    runs.foreach { case (in, args, expected) =>
+      val log = Files.createTempFile("graft_classes_", ".log")
+      log.toFile.deleteOnExit()
+      val (code, out, err) = forkCli(in, Seq(s"-Xlog:class+load=info:file=$log"), args, Map("DEBUG" -> "1"))
+      val what = args.mkString(" ")
+      assert(code == 0, s"$what: $err")
+      expected.foreach(e => assert(out.sameElements(e), s"$what: " + new String(out, StandardCharsets.UTF_8)))
+      if (expected.isEmpty) assert(new String(out, StandardCharsets.UTF_8).contains("<td>x;y</td>"), what)
+      val loaded = Files.readAllLines(log).asScala
+        .filter(_.matches(".*\\] (scala\\.reflect\\.runtime\\.JavaUniverse|org\\.apache\\.spark\\.sql\\.catalyst\\.ScalaReflection\\$) .*"))
+      assert(loaded.isEmpty, s"$what loaded: ${loaded.mkString("\n")}")
+      // DEBUG times every phase
+      Seq("spool", "session", "source", "sink", "stop").foreach { p =>
+        assert(err.linesIterator.exists(_.matches(s"DEBUG: $p \\d+ ms")), s"$what: no $p timing in\n$err")
+      }
+    }
+  }
+
+  test("src/main imports no MLlib, which the CLI's classpath leaves out") {
+    val hits = SourceScan.hits("import org\\.apache\\.spark\\.(ml|mllib)\\b")
+    assert(hits.isEmpty, "MLlib imported (tools/graft and build.sbt leave its jar out):\n" + hits.mkString("\n"))
   }
 
   test("CLI: a forked run under the tr locale prints the reference's bytes") {
     // Lower-cased in tr, "CREDIT LIMIT" is "credıt lımıt"; upper-cased, "ié" is "İÉ"
     val in = tmpFile("NAME,ADDRESS,POSTCODE,PHONE,CREDIT LIMIT,BIRTHDAY\n" +
       "Ida,Børke 1,ié 12,020 1,12.5,1/2/2000\n")
-    val (code, out, err) = forkCli(in, Seq("-Duser.language=tr", "-Duser.country=TR"), "csv", "json")
+    val (code, out, err) = forkCli(in, Seq("-Duser.language=tr", "-Duser.country=TR"), Seq("csv", "json"))
     assert(code == 0, err)
     val expected = "[\n  {\"Name\":\"Ida\",\"Address\":\"Børke 1\",\"Postcode\":\"IÉ12\"," +
       "\"Phone\":\"0201\",\"Credit Limit\":\"12.50\",\"Birthday\":\"2000-02-01\"}\n]\n"
@@ -378,7 +440,7 @@ class EtlSpec extends SparkSpec {
   test("CLI: a birthday followed by U+0085 passes through, as JavaScript's `$` does not match before it") {
     // latin1 byte 0x85 is U+0085, a Java line terminator and no JavaScript whitespace
     val in = tmpFile("Name,Address,Postcode,Phone,Credit Limit,Birthday\nA,B,1,2,3,19870312\u0085\n")
-    val (code, out, err) = forkCli(in, Nil, "csv", "json")
+    val (code, out, err) = forkCli(in, Nil, Seq("csv", "json"))
     assert(code == 0, err)
     val expected = "[\n  {\"Name\":\"A\",\"Address\":\"B\",\"Postcode\":\"1\",\"Phone\":\"2\"," +
       "\"Credit Limit\":\"3.00\",\"Birthday\":\"19870312\u0085\"}\n]\n"

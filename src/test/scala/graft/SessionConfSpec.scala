@@ -93,30 +93,13 @@ class SessionConfSpec extends SparkSpec {
     }
   }
 
-  /** `file:line` of every src/main/scala line matching `pattern`, outside
-    * the files named in `allowed`. */
-  private def sourceHits(pattern: String, allowed: Set[String]): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root))
-    val walked = java.nio.file.Files.walk(root)
-    try walked.iterator().asScala.toSeq
-      .filter(p => p.toString.endsWith(".scala") && !allowed(p.getFileName.toString))
-      .flatMap { p =>
-        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if pattern.r.findFirstIn(line).isDefined => s"$p:${i + 1}"
-        }
-      }
-    finally walked.close()
-  }
-
   test("conf.set and conf.unset appear in src/main only inside GraftSession") {
-    val hits = sourceHits("conf\\.(set|unset)\\(", Set("GraftSession.scala"))
+    val hits = SourceScan.hits("conf\\.(set|unset)\\(", Set("GraftSession.scala"))
     assert(hits.isEmpty, "session conf written outside GraftSession:\n" + hits.mkString("\n"))
   }
 
   test("GraftSession.AqeOff appears in src/main only inside GraftSession and Fixpoint") {
-    val hits = sourceHits("GraftSession\\.AqeOff", Set("GraftSession.scala", "Fixpoint.scala"))
+    val hits = SourceScan.hits("GraftSession\\.AqeOff", Set("GraftSession.scala", "Fixpoint.scala"))
     assert(hits.isEmpty, "AQE scoped outside Fixpoint:\n" + hits.mkString("\n"))
   }
 }
