@@ -29,16 +29,4 @@ object Canonical {
   /** Sink-facing schema: 6 string columns in canonical order. */
   val schema: StructType =
     StructType(headers.map(h => StructField(h, StringType, nullable = false)))
-
-  /** Internal row-order column: the input position of each row, from
-    * `monotonically_increasing_id()` over the scan (SURVEY.md §7.4 R2).
-    *
-    * Contract: every source numbers its rows in partition order — ids
-    * rise within a partition and from one partition to the next — and
-    * its partitions follow the input, so a frame that keeps its
-    * partitioning already lists its rows in input order. The sinks rely
-    * on this: they render partitions in order and never sort. A
-    * transform that reorders rows (a shuffle, a join) must sort by this
-    * column before rendering. The sinks do not render it. */
-  val idxCol = "__graft_idx"
 }

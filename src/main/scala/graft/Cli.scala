@@ -5,6 +5,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.Locale
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sinks.SinkRegistry
@@ -30,23 +33,13 @@ import graft.sources.SourceRegistry
   */
 object Cli {
 
-  private val AllowedInputs = Seq("csv", "prn")
-  private val AllowedOutputs = Seq("json", "html")
-
   private lazy val isDebug = sys.env.get("DEBUG").exists(v => v != "false" && v != "0" && v.nonEmpty)
   private def debugLog(msg: => String): Unit = if (isDebug) System.err.println(s"DEBUG: $msg")
 
-  def validateInputType(v: String): String = {
-    val lower = v.toLowerCase(Locale.ROOT)
-    if (AllowedInputs.contains(lower)) lower
-    else throw new IllegalArgumentException(s"Input type must be one of: ${AllowedInputs.mkString(", ")}.")
-  }
+  /** `v` in lower case when the registry holds it; else its error. */
+  def validateInputType(v: String): String = { SourceRegistry(v); v.toLowerCase(Locale.ROOT) }
 
-  def validateOutputType(v: String): String = {
-    val lower = v.toLowerCase(Locale.ROOT)
-    if (AllowedOutputs.contains(lower)) lower
-    else throw new IllegalArgumentException(s"Output type must be one of: ${AllowedOutputs.mkString(", ")}.")
-  }
+  def validateOutputType(v: String): String = { SinkRegistry.writer(v); v.toLowerCase(Locale.ROOT) }
 
   final case class Args(inputType: String, outputType: String, csvDelimiter: Option[String])
 
@@ -138,10 +131,10 @@ object Cli {
   /** The data plane: one Spark job scans, normalizes and renders on
     * the executors; the driver writes the framed document to `out`
     * once the job has succeeded. Resolved through the registries
-    * (mirrors the reference's createParser/createRenderer factories). */
-  def convert(spark: SparkSession, args: Args, inputPath: String, inputIsUtf8: Boolean, out: OutputStream): Unit = {
-    val encoding = if (inputIsUtf8) "UTF-8" else "ISO-8859-1"
-    val opts = SourceRegistry.SourceOptions(args.csvDelimiter.getOrElse(","), encoding)
+    * (mirrors the reference's createParser/createRenderer factories).
+    * `inputPath` is UTF-8: [[main]]'s spool of stdin. */
+  def convert(spark: SparkSession, args: Args, inputPath: String, out: OutputStream): Unit = {
+    val opts = SourceRegistry.SourceOptions(args.csvDelimiter.getOrElse(","), "UTF-8")
     val df: DataFrame = phase("source")(SourceRegistry(args.inputType)(spark, inputPath, opts))
     phase("sink") { SinkRegistry.writer(args.outputType)(df, out); out.flush() }
   }
@@ -182,13 +175,13 @@ object Cli {
     // maps case like JavaScript's `toUpperCase`, whatever the user's
     // locale (under `tr`, `i` would map to `İ`; see GraftSession).
     Locale.setDefault(Locale.ROOT)
+    // stderr carries only the progress lines: Spark's default log4j
+    // profile loads without the line announcing it, at level ERROR
+    // before the session logs its first INFO line.
+    new Logging { initializeLogIfNecessary(false, silent = true) }
+    Configurator.setRootLevel(Level.ERROR)
     val spark = phase("session") {
-      val s = GraftSession
-        .builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32)
-        .appName("graft-cli")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
+      GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32).appName("graft-cli").getOrCreate()
     }
 
     try {
@@ -198,7 +191,7 @@ object Cli {
       // a bare container locale) and mangle non-ASCII — output must be
       // valid UTF-8 regardless of locale (reference README.md:31-33).
       val stdout = new BufferedOutputStream(new FileOutputStream(FileDescriptor.out), 1 << 16)
-      convert(spark, args, tmp.toString, inputIsUtf8 = true, stdout)
+      convert(spark, args, tmp.toString, stdout)
       System.err.println("Processing complete.")
     } catch {
       case e: Throwable =>

@@ -10,7 +10,8 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The ETL row path's string kernels: one pass over a cell's UTF-8
-  * bytes each, callable from generated code (`EtlKernels.<op>(cell)`)
+  * bytes each (F3 and the PRN cents then round the numeric prefix they
+  * found), callable from generated code (`EtlKernels.<op>(cell)`)
   * and from the interpreted `eval` path alike, so [[EtlKernel]] stays
   * inside whole-stage codegen like [[graft.plans.DotF64]].
   *
@@ -59,10 +60,35 @@ object EtlKernels {
     UTF8String.fromBytes(out, 0, k)
   }
 
-  /** F3's numeric prefix, `parseFloat`'s: `[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?`
-    * at the start of a trimmed cell, with `,` read as `.` and written
-    * as `.`; null when there is none. */
-  def numPrefix(t: UTF8String): UTF8String = {
+  /** F3 of a trimmed cell, JavaScript's `parseFloat(t).toFixed(2)` with
+    * `,` read as `.`: a `[+-]?Infinity` prefix as `Infinity` or
+    * `-Infinity`; else the numeric prefix `[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?`
+    * ([[numPrefixEnd]]), from 1e21 up in `Number#toString`'s exponent
+    * form ([[jsExponent]]), below it rounded HALF_UP at two decimals, as
+    * the `decimal(38,2)` cast rounds, with `-` when the double is below
+    * zero, as `toFixed` writes it (`-0.001` is `-0.00`, `-0` is `0.00`);
+    * `0.00` when there is no prefix. */
+  def creditLimit(t: UTF8String): UTF8String = {
+    if (t.startsWith(Infinity) || t.startsWith(PlusInfinity)) return Infinity
+    if (t.startsWith(MinusInfinity)) return MinusInfinity
+    val end = numPrefixEnd(t)
+    if (end == 0) return ZeroCents
+    val p = copy(t, 0, end).toString.replace(',', '.')
+    val large = if (end < 21 && p.indexOf('e') < 0 && p.indexOf('E') < 0) null // below 1e21
+      else jsExponent(java.lang.Double.parseDouble(p))
+    if (large != null) return large
+    val d = new java.math.BigDecimal(p)
+    // below 1e-3 it rounds to zero; setScale would first build 10^scale
+    val fixed = if (d.precision - d.scale < -2) java.math.BigDecimal.ZERO.setScale(2)
+      else d.setScale(2, java.math.RoundingMode.HALF_UP)
+    val plain = fixed.toPlainString
+    val negZero = fixed.signum == 0 && p.startsWith("-") && java.lang.Double.parseDouble(p) < 0
+    UTF8String.fromString(if (negZero) "-" + plain else plain)
+  }
+
+  /** The end of `parseFloat`'s numeric prefix of `t`, with `,` as a
+    * decimal point; 0 when there is none. */
+  private def numPrefixEnd(t: UTF8String): Int = {
     val n = t.numBytes
     def at(i: Int): Int = if (i < n) t.getByte(i) else -1
     def isPoint(i: Int) = at(i) == '.' || at(i) == ','
@@ -72,16 +98,13 @@ object EtlKernels {
       i = if (isPoint(intEnd)) digitsEnd(t, intEnd + 1, n) else intEnd
     } else if (isPoint(i) && digitsEnd(t, i + 1, n) > i + 1) {
       i = digitsEnd(t, i + 1, n)
-    } else return null
+    } else return 0
     if (at(i) == 'e' || at(i) == 'E') {
       val sign = if (at(i + 1) == '+' || at(i + 1) == '-') i + 2 else i + 1
       val expEnd = digitsEnd(t, sign, n)
       if (expEnd > sign) i = expEnd
     }
-    val out = new Array[Byte](i)
-    var k = 0
-    while (k < i) { val b = t.getByte(k); out(k) = if (b == ',') '.'.toByte else b; k += 1 }
-    UTF8String.fromBytes(out)
+    i
   }
 
   /** F4 of a trimmed cell: `D/M/YYYY`, `YYYYMMDD` or `YYYY-M-D` (one or
@@ -121,32 +144,26 @@ object EtlKernels {
     UTF8String.fromBytes(out)
   }
 
-  /** The PRN cents' integer prefix, `parseInt`'s `[+-]?\d+` at the start
-    * of a trimmed cell; null when there is none. */
-  def intPrefix(t: UTF8String): UTF8String = {
+  /** The PRN cents of a trimmed cell, JavaScript's
+    * `(parseInt(t, 10) / 100).toFixed(2)`: the integer prefix `[+-]?\d+`
+    * as units, from 1e21 up in the exponent form ([[jsExponent]]), below
+    * it exact at two decimals; `""` when there is no prefix. */
+  def cents(t: UTF8String): UTF8String = {
     val n = t.numBytes
     val start = if (n > 0 && (t.getByte(0) == '+' || t.getByte(0) == '-')) 1 else 0
     val end = digitsEnd(t, start, n)
-    if (end == start) null else copy(t, 0, end)
+    if (end == start) return UTF8String.EMPTY_UTF8
+    val i = copy(t, 0, end).toString
+    val large = if (end < 23) null // below 1e21 * 100
+      else jsExponent(java.lang.Double.parseDouble(i) / 100)
+    if (large != null) large
+    else UTF8String.fromString(new java.math.BigDecimal(new java.math.BigInteger(i), 2).toPlainString)
   }
 
-  /** F3 of a numeric prefix ([[numPrefix]]) whose value `x` is at least
-    * 1e21 in magnitude: `x.toFixed(2)`, which JavaScript renders as
-    * `Number#toString` there ([[jsExponent]]); null for a smaller one,
-    * which the `decimal(38,2)` cast renders. */
-  def largeFixed(p: UTF8String): UTF8String =
-    if (p.numBytes < 21 && !p.contains(ExpLower) && !p.contains(ExpUpper)) null // below 1e21
-    else jsExponent(java.lang.Double.parseDouble(p.toString))
-
-  /** The PRN cents of an integer prefix ([[intPrefix]]) as
-    * `(parseInt(p) / 100).toFixed(2)` when that is at least 1e21 in
-    * magnitude; null for a smaller one, as in [[largeFixed]]. */
-  def largeCents(p: UTF8String): UTF8String =
-    if (p.numBytes < 23) null // below 1e21 * 100
-    else jsExponent(java.lang.Double.parseDouble(p.toString) / 100)
-
-  private val ExpLower = UTF8String.fromString("e")
-  private val ExpUpper = UTF8String.fromString("E")
+  private val Infinity = UTF8String.fromString("Infinity")
+  private val PlusInfinity = UTF8String.fromString("+Infinity")
+  private val MinusInfinity = UTF8String.fromString("-Infinity")
+  private val ZeroCents = UTF8String.fromString("0.00")
 
   /** JavaScript's `Number#toString` of `x` when |x| >= 1e21, else null:
     * the fewest significant digits that read back as `x` (of two
@@ -246,15 +263,13 @@ object EtlKernels {
     }
 
   /** A kernel of this object, by the name generated code calls it. */
-  sealed abstract class Op(val method: String, val dataType: DataType = StringType, val nullable: Boolean = false)
+  sealed abstract class Op(val method: String, val dataType: DataType = StringType)
   case object JsTrim extends Op("jsTrim")
   case object StripWhitespace extends Op("stripWhitespace")
   case object PhoneDigits extends Op("phoneDigits")
-  case object NumPrefix extends Op("numPrefix", nullable = true)
+  case object CreditLimit extends Op("creditLimit")
   case object Birthday extends Op("birthday")
-  case object IntPrefix extends Op("intPrefix", nullable = true)
-  case object LargeFixed extends Op("largeFixed", nullable = true)
-  case object LargeCents extends Op("largeCents", nullable = true)
+  case object Cents extends Op("cents")
   case object NonBlank extends Op("nonBlank", BooleanType)
 
   /** `op` of `s`, as the interpreted path runs it. */
@@ -262,11 +277,9 @@ object EtlKernels {
     case JsTrim          => jsTrim(s)
     case StripWhitespace => stripWhitespace(s)
     case PhoneDigits     => phoneDigits(s)
-    case NumPrefix       => numPrefix(s)
+    case CreditLimit     => creditLimit(s)
     case Birthday        => birthday(s)
-    case IntPrefix       => intPrefix(s)
-    case LargeFixed      => largeFixed(s)
-    case LargeCents      => largeCents(s)
+    case Cents           => cents(s)
     case NonBlank        => nonBlank(s)
   }
 
@@ -277,16 +290,12 @@ object EtlKernels {
 /** One [[EtlKernels]] kernel over a string child; null in, null out. */
 case class EtlKernel(op: EtlKernels.Op, child: Expression) extends UnaryExpression {
   override def dataType: DataType = op.dataType
-  override def nullable: Boolean = op.nullable || child.nullable
   override def prettyName: String = "graft_" + op.method
 
   override protected def nullSafeEval(in: Any): Any = EtlKernels.eval(op, in.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (!op.nullable) defineCodeGen(ctx, ev, c => s"graft.functions.EtlKernels.${op.method}($c)")
-    else nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.EtlKernels.${op.method}($c);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+    defineCodeGen(ctx, ev, c => s"graft.functions.EtlKernels.${op.method}($c)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -4,7 +4,6 @@ import java.util.Locale
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Canonical
 
@@ -12,8 +11,7 @@ import graft.Canonical
   * per-field scalar transforms (F1–F5, SURVEY.md §2.2) as Columns over
   * the byte kernels of [[EtlKernels]], each one pass over a cell's
   * UTF-8 bytes inside whole-stage codegen. No UDFs, no regex. What
-  * stays in Catalyst: `upper`, the `startsWith` Infinity checks, and
-  * the `decimal(38,2)` cast, so rounding and overflow are Spark's.
+  * stays in Catalyst: `upper`.
   *
   * Semantics mirror `/root/reference/src/utils/normalization.ts`:
   *  - postcode (`:46-49`): strip all whitespace, uppercase
@@ -31,7 +29,7 @@ import graft.Canonical
   * `graftbridge.Bridge`, not the function registry.
   */
 object Normalize {
-  import EtlKernels.{Birthday, JsTrim, LargeFixed, NumPrefix, PhoneDigits, StripWhitespace}
+  import EtlKernels.{Birthday, CreditLimit, JsTrim, PhoneDigits, StripWhitespace}
 
   /** JavaScript's `trim()`. */
   def jsTrim(c: Column): Column = EtlKernels(JsTrim, c)
@@ -45,29 +43,13 @@ object Normalize {
   def phone(c: Column): Column = EtlKernels(PhoneDigits, jsTrim(c))
 
   /** F3 — credit limit: `"54.5"` → `"54.50"`, `"1,5"` → `"1.50"`,
-    * `"abc"` → `"0.00"`.
-    *
-    * JS `parseFloat` accepts a numeric *prefix* (`"12x"` → 12), which
-    * the kernel cuts before the cast. The cast to decimal(38,2) rounds
-    * HALF_UP like `toFixed(2)` does for these inputs (documented
-    * divergence only at float-representation boundaries — SURVEY.md
-    * §7.4 R3). From 1e21 up, `toFixed` renders `Number#toString`'s
-    * exponent form (`9e99` → `"9e+99"`), as [[EtlKernels.largeFixed]]
-    * does.
+    * `"abc"` → `"0.00"`, `"9e99"` → `"9e+99"`, `"-0.001"` → `"-0.00"`:
+    * `parseFloat(s).toFixed(2)`, one kernel ([[EtlKernels.creditLimit]]).
+    * It rounds the decimal digits HALF_UP where `toFixed` rounds the
+    * double (documented divergence only at float-representation
+    * boundaries — SURVEY.md §7.4 R3).
     */
-  def creditLimit(c: Column): Column = trimmedCreditLimit(jsTrim(c))
-
-  private def trimmedCreditLimit(t: Column): Column =
-    // parseFloat also accepts a [+-]Infinity prefix; toFixed renders it
-    // verbatim (minus an explicit '+', which Number drops).
-    when(t.startsWith("Infinity") || t.startsWith("+Infinity"), lit("Infinity"))
-      .when(t.startsWith("-Infinity"), lit("-Infinity"))
-      .otherwise {
-        // from 1e21 up toFixed is an exponent form, and past 36 integer
-        // digits the cast would fail the conversion under ANSI
-        val p = EtlKernels(NumPrefix, t)
-        coalesce(EtlKernels(LargeFixed, p), p.cast(DecimalType(38, 2)).cast("string"), lit("0.00"))
-      }
+  def creditLimit(c: Column): Column = EtlKernels(CreditLimit, jsTrim(c))
 
   /** F4 — birthday. Pure string rebuilds (no `to_date`) because the
     * reference's regexes don't validate calendar ranges and
@@ -81,7 +63,7 @@ object Normalize {
   private def ofTrimmed(header: String)(t: Column): Column = header match {
     case Canonical.Postcode    => postcode(t)
     case Canonical.Phone       => EtlKernels(PhoneDigits, t)
-    case Canonical.CreditLimit => trimmedCreditLimit(t)
+    case Canonical.CreditLimit => EtlKernels(CreditLimit, t)
     case Canonical.Birthday    => EtlKernels(Birthday, t)
     case _                     => t
   }
@@ -92,28 +74,25 @@ object Normalize {
     * resolution, extra columns dropped, missing columns default-filled,
     * every kept cell normalized.
     * Null cells (empty CSV fields) take the column default.
-    *
-    * Input may carry [[Canonical.idxCol]]; it is preserved.
     */
   def align(df: DataFrame): DataFrame = {
     val present = df.columns
     val found = Canonical.headers.flatMap { h =>
       present.find(_.trim.toLowerCase(Locale.ROOT) == h.toLowerCase(Locale.ROOT)).map(h -> _)
     }
-    val carry =
-      if (present.contains(Canonical.idxCol)) Seq(col(Canonical.idxCol)) else Nil
     // Each cell is trimmed once, in a projection of its own: Catalyst
     // does not inline a non-cheap expression that the next projection
-    // reads more than once (the credit limit reads its cell three times).
+    // reads more than once (each cell is read by its null test and its
+    // normalizer).
     val trimmed = df.select(found.map { case (h, actual) =>
       jsTrim(col(s"`$actual`").cast("string")).as(h)
-    } ++ carry: _*)
+    }: _*)
     val exprs = Canonical.headers.map { h =>
       val cell = col(s"`$h`")
       if (found.exists(_._1 == h))
         when(cell.isNull, lit(Canonical.default(h))).otherwise(ofTrimmed(h)(cell)).as(h)
       else lit(Canonical.default(h)).as(h)
     }
-    trimmed.select(exprs ++ carry: _*)
+    trimmed.select(exprs: _*)
   }
 }

@@ -99,7 +99,7 @@ object HtmlSink {
   /** `<tr>` with one `<td>` per canonical column, empty for an absent one. */
   private def row(cells: Seq[Option[Expression]]): RenderRow = {
     val td = "</td>\n        <td>"
-    RenderRow(html = true,
+    RenderRow(escape,
       ("      <tr>\n        <td>" +: Seq.fill(cells.length - 1)(td)) :+ "</td>\n      </tr>\n",
       cells.map(_.getOrElse(Literal(""))))
   }

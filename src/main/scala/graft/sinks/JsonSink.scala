@@ -49,7 +49,7 @@ object JsonSink {
       else present.zipWithIndex.map { case ((h, _), i) =>
         (if (i == 0) "{\"" else "\",\"") + key(h) + "\":\""
       } :+ "\"}"
-    RenderRow(html = false, frags, present.map(_._2))
+    RenderRow(escape, frags, present.map(_._2))
   }
 
   private val Hex = "0123456789abcdef".getBytes(UTF_8)

@@ -37,13 +37,14 @@ final class ByteSink(initial: Int = 256) {
 
 /** One row of a sink's document as UTF-8 bytes: `frags(0)`, the first
   * cell escaped, `frags(1)`, ..., the last cell escaped, `frags(n)`.
-  * A null cell renders as empty. The escaper is the sink's own
-  * ([[HtmlSink.escape]] when `html`, else [[JsonSink.escape]]), the one
-  * its head and keys went through. A cell that is not valid UTF-8
+  * A null cell renders as empty. `escape` is the sink's own escaper
+  * ([[HtmlSink.escape]], [[JsonSink.escape]]), the one its head and
+  * keys went through. A cell that is not valid UTF-8
   * (Spark's text source does not check) renders as Java decodes it,
   * with U+FFFD, so a document is always UTF-8. Generated code
   * evaluates the cells inline and renders into one buffer per task. */
-case class RenderRow(html: Boolean, frags: Seq[String], children: Seq[Expression]) extends Expression {
+case class RenderRow(escape: (UTF8String, ByteSink) => Unit, frags: Seq[String], children: Seq[Expression])
+    extends Expression {
   require(frags.length == children.length + 1)
 
   override def dataType: DataType = BinaryType
@@ -59,7 +60,7 @@ case class RenderRow(html: Boolean, frags: Seq[String], children: Seq[Expression
     while (i < cells.length) {
       if (cells(i) != null) {
         val c = if (cells(i).isValid) cells(i) else UTF8String.fromString(cells(i).toString)
-        if (html) HtmlSink.escape(c, out) else JsonSink.escape(c, out)
+        escape(c, out)
       }
       out.write(fragBytes(i + 1))
       i += 1

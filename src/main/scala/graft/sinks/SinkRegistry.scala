@@ -4,7 +4,7 @@ import java.io.{ByteArrayOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Locale
 
-import scala.collection.concurrent.TrieMap
+import scala.collection.immutable.ListMap
 
 import net.jpountz.lz4.LZ4Factory
 import org.apache.spark.sql.DataFrame
@@ -15,35 +15,27 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Canonical
 
-/** Map-backed renderer registry — the reference's renderer plugin
-  * surface (`/root/reference/src/renderers/index.ts:12-58`):
-  * case-insensitive lookup, `register` for extension, unknown type →
-  * error naming the registered set. A writer renders the canonical
-  * frame as one document onto an `OutputStream`; [[apply]] adapts it
-  * to a function returning the document as a string.
+/** The renderer registry — the reference's renderer surface
+  * (`/root/reference/src/renderers/index.ts:12-58`): one ordered map
+  * from format name to writer, looked up case-insensitively; an unknown
+  * name is an error naming the formats in order. A writer renders the
+  * canonical frame as one document onto an `OutputStream`; [[apply]]
+  * adapts it to a function returning the document as a string.
   *
-  * The built-in writers render each row to UTF-8 bytes inside the
-  * scan's whole-stage-codegen'd stage with one [[RenderRow]]
-  * expression, whose cells go through the sink's byte escaper;
-  * [[renderParts]] only groups that binary column into parts. */
+  * The writers render each row to UTF-8 bytes inside the scan's
+  * whole-stage-codegen'd stage with one [[RenderRow]] expression,
+  * whose cells go through the sink's byte escaper; [[renderParts]]
+  * only groups that binary column into parts. */
 object SinkRegistry {
 
   type Writer = (DataFrame, OutputStream) => Unit
   type Renderer = DataFrame => String
 
-  private val writers = TrieMap[String, Writer](
-    "json" -> JsonSink.write,
-    "html" -> HtmlSink.write)
-
-  def register(name: String, writer: Writer): Unit =
-    writers.put(name.toLowerCase(Locale.ROOT), writer)
-
-  def supported: Seq[String] = writers.keys.toSeq.sorted
+  private val writers = ListMap[String, Writer]("json" -> JsonSink.write, "html" -> HtmlSink.write)
 
   def writer(name: String): Writer =
     writers.getOrElse(name.toLowerCase(Locale.ROOT),
-      throw new IllegalArgumentException(
-        s"Unsupported output type: $name. Supported types are: ${supported.mkString(", ")}"))
+      throw new IllegalArgumentException(s"Output type must be one of: ${writers.keys.mkString(", ")}."))
 
   /** The document as a string, through the same writer. */
   def apply(name: String): Renderer = asString(writer(name))
@@ -58,8 +50,9 @@ object SinkRegistry {
   private val PartRows = 10000
 
   /** Renders the rows of `df` on the executors and returns the parts in
-    * partition order, which is input order (see [[Canonical.idxCol]]),
-    * so nothing is sorted. `row` builds the one binary column that holds
+    * partition order. This is the sinks' one ordering rule: the
+    * sources' partitions follow the input, so partition order is input
+    * order, and nothing is sorted. `row` builds the one binary column that holds
     * each row's bytes (a [[RenderRow]]) from the cells in canonical
     * order: `None` for a column the frame lacks, else the column cast
     * to string. Each partition yields parts of up to [[PartRows]] rows,

@@ -8,10 +8,10 @@ import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.{Canonical, functions}
+import graft.Canonical
+import graft.functions.Normalize
 
 /** Delimited-text source producing the canonical 6-column frame.
   *
@@ -24,50 +24,21 @@ import graft.{Canonical, functions}
   * Spark-first shape: one `spark.read.csv` (the scan) + one `select`
   * of normalization expressions (the transform) — Catalyst fuses the
   * whole thing into a single whole-stage-codegen'd pass over the
-  * file. An order index is attached so sinks can render rows in file
-  * order even if the scan was split (SURVEY.md §7.4 R2).
+  * file, whose partitions follow the file.
   */
 object CsvSource {
 
-  /** @param fidelityChecks when true (the CLI path: one local file),
-    *   one driver-side pass over the file runs first ([[firstLine]]):
-    *   an RFC-4180 quote scan that rejects unterminated quoted fields
-    *   with the reference's error shape (`csvParser.ts:55-57` —
-    *   univocity would swallow small malformed files silently), and
-    *   the header line, from which the schema is derived without a
-    *   Spark job; blank input yields the canonical empty frame instead
-    *   of a schema inference error. It reads the file on the driver
-    *   — set false for bulk/distributed paths (directories, globs,
-    *   remote filesystems), where no driver-side I/O happens and Spark
-    *   infers the header with a job. */
-  def read(
-      spark: SparkSession,
-      path: String,
-      delimiter: String = ",",
-      encoding: String = "ISO-8859-1",
-      fidelityChecks: Boolean = true): DataFrame =
-    scan(spark, path, delimiter, encoding, fidelityChecks) match {
-      // monotonically_increasing_id rises within a partition and across
-      // partition ids, which follow the file: the Canonical.idxCol contract.
-      case Some(raw) =>
-        functions.Normalize.align(raw.withColumn(Canonical.idxCol, monotonically_increasing_id()))
-      case None => empty(spark)
-    }
-
-  /** The file as Spark's CSV reader parses it, header names as
-    * columns, all strings; None for a blank file (fidelity checks
-    * only). With the checks on, the schema is [[headerSchema]] of
-    * [[firstLine]]: no job, no query. */
-  private[graft] def scan(
-      spark: SparkSession,
-      path: String,
-      delimiter: String,
-      encoding: String,
-      fidelityChecks: Boolean): Option[DataFrame] = {
+  /** The file as the canonical frame. One driver-side pass over the
+    * file runs first ([[firstLine]]): an RFC-4180 quote scan that
+    * rejects unterminated quoted fields with the reference's error
+    * shape (`csvParser.ts:55-57` — univocity would swallow small
+    * malformed files silently), and the header line, from which the
+    * schema is derived ([[headerSchema]]) without a Spark job; blank
+    * input yields the canonical empty frame. */
+  def read(spark: SparkSession, path: String, delimiter: String = ",", encoding: String = "ISO-8859-1"): DataFrame = {
     val options = readerOptions(delimiter, encoding)
-    if (!fidelityChecks) Some(spark.read.options(options).csv(path))
-    else firstLine(path, encoding).map { header =>
-      spark.read.options(options).schema(headerSchema(spark, header, options)).csv(path)
+    firstLine(path, encoding).fold(empty(spark)) { header =>
+      Normalize.align(spark.read.options(options).schema(headerSchema(spark, header, options)).csv(path))
     }
   }
 
@@ -95,12 +66,9 @@ object CsvSource {
     StructType(CSVUtils.makeSafeHeader(names, caseSensitive, parsed).map(StructField(_, StringType)))
   }
 
-  /** Canonical empty frame (0 rows, 6 columns + idx). */
-  def empty(spark: SparkSession): DataFrame = {
-    val df = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Canonical.schema)
-    functions.Normalize.align(df.withColumn(Canonical.idxCol, monotonically_increasing_id()))
-  }
+  /** Canonical empty frame (0 rows, 6 columns). */
+  def empty(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Canonical.schema)
 
   /** One buffered pass over the raw file: a minimal RFC-4180 state
     * machine that flags an unterminated quoted field at EOF, and the

@@ -28,9 +28,9 @@ import graft.functions.{EtlKernels, Normalize, PrnSlices}
   * its id and the blank lines by the `nonBlank` byte kernel, and one
   * [[PrnSlices]] per line: a single walk over the line's characters
   * that returns every column's slice already JavaScript-trimmed, in
-  * place of one `substring` per column. Credit Limit's integer prefix
-  * is the `intPrefix` kernel. All of it runs inside whole-stage
-  * codegen. The header is found by a driver-side peek at the first
+  * place of one `substring` per column. Credit Limit's cents are the
+  * `cents` kernel. All of it runs inside whole-stage codegen, and the
+  * partitions follow the file. The header is found by a driver-side peek at the first
   * line; only when blank lines precede it does a first-match job look
   * it up, to learn its id.
   *
@@ -83,30 +83,28 @@ object PrnSource {
       warn: String => Unit = System.err.println): DataFrame = {
 
     val utf8Path = ensureUtf8(path, encoding)
-    // Line ids in partition order, which is file order (the
-    // Canonical.idxCol contract): the header and everything before it
+    // Line ids rise within a partition and from one partition to the
+    // next, which follow the file: the header and everything before it
     // are the lines with an id up to the header's.
-    val lines = spark.read.text(utf8Path)
-      .withColumn(Canonical.idxCol, monotonically_increasing_id())
+    val lines = spark.read.text(utf8Path).withColumn(LineId, monotonically_increasing_id())
     findHeader(utf8Path, lines) match {
       case None => CsvSource.empty(spark) // no header anywhere → 0 rows
       case Some((headerId, headerLine)) =>
         val specs = inferSpecs(headerLine, warn)
-        val data = lines
-          .filter(col(Canonical.idxCol) > headerId && nonBlank)
         val slices = Bridge.column(PrnSlices(specs.map(_.name), specs.map(_.start), specs.map(_.end),
           Bridge.expression(col("value"))))
         // the reference trims each slice and parses the cents of the
         // trimmed one; Normalize.align's trim of a trimmed cell is a no-op
         val cols: Seq[Column] = specs.map { spec =>
           val v = col("slices").getField(spec.name)
-          (if (spec.name == Canonical.CreditLimit) centsToUnits(v) else v).as(spec.name)
+          (if (spec.name == Canonical.CreditLimit) EtlKernels(EtlKernels.Cents, v) else v).as(spec.name)
         }
-        Normalize.align(data
-          .select(slices.as("slices"), col(Canonical.idxCol))
-          .select(cols :+ col(Canonical.idxCol): _*))
+        Normalize.align(lines.filter(col(LineId) > headerId && nonBlank)
+          .select(slices.as("slices")).select(cols: _*))
     }
   }
+
+  private val LineId = "line"
 
   /** A line that is not blank ([[EtlKernels.nonBlank]]): some char
     * above U+0020, `String.trim`'s rule, which the CSV reader's line
@@ -122,23 +120,8 @@ object PrnSource {
     val first = try in.readLine() finally in.close()
     if (first == null) None
     else if (first.trim.nonEmpty) Some((0L, first))
-    else Bridge.collectRows(lines.filter(nonBlank).select(col(Canonical.idxCol), col("value")).limit(1), "head")
+    else Bridge.collectRows(lines.filter(nonBlank).select(col(LineId), col("value")).limit(1), "head")
       .headOption.map(r => (r.getLong(0), r.getUTF8String(1).toString))
-  }
-
-  /** PRN stores Credit Limit as integer cents; mirror of
-    * `prnParser.ts:130-137`: `parseInt` (numeric prefix, like JS),
-    * divide by 100 at 2 decimal places, non-numeric → "" (which the
-    * normalizer then defaults to 0.00). Exact: integer cents / 100 at
-    * scale 2 has no rounding. From 1e21 units up it is JavaScript's
-    * exponent form ([[EtlKernels.largeCents]]), which also keeps cents
-    * past 38 digits from failing the `decimal(38,0)` cast. */
-  private[graft] def centsToUnits(trimmed: Column): Column = {
-    val cents = EtlKernels(EtlKernels.IntPrefix, trimmed)
-    coalesce(
-      EtlKernels(EtlKernels.LargeCents, cents),
-      (cents.cast("decimal(38,0)") / 100).cast("decimal(38,2)").cast("string"),
-      lit(""))
   }
 
   /** `path` as a UTF-8 file: itself when already UTF-8 or ASCII, else

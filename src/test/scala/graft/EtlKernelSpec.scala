@@ -90,18 +90,26 @@ class EtlKernelSpec extends SparkSpec {
         ("phone", Normalize.phone(s), O.phone(s)),
         ("credit limit", Normalize.creditLimit(s), O.creditLimit(s)),
         ("birthday", Normalize.birthday(s), O.birthday(s)),
-        ("cents", PrnSource.centsToUnits(Normalize.jsTrim(s)), O.centsToUnits(O.jsTrim(s))),
+        ("cents", EtlKernels(EtlKernels.Cents, Normalize.jsTrim(s)), O.centsToUnits(O.jsTrim(s))),
         ("blank", EtlKernels(EtlKernels.NonBlank, s), O.nonBlank(s)))
       val diffs = got.filter { case (_, _, k, o) => k != o }
-      // the one change: a date followed by U+0085 passes through, where
-      // Java's `$` matched before that line terminator
-      val (nel, wrong) = diffs.partition { case (f, in, k, _) =>
-        val t = in.replaceAll(s"^[$JsWhitespace]+|[$JsWhitespace]+$$", "")
-        f == "birthday" && t.endsWith("\u0085") && k == t
+      def trimmed(in: String) = in.replaceAll(s"^[$JsWhitespace]+|[$JsWhitespace]+$$", "")
+      // the two changes: a date followed by U+0085 passes through, where
+      // Java's `$` matched before that line terminator; and a credit
+      // limit whose double is below zero but rounds to zero keeps
+      // toFixed's sign, which the decimal cast dropped
+      val (nel, rest) = diffs.partition { case (f, in, k, _) =>
+        f == "birthday" && trimmed(in).endsWith("\u0085") && k == trimmed(in)
+      }
+      val (negZero, wrong) = rest.partition { case (f, in, k, o) =>
+        f == "credit limit" && k == "-0.00" && o == "0.00" &&
+          "^[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?".r
+            .findPrefixOf(trimmed(in).replaceFirst(",", ".")).exists(_.toDouble < 0)
       }
       assert(wrong.isEmpty, s"$path: " + wrong.take(5).map { case (f, in, k, o) =>
         s"$f(${in.map(_.toInt)}) = $k, was $o" }.mkString("; "))
       assert(nel.nonEmpty, s"$path: no U+0085 case was generated")
+      assert(negZero.nonEmpty, s"$path: no negative credit limit rounding to zero was generated")
       assert(got.count { case (f, _, k, _) => f == "birthday" && k.toString.matches("\\d{4}-\\d\\d-\\d\\d") } > 100)
       assert(got.count { case (f, _, k, _) => f == "credit limit" && k != "0.00" } > 500)
     }
@@ -114,7 +122,7 @@ class EtlKernelSpec extends SparkSpec {
     val s = col("s")
     val normalizers = Map[String, Column](
       "f3" -> Normalize.creditLimit(s),
-      "prn" -> PrnSource.centsToUnits(Normalize.jsTrim(s)))
+      "prn" -> EtlKernels(EtlKernels.Cents, Normalize.jsTrim(s)))
     assert(lines.map(_(0)).toSet == normalizers.keySet && lines.size > 30)
     bothPaths { path =>
       normalizers.foreach { case (kind, f) =>
@@ -175,16 +183,20 @@ class EtlKernelSpec extends SparkSpec {
   test("the row path holds no regex, substring or set trim") {
     import scala.jdk.CollectionConverters._
     val root = Paths.get("src/main/scala/graft")
-    val files = Seq(root.resolve("functions/Normalize.scala"), root.resolve("sources/PrnSource.scala")) ++ {
+    val normalizers = Seq(root.resolve("functions/Normalize.scala"), root.resolve("sources/PrnSource.scala"))
+    val files = normalizers ++ {
       val walked = Files.walk(root.resolve("sinks"))
       try walked.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally walked.close()
     }
     assert(files.size >= 5 && files.forall(Files.isRegularFile(_)), files)
     val banned = "regexp_replace|regexp_extract|rlike|\\bsubstring\\(|\\btrim\\([^()]*,".r
+    // F3 and the PRN cents are kernels too: no decimal cast
+    val cast = "decimal\\(|DecimalType".r
     val hits = files.flatMap { p =>
       Files.readAllLines(p).asScala.zipWithIndex.collect {
         case (line, i) if !line.trim.startsWith("*") && !line.trim.startsWith("//") &&
-          banned.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+          (banned.findFirstIn(line).isDefined || normalizers.contains(p) && cast.findFirstIn(line).isDefined) =>
+          s"$p:${i + 1}: ${line.trim}"
       }
     }
     assert(hits.isEmpty, "the row path runs on the byte kernels (graft.functions.EtlKernels):\n" + hits.mkString("\n"))

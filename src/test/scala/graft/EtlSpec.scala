@@ -10,6 +10,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.graftbridge.Bridge
 
+import graft.functions.Normalize
 import graft.sinks.{HtmlSink, JsonSink}
 import graft.sources.{CsvSource, PrnSource}
 
@@ -22,10 +23,10 @@ class EtlSpec extends SparkSpec {
   private val csvPath = resourcePath("/fixtures/workbook2.csv")
   private val prnPath = resourcePath("/fixtures/workbook2.prn")
 
+  /** The rows as `collect` returns them, in partition order. */
   private def rows(df: DataFrame): Seq[Map[String, String]] = {
     import org.apache.spark.sql.functions.col
-    val ordered = df.orderBy(col(Canonical.idxCol))
-    ordered.select(Canonical.headers.map(h => col(s"`$h`")): _*)
+    df.select(Canonical.headers.map(h => col(s"`$h`")): _*)
       .collect().toSeq
       .map(r => Canonical.headers.zipWithIndex.map { case (h, i) => h -> r.getString(i) }.toMap)
   }
@@ -107,14 +108,15 @@ class EtlSpec extends SparkSpec {
     val c = Bench.counters(spark)
     try cases.foreach { case (what, content, delimiter, encoding) =>
       val p = tmpFile(content, encoding)
-      val inferred = CsvSource.scan(spark, p, delimiter, encoding, fidelityChecks = false).get
+      val inferred = spark.read.options(CsvSource.readerOptions(delimiter, encoding)).csv(p)
       assert(Bridge.drainListenerBus(spark))
       c.reset()
-      val explicit = CsvSource.scan(spark, p, delimiter, encoding, fidelityChecks = true).get
+      val read = CsvSource.read(spark, p, delimiter, encoding)
       assert(Bridge.drainListenerBus(spark))
       assert(c.jobs.get == 0, s"$what: ${c.jobs.get} jobs before an action")
-      assert(explicit.schema == inferred.schema, what)
-      assert(explicit.collect().toSeq == inferred.collect().toSeq, what)
+      val scanned = Bridge.logicalPlan(read).collectLeaves().head.schema
+      assert(scanned == inferred.schema, what)
+      assert(read.collect().toSeq == Normalize.align(inferred).collect().toSeq, what)
     } finally spark.sparkContext.removeSparkListener(c)
     // Spark's inference blanks only U+0020 and takes a tab line for the
     // header; its reader, like the header line, skips it
@@ -258,6 +260,16 @@ class EtlSpec extends SparkSpec {
     val nbsp = "\u00A0\n"
     assert(rows(PrnSource.read(spark, tmpFile(prnHeader + prnRow1 + nbsp + prnRow7))).length == 3)
     assert(rows(CsvSource.read(spark, tmpFile("Name\nAl\n" + nbsp + "Bo\n"))).length == 3)
+  }
+
+  test("every source returns exactly the canonical columns, in order") {
+    Seq(
+      "CSV" -> CsvSource.read(spark, csvPath),
+      "PRN" -> PrnSource.read(spark, prnPath),
+      "blank CSV" -> CsvSource.read(spark, tmpFile("")),
+      "header-less PRN" -> PrnSource.read(spark, tmpFile(" \n\n"))).foreach { case (what, df) =>
+      assert(df.columns.toSeq == Canonical.headers, what)
+    }
   }
 
   // -- JSON sink ----------------------------------------------------
@@ -418,6 +430,9 @@ class EtlSpec extends SparkSpec {
       Seq("spool", "session", "source", "sink", "stop").foreach { p =>
         assert(err.linesIterator.exists(_.matches(s"DEBUG: $p \\d+ ms")), s"$what: no $p timing in\n$err")
       }
+      // and past the DEBUG lines stderr holds the reference's progress lines, no Spark log line
+      assert(err.linesIterator.filterNot(_.startsWith("DEBUG: ")).toSeq ==
+        Seq(s"Processing ${args(0)} to ${args(1)}...", "Processing complete."), s"$what:\n$err")
     }
   }
 
@@ -445,5 +460,15 @@ class EtlSpec extends SparkSpec {
     val expected = "[\n  {\"Name\":\"A\",\"Address\":\"B\",\"Postcode\":\"1\",\"Phone\":\"2\"," +
       "\"Credit Limit\":\"3.00\",\"Birthday\":\"19870312\u0085\"}\n]\n"
     assert(out.sameElements(expected.getBytes(StandardCharsets.UTF_8)), new String(out, StandardCharsets.UTF_8))
+  }
+
+  test("CLI: a negative Credit Limit that rounds to zero prints JavaScript's -0.00") {
+    val in = tmpFile("Name,Address,Postcode,Phone,Credit Limit,Birthday\nA,B,1,2,-0.001,1\n")
+    val (code, out, err) = forkCli(in, Nil, Seq("csv", "json"))
+    assert(code == 0, err)
+    val expected = "[\n  {\"Name\":\"A\",\"Address\":\"B\",\"Postcode\":\"1\",\"Phone\":\"2\"," +
+      "\"Credit Limit\":\"-0.00\",\"Birthday\":\"1\"}\n]\n"
+    assert(out.sameElements(expected.getBytes(StandardCharsets.UTF_8)), new String(out, StandardCharsets.UTF_8))
+    assert(err == "Processing csv to json...\nProcessing complete.\n", err)
   }
 }

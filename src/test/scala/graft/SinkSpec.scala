@@ -115,7 +115,7 @@ class SinkSpec extends SparkSpec {
     Seq("json", "html").foreach { fmt =>
       val out = new ByteArrayOutputStream
       val e = intercept[SparkException](
-        Cli.convert(spark, Cli.Args("csv", fmt, None), p, inputIsUtf8 = false, out))
+        Cli.convert(spark, Cli.Args("csv", fmt, None), p, out))
       // raised by a task's file scan, not by the driver
       assert(e.getMessage.contains("FAILED_READ_FILE"), e.getMessage)
       assert(out.size == 0)
