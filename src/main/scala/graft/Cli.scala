@@ -175,11 +175,13 @@ object Cli {
     // maps case like JavaScript's `toUpperCase`, whatever the user's
     // locale (under `tr`, `i` would map to `İ`; see GraftSession).
     Locale.setDefault(Locale.ROOT)
-    // stderr carries only the progress lines: Spark's default log4j
-    // profile loads without the line announcing it, at level ERROR
-    // before the session logs its first INFO line.
+    // stderr carries only the progress lines and, on a failure, the
+    // message: Spark's default log4j profile loads without the line
+    // announcing it, and logging is off before the session logs its
+    // first line (a failed task's ERROR lines included; DEBUG prints
+    // the stack trace itself).
     new Logging { initializeLogIfNecessary(false, silent = true) }
-    Configurator.setRootLevel(Level.ERROR)
+    Configurator.setRootLevel(Level.OFF)
     val spark = phase("session") {
       GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32).appName("graft-cli").getOrCreate()
     }

@@ -483,7 +483,8 @@ object EtlQueries {
   // The injected-abort path (no partial output after a killed task)
   // is spec-asserted in DirSinkSpec — a failed job isn't SQL.
   def qRangeWrite(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.GraftSession.scratchDir("graft_dirsink_").toString
+    val base = graft.GraftSession.scratchDir("graft_dirsink_")
+    val tmp = base.toString
     def rows(a: Long, b: Long) = s.read.format("graft.sources.RangeTableProvider")
       .option("start", a.toString).option("end", b.toString).option("slices", "8")
       .load()
@@ -495,22 +496,21 @@ object EtlQueries {
     def write(df: DataFrame, mode: String): Unit =
       df.write.format("graft.sources.DirSinkProvider")
         .option("path", tmp).mode(mode).save()
-    write(rows(0, 150000), "overwrite")
-    write(rows(0, 200000), "overwrite") // must truncate write #1's files
-    write(rows(200000, 250000), "append") // must preserve write #2's
-    val back = s.read.format("graft.sources.DirSinkProvider")
-      .option("path", tmp).load()
-    val out = back.groupBy(col("bucket"))
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("val")).cast("long").as("sum_val"),
-        min(col("id")).as("min_id"), max(col("id")).as("max_id"),
-        countDistinct(col("tag")).cast("long").as("n_tags"),
-        count(col("tag_null")).cast("long").as("n_nonnull"),
-        sum(length(col("esc_tag"))).cast("long").as("esc_len"))
-      .orderBy(col("bucket"))
-      .localCheckpoint(true) // sever lineage so the temp dir can go
-    graft.sources.DirSink.deleteRecursively(java.nio.file.Paths.get(tmp))
-    out
+    try {
+      write(rows(0, 150000), "overwrite")
+      write(rows(0, 200000), "overwrite") // must truncate write #1's files
+      write(rows(200000, 250000), "append") // must preserve write #2's
+      s.read.format("graft.sources.DirSinkProvider").option("path", tmp).load()
+        .groupBy(col("bucket"))
+        .agg(count(lit(1)).cast("long").as("n"),
+          sum(col("val")).cast("long").as("sum_val"),
+          min(col("id")).as("min_id"), max(col("id")).as("max_id"),
+          countDistinct(col("tag")).cast("long").as("n_tags"),
+          count(col("tag_null")).cast("long").as("n_nonnull"),
+          sum(length(col("esc_tag"))).cast("long").as("esc_len"))
+        .orderBy(col("bucket"))
+        .localCheckpoint(true) // sever lineage so the temp dir can go
+    } finally graft.GraftSession.sweep(base)
   }
 
   private val rangeWriteOracle: String =
@@ -579,35 +579,37 @@ object EtlQueries {
   private val CwEnd = 16000L
 
   def qRangeWriteClustered(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.GraftSession.scratchDir("graft_dirsink_cl_").toString
-    s.read.format("graft.sources.RangeTableProvider")
-      .option("start", "0").option("end", CwEnd.toString).option("slices", "8")
-      .load()
-      .write.format("graft.sources.DirSinkProvider")
-      .option("path", tmp)
-      .option("cluster_by", "bucket").option("sort_by", "bucket,id")
-      .option("write_partitions", "8")
-      .mode("overwrite").save()
-    val m = graft.sources.DirSink.readManifest(tmp).getOrElse(
-      throw new IllegalStateException(s"clustered write left no manifest in $tmp"))
-    // audit the committed layout: (bucket -> files touched, rows,
-    // min/max id) and per-file (bucket, id) sort order
+    val base = graft.GraftSession.scratchDir("graft_dirsink_cl_")
+    val tmp = base.toString
     val stats = scala.collection.mutable.Map.empty[Long, (Set[String], Long, Long, Long)]
     var sortedAll = true
-    m.files.foreach { f =>
-      var (prevB, prevId) = (Long.MinValue, Long.MinValue)
-      java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get(tmp, f), java.nio.charset.StandardCharsets.UTF_8)
-        .forEach { line =>
-          val cells = line.split("\t", -1)
-          val (id, b) = (cells(0).toLong, cells(1).toLong)
-          if (b < prevB || (b == prevB && id <= prevId)) sortedAll = false // strict (bucket, id) in-file order
-          prevB = b; prevId = id
-          val (fs, n, mn, mx) = stats.getOrElse(b, (Set.empty[String], 0L, Long.MaxValue, Long.MinValue))
-          stats(b) = (fs + f, n + 1, math.min(mn, id), math.max(mx, id))
-        }
-    }
-    graft.sources.DirSink.deleteRecursively(java.nio.file.Paths.get(tmp))
+    try {
+      s.read.format("graft.sources.RangeTableProvider")
+        .option("start", "0").option("end", CwEnd.toString).option("slices", "8")
+        .load()
+        .write.format("graft.sources.DirSinkProvider")
+        .option("path", tmp)
+        .option("cluster_by", "bucket").option("sort_by", "bucket,id")
+        .option("write_partitions", "8")
+        .mode("overwrite").save()
+      val m = graft.sources.DirSink.readManifest(tmp).getOrElse(
+        throw new IllegalStateException(s"clustered write left no manifest in $tmp"))
+      // audit the committed layout: (bucket -> files touched, rows,
+      // min/max id) and per-file (bucket, id) sort order
+      m.files.foreach { f =>
+        var (prevB, prevId) = (Long.MinValue, Long.MinValue)
+        java.nio.file.Files.readAllLines(
+            java.nio.file.Paths.get(tmp, f), java.nio.charset.StandardCharsets.UTF_8)
+          .forEach { line =>
+            val cells = line.split("\t", -1)
+            val (id, b) = (cells(0).toLong, cells(1).toLong)
+            if (b < prevB || (b == prevB && id <= prevId)) sortedAll = false // strict (bucket, id) in-file order
+            prevB = b; prevId = id
+            val (fs, n, mn, mx) = stats.getOrElse(b, (Set.empty[String], 0L, Long.MaxValue, Long.MinValue))
+            stats(b) = (fs + f, n + 1, math.min(mn, id), math.max(mx, id))
+          }
+      }
+    } finally graft.GraftSession.sweep(base)
     val rows = stats.toSeq.sortBy(_._1).map { case (b, (fs, n, mn, mx)) =>
       (b, n, mn, mx, fs.size.toLong, sortedAll)
     }

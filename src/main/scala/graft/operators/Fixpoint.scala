@@ -7,10 +7,10 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.{GraftSession, Memo}
 
-/** Runs every checkpointed fixpoint loop (connected components,
-  * pagerank, k-core, HITS, BFS levels, path counts). A call site writes
-  * only its round step and its trace rows; [[run]] and [[Scope.loop]] own
-  * the rest:
+/** Runs every driver loop: the graph fixpoints (connected components,
+  * pagerank, k-core, HITS, BFS levels, path counts), k-means, k-center
+  * and the BPE trainer. A call site writes only its round step and its
+  * trace rows; [[run]] and [[Scope.loop]] own the rest:
   *
   *  - rounds 1..maxRounds, stopping after the first round that reports
   *    done, with the trace rows in round order and the round count;

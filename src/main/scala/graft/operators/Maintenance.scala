@@ -862,7 +862,7 @@ object Maintenance {
       val brB = writeBranch("vB", rows(0, 100000, Some(97L)))
       val okB = audit(brB, 100000L)
       if (okB) DirSink.publishFrom(brB, main)
-      else DirSink.deleteRecursively(java.nio.file.Paths.get(brB))
+      else graft.GraftSession.sweep(java.nio.file.Paths.get(brB))
       s.read.format("graft.sources.DirSinkProvider").option("path", main).load()
         .groupBy(col("bucket"))
         .agg(count(lit(1)).cast("long").as("n"),
@@ -872,7 +872,7 @@ object Maintenance {
         .withColumn("published_b", lit(okB))
         .orderBy(col("bucket"))
         .localCheckpoint(true) // sever lineage so the temp dirs can go
-    } finally DirSink.deleteRecursively(base)
+    } finally graft.GraftSession.sweep(base)
   }
 
   val qWapSql: String =
@@ -1032,7 +1032,8 @@ object Maintenance {
   private val TtV3End = 20000L
 
   def qTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.GraftSession.scratchDir("graft_dirsink_tt_").toString
+    val base = graft.GraftSession.scratchDir("graft_dirsink_tt_")
+    val tmp = base.toString
     def rows(a: Long, b: Long) = s.read.format("graft.sources.RangeTableProvider")
       .option("start", a.toString).option("end", b.toString).option("slices", "8")
       .load()
@@ -1040,9 +1041,6 @@ object Maintenance {
       df.write.format("graft.sources.DirSinkProvider")
         .option("path", tmp).option("keep_versions", "true")
         .mode(mode).save()
-    write(rows(0, TtV1End), "overwrite") // v1
-    write(rows(TtV1End, TtV2End), "append") // v2 = [0, 90000)
-    write(rows(0, TtV3End), "overwrite") // v3 truncates; v1/v2 files retained
     def back(scope: String, version: Option[Int]) = {
       val r = s.read.format("graft.sources.DirSinkProvider").option("path", tmp)
       version.foreach(v => r.option("version", v.toString))
@@ -1053,14 +1051,17 @@ object Maintenance {
         .select(lit(scope).as("scope"), col("n"), col("sum_val"),
           col("min_id"), col("max_id"))
     }
-    val out = back("v1", Some(1))
-      .unionAll(back("v2", Some(2)))
-      .unionAll(back("v3", Some(3)))
-      .unionAll(back("latest", None))
-      .orderBy(col("scope"))
-      .localCheckpoint(true) // sever lineage so the temp dir can go
-    graft.sources.DirSink.deleteRecursively(java.nio.file.Paths.get(tmp))
-    out
+    try {
+      write(rows(0, TtV1End), "overwrite") // v1
+      write(rows(TtV1End, TtV2End), "append") // v2 = [0, 90000)
+      write(rows(0, TtV3End), "overwrite") // v3 truncates; v1/v2 files retained
+      back("v1", Some(1))
+        .unionAll(back("v2", Some(2)))
+        .unionAll(back("v3", Some(3)))
+        .unionAll(back("latest", None))
+        .orderBy(col("scope"))
+        .localCheckpoint(true) // sever lineage so the temp dir can go
+    } finally graft.GraftSession.sweep(base)
   }
 
   val qTimeTravelSql: String =

@@ -189,18 +189,19 @@ object Models {
 
   // ---------------------------------------------------------------
   // K-MEANS TO CONVERGENCE — the iterate-to-fixpoint trainer behind
-  // [[Similarity.qKmeansStep]]'s single Lloyd update, with the
-  // [[Dedup]] CC / graph_hits_converge discipline: bounded rounds,
-  // per-round LOOP STATE localCheckpointed (lineage would otherwise
-  // re-run every prior round per action), and an exact integer
-  // convergence trace as the gated artifact. Everything is integer:
-  // vectors enter as µ-scaled BIGINTs (the lloydUpdate `sv`
-  // convention), assignment argmin compares exact squared distances
-  // (Σ diff² ≤ 64·(8·10⁵)² ≪ 2⁶³) with ties to the smaller cid, and
-  // the centroid update divides Σ by n sign-split — JVM `/`
-  // truncation mirrored by an explicit CASE in the oracle, because
-  // DuckDB's integer `//` truncates on negative BIGINTs (measured:
-  // -781621 // 34 = -22988) while floorDiv floors. Per round the
+  // [[Similarity.qKmeansStep]]'s single Lloyd update, run by
+  // [[Fixpoint]] like the graph loops: bounded rounds, the per-round
+  // assignment checkpointed (lineage would otherwise re-run every
+  // prior round per action) and freed once the next round supersedes
+  // it, and an exact integer convergence trace as the gated artifact.
+  // Everything is integer: vectors enter as µ-scaled BIGINTs
+  // ([[Similarity.microVectors]]), assignment argmin compares exact
+  // squared distances with ties to the smaller cid
+  // ([[Similarity.nearest]]), and the centroid update divides Σ by n
+  // sign-split — JVM `/` truncation mirrored by an explicit CASE in
+  // the oracle, because DuckDB's integer `//` truncates on negative
+  // BIGINTs (measured: -781621 // 34 = -22988) while floorDiv
+  // floors. Per round the
   // gate sees: reassignment count, total centroid movement in µ
   // (Σ|Δ| over cells, the number that decays to 0 at the fixpoint),
   // and occupied-cell count; empty cells carry their centroid
@@ -222,63 +223,41 @@ object Models {
       StructField("xm", ArrayType(LongType)),
       StructField("cid", LongType),
       StructField("chg", LongType)))
-    val em0 = Tables.embeddings(s, dir)
-      .select(col("vec_id"),
-        expr("transform(cast(embedding as array<double>), x -> cast(floor(x * 1000000 + 0.5) as bigint))").as("xm"),
-        lit(-1L).as("cid"), lit(0L).as("chg"))
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-    var asg = em0.localCheckpoint()
-    var cents: Array[(Long, Array[Long])] = Similarity.strideSeeds(asg)
-      .select(col("vec_id"), col("xm")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).sortBy(_._1)
-    val trace = Array.newBuilder[(Long, Long, Long, Long)]
-    for (round <- 0 until KmRounds) {
-      val bc = s.sparkContext.broadcast(cents)
-      val next = asg.mapPartitions { it =>
-        val cs = bc.value
-        it.map { r =>
-          val xm = r.getSeq[Long](1).toArray
-          val prev = r.getLong(2)
-          var bestCid = -1L
-          var bestDist = Long.MaxValue
-          cs.foreach { case (cid, cm) =>
-            var d2 = 0L
-            var i = 0
-            while (i < dim) { val d = xm(i) - cm(i); d2 += d * d; i += 1 }
-            if (d2 < bestDist) { bestDist = d2; bestCid = cid }
+    val trace = Fixpoint.run(s, aqe = true) { fp =>
+      val asg0 = fp.checkpoint(Similarity.microVectors(s, dir)
+        .select(col("vec_id"), col("xm"), lit(-1L).as("cid"), lit(0L).as("chg")))
+      val cents0 = Similarity.strideSeeds(asg0)
+        .select(col("vec_id"), col("xm")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).sortBy(_._1)
+      fp.loop(KmRounds, (asg0, cents0)) { case ((asg, cents), r) =>
+        val bc = s.sparkContext.broadcast(cents)
+        val next = fp.checkpoint(asg.mapPartitions { it =>
+          val cs = bc.value
+          it.map { row =>
+            val cid = Similarity.nearest(row.getSeq[Long](1).toArray, cs)._1
+            Row(row.getLong(0), row.getSeq[Long](1), cid, if (cid != row.getLong(2)) 1L else 0L)
           }
-          Row(r.getLong(0), r.getSeq[Long](1), bestCid,
-            if (bestCid != prev) 1L else 0L)
+        }(Encoders.row(asgSchema)))
+        val changed = next.agg(sum(col("chg")).as("n")).first().getLong(0)
+        val upd = next.select(col("cid"), posexplode(col("xm")).as(Seq("d", "x")))
+          .groupBy(col("cid"), col("d"))
+          .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
+          .collect()
+        val newByCid = upd.groupBy(_.getLong(0)).map { case (cid, rows) =>
+          val cm = new Array[Long](dim)
+          rows.foreach(r => cm(r.getInt(1)) = r.getLong(2) / r.getLong(3))
+          cid -> cm
         }
-      }(Encoders.row(asgSchema)).localCheckpoint()
-      val changed = next.agg(sum(col("chg")).as("n")).first().getLong(0)
-      val upd = next.select(col("cid"), posexplode(col("xm")).as(Seq("d", "x")))
-        .groupBy(col("cid"), col("d"))
-        .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
-        .collect()
-      val newByCid = upd.groupBy(_.getLong(0)).map { case (cid, rows) =>
-        val cm = new Array[Long](dim)
-        rows.foreach(r => cm(r.getInt(1)) = r.getLong(2) / r.getLong(3))
-        cid -> cm
-      }
-      val nCells = newByCid.size.toLong
-      var moved = 0L
-      val nextCents = cents.map { case (cid, old) =>
-        newByCid.get(cid) match {
-          case Some(cm) =>
-            var i = 0
-            while (i < dim) { moved += math.abs(cm(i) - old(i)); i += 1 }
-            cid -> cm
-          case None => cid -> old
-        }
-      }
-      trace += ((round.toLong, changed, moved, nCells))
-      cents = nextCents
-      asg = next
+        val moved = cents.map { case (cid, old) =>
+          newByCid.get(cid).fold(0L)(cm => cm.indices.map(i => math.abs(cm(i) - old(i))).sum)
+        }.sum
+        val nextCents = cents.map { case (cid, old) => cid -> newByCid.getOrElse(cid, old) }
+        // the trace keeps its 0-based round
+        Fixpoint.Round((next, nextCents), Seq((r - 1L, changed, moved, newByCid.size.toLong)))
+      }.trace
     }
     import s.implicits._
-    trace.result().toSeq.toDF("round", "n_changed", "moved_mu", "n_cells")
-      .orderBy(col("round"))
+    trace.toDF("round", "n_changed", "moved_mu", "n_cells").orderBy(col("round"))
   }
 
   /** Chained-CTE oracle: one a/nc/c CTE triple per round (the
@@ -309,9 +288,7 @@ object Models {
          |  (SELECT count(DISTINCT cid) FROM a$r) AS n_cells)""".stripMargin
     }.mkString(",\n")
     val union = (0 until KmRounds).map(r => s"SELECT * FROM m$r").mkString(" UNION ALL ")
-    s"""WITH em AS MATERIALIZED (SELECT vec_id,
-       |  list_transform(embedding::DOUBLE[], x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS xm
-       |  FROM embeddings),
+    s"""WITH ${Similarity.microVectorsCte},
        |c0 AS MATERIALIZED (SELECT vec_id AS cid, xm AS cm FROM em WHERE vec_id % ${Similarity.SeedStride} = 7
        |  ORDER BY cid LIMIT ${Similarity.seedKSql}),
        |$rounds

@@ -1956,57 +1956,44 @@ FROM j ORDER BY source"""
   // single newest center (broadcast K·dim metadata) folding into a
   // running min — O(k·n) total work, the textbook distributed greedy;
   // the per-vec min-distance state rides the checkpointed frame so
-  // the plan never regrows. k=8 driver rounds of (map job + 1-row
-  // collect), the CC/HITS loop discipline.
+  // the plan never regrows. k=8 [[Fixpoint]] rounds of (map job +
+  // 1-row collect), each freeing the frame the next one supersedes.
   private val KcRounds = 8
   private val KcSeed = 7L
 
   def qKcenter(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
-    val dim = 64
     val schema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("xm", ArrayType(LongType)),
       StructField("md", LongType)))
-    val em = Tables.embeddings(s, dir)
-      .select(col("vec_id"),
-        expr("transform(cast(embedding as array<double>), x -> cast(floor(x * 1000000 + 0.5) as bigint))").as("xm"))
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-      .localCheckpoint()
-    var center: Array[Long] = em.filter(col("vec_id") === KcSeed)
-      .collect().head.getSeq[Long](1).toArray
-    var state = em.withColumn("md", lit(Long.MaxValue))
-    val trace = Array.newBuilder[(Long, Long, Long)]
-    for (r <- 1 to KcRounds) {
-      val bc = s.sparkContext.broadcast(center)
-      state = state.mapPartitions { it =>
-        val cm = bc.value
-        it.map { row =>
-          val xm = row.getSeq[Long](1).toArray
-          var d2 = 0L
-          var i = 0
-          while (i < dim) { val d = xm(i) - cm(i); d2 += d * d; i += 1 }
-          Row(row.getLong(0), row.getSeq[Long](1), math.min(row.getLong(2), d2))
-        }
-      }(Encoders.row(schema)).localCheckpoint()
-      val top = state.orderBy(col("md").desc, col("vec_id")).limit(1)
-        .select(col("vec_id"), col("md"), col("xm")).collect().head
-      trace += ((r.toLong, top.getLong(0), top.getLong(1)))
-      center = top.getSeq[Long](2).toArray
+    val trace = Fixpoint.run(s, aqe = true) { fp =>
+      val em = fp.checkpoint(Similarity.microVectors(s, dir))
+      val seed = em.filter(col("vec_id") === KcSeed).collect().head.getSeq[Long](1).toArray
+      fp.loop(KcRounds, (em.withColumn("md", lit(Long.MaxValue)), seed)) { case ((state, center), r) =>
+        val bc = s.sparkContext.broadcast(center)
+        val next = fp.checkpoint(state.mapPartitions { it =>
+          val cm = bc.value
+          it.map { row =>
+            val d2 = Similarity.dist2(row.getSeq[Long](1).toArray, cm)
+            Row(row.getLong(0), row.getSeq[Long](1), math.min(row.getLong(2), d2))
+          }
+        }(Encoders.row(schema)))
+        val top = next.orderBy(col("md").desc, col("vec_id")).limit(1)
+          .select(col("vec_id"), col("md"), col("xm")).collect().head
+        Fixpoint.Round((next, top.getSeq[Long](2).toArray), Seq((r.toLong, top.getLong(0), top.getLong(1))))
+      }.trace
     }
     import s.implicits._
-    trace.result().toSeq.toDF("round", "next_center", "radius_d2")
-      .orderBy(col("round"))
+    trace.toDF("round", "next_center", "radius_d2").orderBy(col("round"))
   }
 
   val qKcenterSql: String = {
     def dist(a: String, b: String) =
       s"list_aggregate(list_transform(range(64), dd -> ($a[dd+1] - $b[dd+1]) * ($a[dd+1] - $b[dd+1])), 'sum')"
     val ctes = scala.collection.mutable.ArrayBuffer(
-      """em AS MATERIALIZED (SELECT vec_id,
-        |  list_transform(embedding::DOUBLE[], x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS xm
-        |  FROM embeddings)""".stripMargin,
+      Similarity.microVectorsCte,
       s"c0 AS (SELECT xm AS cm FROM em WHERE vec_id = $KcSeed)",
       s"d1 AS MATERIALIZED (SELECT v.vec_id, ${dist("v.xm", "c.cm")} AS md FROM em v, c0 c)")
     for (r <- 1 to KcRounds) {

@@ -720,6 +720,41 @@ ORDER BY pq.qdoc"""
     df.filter(col("vec_id") % SeedStride === 7).orderBy(col("vec_id")).limit(k)
   }
 
+  /** The embeddings as µ-scaled integer vectors `(vec_id, xm)`,
+    * hash-partitioned on vec_id: the exact-arithmetic input of k-means,
+    * k-center and OOD detection. Not checkpointed; each caller pins it. */
+  private[operators] def microVectors(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(col("vec_id"),
+        expr("transform(cast(embedding as array<double>), x -> cast(floor(x * 1000000 + 0.5) as bigint))").as("xm"))
+      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
+
+  /** The oracles' twin of [[microVectors]]: the `em` CTE. */
+  private[operators] val microVectorsCte: String =
+    """em AS MATERIALIZED (SELECT vec_id,
+      |  list_transform(embedding::DOUBLE[], x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS xm
+      |  FROM embeddings)""".stripMargin
+
+  /** The exact squared distance of two µ-scaled vectors (Σ diff² over
+    * 64 dims of |x| ≤ 8·10⁵ stays far below 2⁶³). */
+  private[operators] def dist2(a: Array[Long], b: Array[Long]): Long = {
+    var d2 = 0L
+    var i = 0
+    while (i < a.length) { val d = a(i) - b(i); d2 += d * d; i += 1 }
+    d2
+  }
+
+  /** The nearest of `cents` (sorted by cid) to `xm` as (cid, squared
+    * distance), ties to the smaller cid; (-1, Long.MaxValue) if none. */
+  private[operators] def nearest(xm: Array[Long], cents: Array[(Long, Array[Long])]): (Long, Long) = {
+    var best = (-1L, Long.MaxValue)
+    cents.foreach { case (cid, cm) =>
+      val d2 = dist2(xm, cm)
+      if (d2 < best._2) best = (cid, d2)
+    }
+    best
+  }
+
   /** Nearest-centroid assignment as a map-side partial aggregate
     * (max over (ccos, -cid) structs), not a row_number window: the
     * window form forced a full shuffle+sort of the K·N scored rows,
@@ -2505,12 +2540,7 @@ FROM lab GROUP BY cluster_id ORDER BY cluster_id"""
   def qOodDetect(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
-    val dim = 64
-    val em = Tables.embeddings(s, dir)
-      .select(col("vec_id"),
-        expr("transform(cast(embedding as array<double>), x -> cast(floor(x * 1000000 + 0.5) as bigint))").as("xm"))
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-      .localCheckpoint() // one scan: seeds + the assignment kernel
+    val em = microVectors(s, dir).localCheckpoint() // one scan: seeds + the assignment kernel
     val cents = strideSeeds(em)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).sortBy(_._1)
     val bc = s.sparkContext.broadcast(cents)
@@ -2521,16 +2551,8 @@ FROM lab GROUP BY cluster_id ORDER BY cluster_id"""
     val a = em.mapPartitions { it =>
       val cs = bc.value
       it.map { r =>
-        val xm = r.getSeq[Long](1).toArray
-        var bestCid = -1L
-        var bestDist = Long.MaxValue
-        cs.foreach { case (cid, cm) =>
-          var d2 = 0L
-          var i = 0
-          while (i < dim) { val d = xm(i) - cm(i); d2 += d * d; i += 1 }
-          if (d2 < bestDist) { bestDist = d2; bestCid = cid }
-        }
-        Row(r.getLong(0), bestCid, bestDist)
+        val (cid, d2) = nearest(r.getSeq[Long](1).toArray, cs)
+        Row(r.getLong(0), cid, d2)
       }
     }(Encoders.row(aSchema)).localCheckpoint() // kernel once; rank + flag both read it
     val rk = a.groupBy(col("cid")).agg(count(lit(1)).as("n"))
@@ -2550,9 +2572,7 @@ FROM lab GROUP BY cluster_id ORDER BY cluster_id"""
   val qOodDetectSql: String = {
     val dist =
       "list_aggregate(list_transform(range(64), dd -> (e.xm[dd+1] - c.cm[dd+1]) * (e.xm[dd+1] - c.cm[dd+1])), 'sum')"
-    s"""WITH em AS MATERIALIZED (SELECT vec_id,
-       |  list_transform(embedding::DOUBLE[], x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS xm
-       |  FROM embeddings),
+    s"""WITH $microVectorsCte,
        |c0 AS MATERIALIZED (SELECT vec_id AS cid, xm AS cm FROM em WHERE vec_id % $SeedStride = 7
        |  ORDER BY cid LIMIT $seedKSql),
        |a AS MATERIALIZED (SELECT vec_id, cid, d2 FROM (

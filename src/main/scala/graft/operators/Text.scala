@@ -1349,11 +1349,11 @@ ORDER BY c.labeled_lang, c.predicted_lang"""
   // The learned table itself is DRIVER-HELD vocabulary metadata (16
   // (pair, count) rows — the PQ-codebook class of materialization);
   // the corpus-proportional work stays in the per-round distributed
-  // aggregates, each over a localCheckpoint'ed vocabulary so the plan
-  // does not re-grow with the iteration (the resolveComponents
-  // discipline — per-round cost is vocabulary-sized and measured in
-  // PLANS.md). Memoized per (session, dir) in [[Memo]]: the
-  // encoder replays the same table.
+  // aggregates, each over the checkpointed base vocabulary and the
+  // merges' replace projections (per-round cost is vocabulary-sized
+  // and measured in PLANS.md). The rounds run in [[Fixpoint]], which
+  // frees the base once the table is learned. Memoized per
+  // (session, dir) in [[Memo]]: the encoder replays the same table.
   // Output: (merge_idx, pair, cnt, vocab_size) — merges.txt plus the
   // vocabulary-size trajectory |alphabet| + rank.
   private val BpeTrainK = 16
@@ -1363,41 +1363,38 @@ ORDER BY c.labeled_lang, c.predicted_lang"""
   /** The learned rank-k merge table: (raw pair incl. marker symbols,
     * rendered pair, count), in rank order. */
   private[operators] def bpeMergesK(s: SparkSession, dir: String): Seq[(String, String, Long)] =
-    Memo.get("bpe_merges_k", s, dir)(trainMergesLoop(wordTypes(s, dir).localCheckpoint()))
+    Memo.get("bpe_merges_k", s, dir)(trainMerges(s, wordTypes(s, dir)))
 
-  /** The rank-k trainer loop over an arbitrary starting vocabulary —
-    * shared by the full-corpus (memoized) table and the holdout
-    * trainer's split vocabulary. */
-  private def trainMergesLoop(wf0: DataFrame): Seq[(String, String, Long)] = {
-    var wf = wf0
-    val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-    var go = true
-    while (go && out.length < BpeTrainK) {
-      val top = bpePairCounts(wf).orderBy(col("cnt").desc, col("pair")).limit(1).collect()
-      if (top.isEmpty || top(0).getLong(1) < BpeMinPairCount) go = false
-      else {
-        val (bp, cnt) = (top(0).getString(0), top(0).getLong(1))
-        // render markers back to strings (rendered forms are
-        // marker-free, so replacement order is immaterial)
-        val rendered = out.indices.foldRight(bp)((j, acc) =>
-          acc.replace(BpeKMarkers(j), out(j)._2))
-        out += ((bp, rendered, cnt))
-        // the merged vocabulary stays a LINEAGE of replace projections
-        // over the caller's checkpointed base vocab (r17): a per-merge
-        // localCheckpoint cost one extra job per merge round (2K jobs
-        // per trainer at K=16) to materialize a vocabulary-sized frame
-        // that only the next round's one collect reads. The chain is K
-        // nested map-only projects over ≤|vocab| rows — re-executing
-        // round j's replaces on round j+1's collect is microseconds of
-        // CPU, while the saved jobs are the board's per-job dispatch
-        // tax. Same expressions, same engine — no semantics change.
-        wf = wf.select(
-            replace(col("word"), lit(bp), lit(BpeKMarkers(out.length - 1))).as("word"),
-            col("f"))
-      }
+  /** The rank-k trainer over an arbitrary starting vocabulary, which it
+    * checkpoints and frees — shared by the full-corpus (memoized) table
+    * and the holdout trainer's split vocabulary. */
+  private def trainMerges(s: SparkSession, vocab: DataFrame): Seq[(String, String, Long)] =
+    Fixpoint.run(s, aqe = true) { fp =>
+      val start = (fp.checkpoint(vocab), Vector.empty[(String, String, Long)])
+      fp.loop(BpeTrainK, start) { case ((wf, out), _) =>
+        val top = bpePairCounts(wf).orderBy(col("cnt").desc, col("pair")).limit(1).collect()
+        if (top.isEmpty || top(0).getLong(1) < BpeMinPairCount) Fixpoint.Round((wf, out), done = true)
+        else {
+          val (bp, cnt) = (top(0).getString(0), top(0).getLong(1))
+          // render markers back to strings (rendered forms are
+          // marker-free, so replacement order is immaterial)
+          val rendered = out.indices.foldRight(bp)((j, acc) =>
+            acc.replace(BpeKMarkers(j), out(j)._2))
+          // the merged vocabulary stays a LINEAGE of replace projections
+          // over the checkpointed base vocab (r17): a per-merge
+          // localCheckpoint cost one extra job per merge round (2K jobs
+          // per trainer at K=16) to materialize a vocabulary-sized frame
+          // that only the next round's one collect reads. The chain is K
+          // nested map-only projects over ≤|vocab| rows — re-executing
+          // round j's replaces on round j+1's collect is microseconds of
+          // CPU, while the saved jobs are the board's per-job dispatch
+          // tax. Same expressions, same engine — no semantics change.
+          val merged = wf.select(
+            replace(col("word"), lit(bp), lit(BpeKMarkers(out.length))).as("word"), col("f"))
+          Fixpoint.Round((merged, out :+ ((bp, rendered, cnt))))
+        }
+      }.state._2
     }
-    out.toSeq
-  }
 
   /** Drops every operator memo ([[Memo.reset]]); kept public for
     * the perfbench harness, which calls it before each query. */
@@ -1588,12 +1585,11 @@ FROM per ORDER BY lang"""
   // holdout row's saved_ppm minus the train row's is the
   // generalization gap; on a domain-shifted corpus it collapses,
   // and gating both numbers makes that regression-visible. The
-  // trainer reuses [[trainMergesLoop]] on the filtered vocabulary
+  // trainer reuses [[trainMerges]] on the filtered vocabulary
   // (the doc-parity filter reaches the parquet scan); the encode is
   // the same corpus-sized map-only projection as [[qBpeEncode]].
   def qBpeHoldout(s: SparkSession, dir: String): DataFrame = {
-    val merges = trainMergesLoop(
-      wordTypesWhere(s, dir, col("doc_id") % 2 === 0).localCheckpoint())
+    val merges = trainMerges(s, wordTypesWhere(s, dir, col("doc_id") % 2 === 0))
     val norm = regexp_replace(lower(trim(col("text"))), s"[$Re2Ws]+", " ")
     val encoded = merges.zipWithIndex.foldLeft(norm) {
       case (acc, ((bp, _, _), i)) => replace(acc, lit(bp), lit(BpeKMarkers(i)))

@@ -204,11 +204,6 @@ object DirSink {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def deleteRecursively(p: Path): Unit = if (Files.exists(p)) {
-    Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(f => Files.deleteIfExists(f))
-  }
-
   /** Write-audit-publish's PUBLISH step: flip a fully-written,
     * audit-approved BRANCH table into the main table as one metadata
     * operation — move the branch's committed data files in (names are
@@ -518,11 +513,11 @@ class DirSinkBatchWrite(
         .filter(p => Files.isRegularFile(p) && !live(p.getFileName.toString))
         .foreach(Files.deleteIfExists(_))
     }
-    DirSink.deleteRecursively(Paths.get(stagingDir))
+    graft.GraftSession.sweep(Paths.get(stagingDir))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    DirSink.deleteRecursively(Paths.get(stagingDir))
+    graft.GraftSession.sweep(Paths.get(stagingDir))
 }
 
 case class DirSinkCommit(stagedName: String, rows: Long) extends WriterCommitMessage

@@ -133,7 +133,7 @@ class GraftCatalog extends TableCatalog
   override def dropTable(ident: Identifier): Boolean = {
     val dir = warehouseDir(ident.name())
     val existed = DirSink.readManifest(dir).isDefined
-    DirSink.deleteRecursively(java.nio.file.Paths.get(dir))
+    graft.GraftSession.sweep(java.nio.file.Paths.get(dir))
     existed
   }
 

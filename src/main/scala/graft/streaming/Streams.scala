@@ -5,7 +5,7 @@ import java.util.UUID
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession.{install, withConf}
+import graft.GraftSession.{install, sweep, withConf}
 import graft.Tables
 
 /** Structured Streaming surface over the `events` table.
@@ -119,7 +119,7 @@ object Streams {
       out
     } finally {
       links.foreach(java.nio.file.Files.deleteIfExists(_))
-      graft.GraftSession.sweep(streamDir)
+      sweep(streamDir)
     }
   }
 
@@ -217,7 +217,7 @@ object Streams {
         // filter to data batches themselves
         q.recentProgress.toSeq
       } finally q.stop()
-    } finally graft.GraftSession.sweep(base)
+    } finally sweep(base)
   }
 
   // ---------------------------------------------------------------
@@ -320,7 +320,7 @@ object Streams {
         .orderBy(col("bucket"))
         .localCheckpoint(true) // sever lineage so the temp dir can go
       out
-    } finally graft.sources.DirSink.deleteRecursively(base)
+    } finally sweep(base)
   }
 
   // ---------------------------------------------------------------
@@ -356,7 +356,7 @@ object Streams {
           sum(col("value.sum")).as("state_sum"))
         .orderBy(col("event_type"), col("dow"))
         .localCheckpoint(true) // sever lineage so the ckpt dir can go
-    } finally graft.sources.DirSink.deleteRecursively(base)
+    } finally sweep(base)
   }
 
   val qStateReaderSql: String =
@@ -495,7 +495,7 @@ object Streams {
         .orderBy(col("bucket"))
         .localCheckpoint(true) // sever lineage so the temp dir can go
       out
-    } finally graft.sources.DirSink.deleteRecursively(base)
+    } finally sweep(base)
   }
 
   val qSrcRangeStreamRestartSql: String = {
@@ -552,7 +552,7 @@ object Streams {
         .map { case (e, (n, mn, mx)) => (e, n, mn, mx) }
         .toDF("epoch", "n", "min_id", "max_id")
         .orderBy(col("epoch"))
-    } finally graft.sources.DirSink.deleteRecursively(base)
+    } finally sweep(base)
   }
 
   val qSrcRangeAdmissionSql: String = {
@@ -673,7 +673,7 @@ object Streams {
         .withColumn("run1_rows", lit(run1))
         .withColumn("run2_rows", lit(run2))
         .orderBy(col("user_id"))
-    } finally graft.GraftSession.sweep(base)
+    } finally sweep(base)
   }
 
   val qStreamRestartRecoverySql: String =

@@ -471,4 +471,13 @@ class EtlSpec extends SparkSpec {
     assert(out.sameElements(expected.getBytes(StandardCharsets.UTF_8)), new String(out, StandardCharsets.UTF_8))
     assert(err == "Processing csv to json...\nProcessing complete.\n", err)
   }
+
+  test("CLI: a failed Spark job prints only the error message, no Spark log line") {
+    val in = tmpFile("Name,Address,Postcode,Phone,Credit Limit,Birthday\nA,B,1,2,3,1\nC,D,1,2,3,1,extra\n")
+    val (code, _, err) = forkCli(in, Nil, Seq("csv", "json"))
+    assert(code == 1, err)
+    val lines = err.linesIterator.toSeq
+    assert(lines.take(3) == Seq("Processing csv to json...", "", "An error occurred during processing:"), err)
+    assert(lines.size == 4 && lines(3).startsWith("CSV parsing error: "), err)
+  }
 }

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.sources.{DirSink, RangeMicroBatchStream, RangePos}
 
 /** The DSv2 write path's non-SQL guarantees: an injected task failure
@@ -50,7 +50,7 @@ class DirSinkSpec extends SparkSpec {
     // abort cleanup: no staged leftovers, no promoted part files
     assert(listFiles(dir).isEmpty,
       s"abort must clean staging and promote nothing; found ${listFiles(dir)}")
-    DirSink.deleteRecursively(Paths.get(dir))
+    GraftSession.sweep(Paths.get(dir))
   }
 
   test("failed overwrite leaves the PREVIOUS table version fully readable") {
@@ -65,7 +65,7 @@ class DirSinkSpec extends SparkSpec {
     val after = readBack(dir).agg(count(lit(1)), sum(col("id"))).collect()(0)
     assert(after.getLong(0) == 5000L && after.getLong(1) == before.getLong(1),
       "a failed overwrite must leave the previous committed state intact")
-    DirSink.deleteRecursively(Paths.get(dir))
+    GraftSession.sweep(Paths.get(dir))
   }
 
   test("overwrite truncates prior files; append preserves them") {
@@ -79,7 +79,7 @@ class DirSinkSpec extends SparkSpec {
       "only manifest-listed files may remain after a truncating commit")
     write(rangeRows(2000, 2500), dir, "append")
     assert(readBack(dir).count() == 2500L, "append must add to the committed set")
-    DirSink.deleteRecursively(Paths.get(dir))
+    GraftSession.sweep(Paths.get(dir))
   }
 
   test("TSV escaping + nulls round-trip exactly") {
@@ -95,7 +95,7 @@ class DirSinkSpec extends SparkSpec {
     val got = readBack(dir).orderBy("id").as[(Long, Option[String])].collect().toSeq
     assert(got == rows.map { case (i, v) => (i, Option(v)) },
       s"escaped round trip mismatch: $got")
-    DirSink.deleteRecursively(Paths.get(dir))
+    GraftSession.sweep(Paths.get(dir))
   }
 
   test("read side prunes columns at parse time (readSchema = required)") {
@@ -107,7 +107,7 @@ class DirSinkSpec extends SparkSpec {
       s"pruned scan should read only 'val'; plan:\n$scanDesc")
     assert(narrow.agg(sum(col("val"))).collect()(0).getLong(0) ==
       (0L until 1000L).map(i => (i * 2654435761L) % 1000000L).sum)
-    DirSink.deleteRecursively(Paths.get(dir))
+    GraftSession.sweep(Paths.get(dir))
   }
 
   test("streaming epoch commit is idempotent: a replayed epoch publishes nothing twice") {
@@ -151,7 +151,7 @@ class DirSinkSpec extends SparkSpec {
     Files.writeString(staging2.resolve("task-e16-p0-t0.tsv"), "4\n")
     sw2.commit(16L, Array(DirSinkCommit("task-e16-p0-t0.tsv", 1L)))
     assert(readBack(dir).count() == 4L, "epoch 16 is new despite sharing digits with 6")
-    DirSink.deleteRecursively(Paths.get(dir))
+    GraftSession.sweep(Paths.get(dir))
   }
 
   test("micro-batch stream cursor resumes FROM a restored offset (no regression)") {
@@ -266,7 +266,7 @@ class DirSinkSpec extends SparkSpec {
         .select(col("key.bucket"), col("value.count")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       assert(st.length == 16 && st.forall(_._2 == 2500L))
-    } finally graft.sources.DirSink.deleteRecursively(base)
+    } finally GraftSession.sweep(base)
   }
 
   test("admission control: read limits clamp, compose, and never regress") {
@@ -338,8 +338,8 @@ class DirSinkSpec extends SparkSpec {
         // order), NOT (bucket, id) — the ordering contract is real
         val rows2 = parsedFile(dir2, m2.files.head)
         assert(rows2 != rows2.sorted, "unsorted write should not be (bucket,id)-sorted")
-      } finally graft.sources.DirSink.deleteRecursively(Paths.get(dir2))
-    } finally graft.sources.DirSink.deleteRecursively(Paths.get(dir))
+      } finally GraftSession.sweep(Paths.get(dir2))
+    } finally GraftSession.sweep(Paths.get(dir))
   }
 
   test("time travel: versions archive per commit, truncate retains referenced files") {
@@ -373,6 +373,6 @@ class DirSinkSpec extends SparkSpec {
       val e = intercept[Exception] { readV(Some(9)).count() }
       assert(e.getMessage.contains("no committed manifest v9"),
         s"missing-version read must name the version: ${e.getMessage}")
-    } finally graft.sources.DirSink.deleteRecursively(Paths.get(dir))
+    } finally GraftSession.sweep(Paths.get(dir))
   }
 }

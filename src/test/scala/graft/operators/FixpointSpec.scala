@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
-import graft.{GraftSession, Memo, SparkEntry, SparkSpec}
+import graft.{GraftSession, Memo, SourceScan, SparkEntry, SparkSpec}
 
-/** [[Fixpoint]]: rounds, the AQE scope, and that a loop leaves no
-  * checkpoint behind but the frames it returns. */
+/** [[Fixpoint]]: rounds, the AQE scope, that a loop leaves no
+  * checkpoint behind but the frames it returns, and that no operator
+  * runs a loop of its own. */
 class FixpointSpec extends SparkSpec {
   private val Aqe = GraftSession.AqeOff._1
   private def persistent: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -83,15 +84,28 @@ class FixpointSpec extends SparkSpec {
       val memo = rddId(Dedup.copurchaseEdges(spark, sfDir))
       assert(persistent -- before - memo == Set.empty, s"$q left checkpoints behind")
     }
-    // the CC consumers return frames that read their checkpoints: Memo
-    // owns those, so a reset leaves nothing behind
-    Seq("dedup_ensemble", "sim_graph_components").foreach { q =>
+    // the CC consumers return frames that read their checkpoints and
+    // the BPE table is memoized: Memo owns those; k-means and k-center
+    // return driver-built traces. After a reset nothing is left behind
+    Seq("dedup_ensemble", "sim_graph_components", "ml_kmeans_converge", "samp_kcenter",
+      "text_bpe_holdout", "text_bpe_train_k").foreach { q =>
       Memo.reset()
       val before = persistent
       assert(SparkEntry.queries(q)(spark, sfDir).collect().nonEmpty, q)
       Memo.reset()
       assert(persistent -- before == Set.empty, s"$q left checkpoints behind after Memo.reset()")
     }
+  }
+
+  test("operators/ runs no driver loop of its own: no var holds a frame, no flag-driven while") {
+    val frameVar = """\bvar \w+\s*:\s*(DataFrame|Dataset)\b""" +
+      """|\bvar \w+\s*=.*(\.localCheckpoint\(|\.checkpoint\(|\.cache\(|\.persist\(""" +
+      """|\.withColumn\(|\.select\(|\.mapPartitions|\bTables\.)"""
+    val rebound = """^\s*(\w+) = \1\.(select|withColumn|filter|join|union|crossJoin|mapPartitions|localCheckpoint)\b"""
+    val flagLoop = """\bwhile \(go\b"""
+    val hits = Seq(frameVar, rebound, flagLoop).flatMap(SourceScan.hits(_, Set("Fixpoint.scala")))
+      .filter(_.contains("/operators/"))
+    assert(hits.isEmpty, "a hand-rolled driver loop (run it through Fixpoint):\n" + hits.mkString("\n"))
   }
 
   test("resolveComponents leaves only its returned labels' checkpoint") {
